@@ -211,8 +211,8 @@ def _q_star_count_hypercube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of star_join.star_join_count (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import star_join_count_sql
 
     _prep(spark)
@@ -260,8 +260,8 @@ def _q_parse_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_topk_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped: top-10 BUILDING orders by revenue (join + agg +
     deterministic top-k). DECIMAL money math, tie-broken by key."""
-    # single-string SQL form (r12 — construction cost; the DataFrame
-    # chain it replaces is pinned equal in tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import topk_revenue_sql
 
     _prep(spark)
@@ -272,8 +272,8 @@ def _q_topk_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary (DECIMAL-exact, rounded to DOUBLE).
-    Single-string SQL form (r12 — construction cost; the DataFrame
-    chain it replaces is pinned equal in tests/test_sql_forms.py)."""
+    Single-string SQL form (one py4j call to construct); the DuckDB
+    oracle in oracle_sql() is its check."""
     from myasynstreamjoin_spark.operators.sql_forms import tpch_q1_sql
 
     _prep(spark)
@@ -1507,8 +1507,8 @@ def _q_churned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of relational.regional_revenue (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import regional_revenue_sql
 
     _prep(spark)
@@ -1609,8 +1609,8 @@ def _q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of relational.large_orders (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import large_orders_sql
 
     _prep(spark)
@@ -1620,8 +1620,8 @@ def _q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of relational.shipping_priority (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import shipping_priority_sql
 
     _prep(spark)
@@ -1656,8 +1656,8 @@ def _q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of tpch.local_supplier_volume (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import local_supplier_volume_sql
 
     _prep(spark)
@@ -1691,8 +1691,8 @@ def _q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of tpch.order_count_distribution (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import (
         order_count_distribution_sql,
     )
@@ -1758,8 +1758,8 @@ def _q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-string SQL twin of tpch.product_type_profit (r12 —
-    # construction cost; equivalence pinned by tests/test_sql_forms.py)
+    # single-string SQL form (one py4j call to construct); the DuckDB
+    # oracle in oracle_sql() is its check
     from myasynstreamjoin_spark.operators.sql_forms import product_type_profit_sql
 
     _prep(spark)
@@ -8667,7 +8667,7 @@ def _oracle_sql_base() -> dict[str, str]:
         # Incremental dedup: the fp index is md5(norm) but md5 equality
         # IS norm equality, so the oracle matches on the normalized
         # text directly; within-delta ties go to the lowest doc_id
-        # (the exact_dedup survivor rule).
+        # (the exact_dedup_stats survivor rule).
         "q_dedup_incremental": f"""
             WITH delta AS (
               SELECT doc_id, source, {_DOC_NORM} AS norm

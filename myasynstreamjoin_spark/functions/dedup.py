@@ -61,15 +61,6 @@ def exact_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Drop exact duplicates, keeping the lowest doc_id per content
-    group. Implemented as a semi-join against the survivor set (no
-    window-over-everything; both sides shuffle on the 16-byte fp)."""
-    with_fp = docs.withColumn("__fp", F.md5(F.encode(normalized(text_col), "UTF-8")))
-    survivors = with_fp.groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
-    return with_fp.join(survivors, ["__fp", "doc_id"], "left_semi").drop("__fp")
-
-
 def _shingles_of_tokens(toks: Column, k: int, hashed: bool | str) -> Column:
     """k-gram shingle array over an ALREADY-MATERIALIZED token-array
     column. The caller must project the tokenization into a real column
@@ -1345,8 +1336,9 @@ def incremental_dedup(
       * ``kept``       — first sighting; admit and append its fp to the
         index (``write_fingerprint_index(..., mode="append")``).
 
-    Ties within the delta go to the lowest doc_id, mirroring
-    ``exact_dedup``. Output: delta columns + (fp, status).
+    Ties within the delta go to the lowest doc_id, mirroring the
+    ``keep_id`` of ``exact_dedup_stats``. Output: delta columns +
+    (fp, status).
     """
     from pyspark.sql import Window
 

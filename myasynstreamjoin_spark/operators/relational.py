@@ -100,54 +100,6 @@ def churned_customers(orders: DataFrame, y1: int = 1995, y2: int = 1996) -> Data
     ).distinct()
 
 
-def regional_revenue(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-    region_name: str = "ASIA",
-    y_from: str = "1995-01-01 00:00:00",
-    y_to: str = "1997-01-01 00:00:00",
-) -> DataFrame:
-    """TPC-H Q5-shaped 6-way join: revenue per nation for one region,
-    local suppliers only (c_nationkey = s_nationkey).
-
-    Plan shape for 100 TB: lineitem (the fact) is never broadcast;
-    region→nation→supplier collapse into broadcast hash joins on the
-    fact side, orders is the only other shuffle join; the final agg is
-    nation-cardinality rows.
-
-    Output: (n_name, revenue).
-    """
-    r = region.where(F.col("r_name") == region_name)
-    dims = (
-        supplier.join(
-            F.broadcast(nation.join(F.broadcast(r), nation["n_regionkey"] == r["r_regionkey"])),
-            supplier["s_nationkey"] == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_nationkey", "n_name")
-    )
-    rev = _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - _dec("l_discount"))
-    return (
-        lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
-        .where(
-            (F.col("o_orderdate") >= F.lit(y_from).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(y_to).cast("timestamp"))
-        )
-        .join(F.broadcast(dims), lineitem["l_suppkey"] == dims["s_suppkey"])
-        .join(
-            customer,
-            (orders["o_custkey"] == customer["c_custkey"])
-            & (customer["c_nationkey"] == dims["s_nationkey"]),
-        )
-        .groupBy("n_name")
-        .agg(F.sum(rev).alias("rev_d"))
-        .select("n_name", F.round(F.col("rev_d"), 2).cast("double").alias("revenue"))
-    )
-
-
 def hash_bucket(col: Column | str, n_buckets: int = 20) -> Column:
     """Deterministic, engine-portable hash bucket in [0, n_buckets):
     the first 16 bits of md5(value) interpreted as an integer, mod n.
@@ -280,31 +232,6 @@ def small_qty_revenue(lineitem: DataFrame, part: DataFrame,
     )
 
 
-def large_orders(lineitem: DataFrame, orders: DataFrame,
-                 customer: DataFrame, min_qty: float = 300.0) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total lineitem quantity exceeds
-    ``min_qty``, with customer attribution. The IN-subquery-with-HAVING
-    becomes an aggregate + join: per-order quantity totals first (the
-    big shuffle, partial-agg combined map-side), then the few survivors
-    drive broadcast joins against orders and customer.
-
-    Output: (c_custkey, o_orderkey, o_totalprice, total_qty).
-    """
-    totals = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.sum(_dec("l_quantity")).alias("tq"))
-        .where(F.col("tq") > F.lit(min_qty).cast("decimal(18,4)"))
-    )
-    return (
-        orders.join(F.broadcast(totals), orders["o_orderkey"] == totals["l_orderkey"])
-        .join(customer, orders["o_custkey"] == customer["c_custkey"])
-        .select(
-            "c_custkey", "o_orderkey", "o_totalprice",
-            F.round(F.col("tq"), 2).cast("double").alias("total_qty"),
-        )
-    )
-
-
 def event_type_pivot(events: DataFrame, types: list[str]) -> DataFrame:
     """Pivot: per user, one count column per event type. The pivot
     value list is EXPLICIT — an implicit pivot needs an extra
@@ -369,48 +296,6 @@ def stratified_sample(
         cutoff = F.when(F.col(strata_col) == stratum,
                         F.lit(int(round(frac * n_buckets)))).otherwise(cutoff)
     return df.where(bucket < cutoff)
-
-def shipping_priority(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    segment: str = "BUILDING",
-    cutoff: str = "1998-06-15",
-    k: int = 10,
-) -> DataFrame:
-    """TPC-H Q3 shape: top-k unshipped orders by revenue for one market
-    segment (orders placed before ``cutoff`` with lines shipping after
-    it). The fixture orders table has no o_shippriority column, so the
-    output carries (l_orderkey, revenue, o_orderdate).
-
-    Scale: the segment filter keeps ~20% of customer — still far below
-    broadcast threshold at any SF (customer is a dimension here), so
-    both the customer→orders and filtered-orders→lineitem joins
-    broadcast the small side; lineitem, the 100 TB fact, is scanned
-    once with the shipdate filter pushed down and never shuffled. The
-    top-k is orderBy+limit = TakeOrderedAndProject (per-partition heap
-    + driver merge of k rows, never a global sort). Ties are broken by
-    l_orderkey so the k-row result is engine-portable.
-
-    Output: (l_orderkey, revenue, o_orderdate) — k rows.
-    """
-    cut = F.lit(cutoff).cast("timestamp")
-    cust = customer.where(F.col("c_mktsegment") == segment).select("c_custkey")
-    ords = (
-        orders.where(F.col("o_orderdate") < cut)
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .select("o_orderkey", "o_orderdate")
-    )
-    revenue = _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - _dec("l_discount"))
-    return (
-        lineitem.where(F.col("l_shipdate") > cut)
-        .join(F.broadcast(ords), lineitem["l_orderkey"] == ords["o_orderkey"])
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(k)
-        .select("l_orderkey", "revenue", "o_orderdate")
-    )
 
 
 def late_shipment_priority_counts(

@@ -1,28 +1,24 @@
-"""Single-string ``spark.sql()`` forms of the relational-tier queries.
+"""The TPC-H-shaped and star-join queries, each as one ``spark.sql()`` string.
 
-Why this module exists (round-11 verdict #1, guide §7.3 — planning is
-driver-side work): a DataFrame chain runs the Catalyst ANALYZER once
-per transformation (every ``.join``/``.groupBy``/``.select`` creates a
-new Dataset JVM-side, each analyzing the whole tree so far → O(n²)
+The SQL text is the implementation: each function here is the only
+definition of its declared query (q_regional_revenue, q_topk_revenue,
+q_star_join, q_tpch_q1, q_tpch_q3, q_tpch_q5, q_tpch_q9, q_tpch_q13,
+q_tpch_q18), and the query's DuckDB oracle in ``__spark_entry__
+.oracle_sql()`` is its check (tools/driver_sim.py and the pytest
+oracle-parity mirror). tests/test_plans.py pins the plan intent each
+docstring states: which sides broadcast, that the fact never reaches a
+SortMergeJoin, top-k as TakeOrderedAndProject.
+
+Why one string rather than a DataFrame chain (guide §7.3 — planning is
+driver-side work): a chain runs the Catalyst ANALYZER once per
+transformation (every ``.join``/``.groupBy``/``.select`` creates a new
+Dataset JVM-side, each analyzing the whole tree so far → O(n²)
 analysis per query) plus one py4j round trip per Column object. A
 single SQL string is ONE py4j call and ONE parse+analyze pass —
-measured ~5× cheaper to construct for the 6-way-join queries
-(60 ms vs 293 ms for regional_revenue under load, r11). At bench
-semantics the construction cost is paid on EVERY timed pass, exactly
-as a real driver pays it per query submission.
-
-Each function here is the semantic TWIN of a DataFrame-form operator
-(`operators.relational` / `operators.tpch` / `operators.star_join` or
-the inline chain in ``__spark_entry__``): same expression trees (same
-DECIMAL widths, same rounding, same output column order), same join
-order, same broadcast hints — so the optimized logical plan, physical
-plan, and result hash are identical. Equivalence is pinned two ways:
-
-- tests/test_sql_forms.py asserts exact row equality (sorted collect)
-  AGAINST THE DATAFRAME FORM per query, plus plan-shape equality
-  (exchange/join-strategy counts);
-- the declared queries that ride these forms keep their DuckDB oracle
-  hash checks (tools/driver_sim.py + the pytest oracle-parity mirror).
+measured ~5× cheaper to construct for the 6-way-join queries (60 ms vs
+293 ms for the regional-revenue join under load). At bench semantics
+the construction cost is paid on EVERY timed pass, exactly as a real
+driver pays it per query submission.
 
 Tables arrive as VIEW NAMES (``sources.tables.table_view``): each
 (session, file identity) registers one stable temp view, so the warm
@@ -30,6 +26,12 @@ path of a query construction is zero py4j calls for table handles and
 one for ``spark.sql``. The kwargs-formatter path
 (``spark.sql(q, df=df)``) was rejected: it creates and drops a temp
 view PER CALL (2+ py4j calls per table per construction).
+
+Scale stance shared by all plans here: facts (lineitem, orders) are
+never broadcast and never collected; dimensions and small derived sets
+are broadcast by hint; aggregates run partial→final (map-side combine
+before any shuffle); money math stays DECIMAL until the final rounded
+DOUBLE so Spark and the DuckDB oracle agree bit-for-bit.
 
 Parameter literals are inlined via ``str.format`` — every call site
 passes engine constants (never user input), and the declared queries
@@ -41,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 # The DECIMAL(18,4) revenue expression shared by the TPC-H-shaped
-# queries — textual twin of relational._dec / tpch._revenue().
+# queries (the same expression as tpch._revenue()).
 _REV = (
     "CAST(l_extendedprice AS DECIMAL(18,4))"
     " * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))"
@@ -55,9 +57,15 @@ def regional_revenue_sql(
     y_from: str = "1995-01-01 00:00:00",
     y_to: str = "1997-01-01 00:00:00",
 ) -> DataFrame:
-    """SQL twin of ``relational.regional_revenue`` (TPC-H Q5-shaped
-    6-way join). Same shape: region→nation→supplier collapse into a
-    broadcast dim, lineitem⋈orders is the one big shuffle."""
+    """TPC-H Q5-shaped 6-way join: revenue per nation for one region,
+    local suppliers only (c_nationkey = s_nationkey).
+
+    Plan shape for 100 TB: lineitem (the fact) is never broadcast;
+    region→nation→supplier collapse into one broadcast dimension on the
+    fact side, the orders and customer joins are the only shuffle
+    joins; the final aggregate is nation-cardinality rows.
+
+    Output: (n_name, revenue)."""
     q = """
         WITH dims AS (
           SELECT /*+ BROADCAST(nr) */ s.s_suppkey, s.s_nationkey, nr.n_name
@@ -89,8 +97,13 @@ def topk_revenue_sql(
     segment: str = "BUILDING",
     k: int = 10,
 ) -> DataFrame:
-    """SQL twin of the ``_q_topk_revenue`` chain (TPC-H Q3-shaped
-    top-k orders by revenue; orderBy+limit = TakeOrderedAndProject)."""
+    """TPC-H Q3-shaped top-k orders by revenue for one market segment.
+    The filtered customer dimension broadcasts; ORDER BY + LIMIT plans
+    as TakeOrderedAndProject (per-partition heap + driver merge of k
+    rows, never a global sort). Ties are broken by l_orderkey so the
+    k-row result is engine-portable.
+
+    Output: (l_orderkey, revenue) — k rows."""
     q = """
         SELECT /*+ BROADCAST(c) */ l.l_orderkey,
                CAST(ROUND(SUM({rev}), 2) AS DOUBLE) AS revenue
@@ -106,8 +119,12 @@ def topk_revenue_sql(
 
 
 def star_join_count_sql(spark: SparkSession, views: dict[str, str]) -> DataFrame:
-    """SQL twin of ``star_join.star_join_count`` (3-way star join,
-    grouped count per market segment, dimension broadcast)."""
+    """Row-materializing 3-way star join over the relational tables
+    (FIXTURES.md §2): lineitem ⋈ orders ⋈ customer, grouped count per
+    market segment. The dimension (customer) is broadcast — at 100 TB
+    the fact table streams through without shuffling the small side.
+
+    Output: (c_mktsegment, n)."""
     q = """
         SELECT /*+ BROADCAST(c) */ c.c_mktsegment, COUNT(*) AS n
         FROM {lineitem} l
@@ -123,8 +140,15 @@ def tpch_q1_sql(
     views: dict[str, str],
     cutoff: str = "1998-09-02 00:00:00",
 ) -> DataFrame:
-    """SQL twin of the ``_q_tpch_q1`` chain (pricing summary,
-    DECIMAL-exact then rounded to DOUBLE)."""
+    """TPC-H Q1 pricing summary: per (returnflag, linestatus), sums and
+    averages of quantity, price, discounted price and charge,
+    DECIMAL-exact then rounded to DOUBLE. One scan with the shipdate
+    filter pushed down, then a single-shuffle partial→final aggregate
+    over a handful of groups — no join.
+
+    Output: (l_returnflag, l_linestatus, sum_qty, sum_base_price,
+    sum_disc_price, sum_charge, avg_qty, avg_price, avg_disc,
+    count_order)."""
     q = """
         SELECT l_returnflag, l_linestatus,
                CAST(ROUND(sq, 2) AS DOUBLE)  AS sum_qty,
@@ -158,7 +182,21 @@ def shipping_priority_sql(
     cutoff: str = "1998-06-15",
     k: int = 10,
 ) -> DataFrame:
-    """SQL twin of ``relational.shipping_priority`` (TPC-H Q3)."""
+    """TPC-H Q3 shape: top-k unshipped orders by revenue for one market
+    segment (orders placed before ``cutoff`` with lines shipping after
+    it). The fixture orders table has no o_shippriority column, so the
+    output carries (l_orderkey, revenue, o_orderdate).
+
+    Scale: the segment filter keeps ~20% of customer — still far below
+    broadcast threshold at any SF (customer is a dimension here), so
+    both the customer→orders and filtered-orders→lineitem joins
+    broadcast the small side; lineitem, the 100 TB fact, is scanned
+    once with the shipdate filter pushed down and never shuffled. The
+    top-k is ORDER BY + LIMIT = TakeOrderedAndProject (per-partition
+    heap + driver merge of k rows, never a global sort). Ties are
+    broken by l_orderkey so the k-row result is engine-portable.
+
+    Output: (l_orderkey, revenue, o_orderdate) — k rows."""
     q = """
         WITH ords AS (
           SELECT /*+ BROADCAST(c) */ o.o_orderkey, o.o_orderdate
@@ -188,7 +226,23 @@ def local_supplier_volume_sql(
     y_from: int = 1995,
     y_to: int = 1996,
 ) -> DataFrame:
-    """SQL twin of ``tpch.local_supplier_volume`` (TPC-H Q5)."""
+    """TPC-H Q5 shape: per-nation revenue where the ordering customer
+    and the shipping supplier sit in the SAME nation of one region,
+    over an order-date year range.
+
+    Scale: region→nation is a driver-sized broadcast that semi-filters
+    supplier AND customer before either touches a fact table; orders
+    takes its date range in pushdown-able form (a range, not year()).
+    orders⋈customer joins first, both already dimension-filtered;
+    customer itself is not hinted — at TPC-H scale it grows with SF
+    and belongs on the shuffle path (AQE may still demote it to
+    broadcast when the region filter makes it small). lineitem⋈orders
+    is the one big shuffle; the c_nationkey = s_nationkey locality
+    predicate applies right behind the broadcast supplier join, so the
+    final aggregate groups only same-nation rows on the few-row nation
+    key.
+
+    Output: (n_name, revenue) — revenue DECIMAL-summed, rounded to 2."""
     q = """
         WITH nat AS (
           SELECT /*+ BROADCAST(r) */ n.n_nationkey, n.n_name
@@ -229,7 +283,20 @@ def product_type_profit_sql(
     views: dict[str, str],
     name_substr: str = "widget",
 ) -> DataFrame:
-    """SQL twin of ``tpch.product_type_profit`` (TPC-H Q9)."""
+    """TPC-H Q9 shape: profit per supplier nation per order year for
+    parts whose name contains a substring. The fixture has no
+    ps_supplycost, so unit cost is 60% of p_retailprice — the shape
+    (fact revenue minus dimension-priced cost, grouped by a dimension
+    attribute and a derived year) is what matters.
+
+    Scale: the name filter shrinks part before broadcast; supplier
+    (with its nation name attached via broadcast) also broadcasts.
+    lineitem⋈orders on orderkey is the one big shuffle; profit math
+    stays in small-precision DECIMAL (no scale-loss truncation at
+    p=38, so Spark and DuckDB agree bit-for-bit) until the final
+    rounded DOUBLE.
+
+    Output: (nation, o_year, sum_profit)."""
     q = """
         WITH p AS (
           SELECT p_partkey, CAST(p_retailprice AS DECIMAL(10,4)) AS unit_price
@@ -260,7 +327,20 @@ def order_count_distribution_sql(
     views: dict[str, str],
     exclude_priority: str = "1-URGENT",
 ) -> DataFrame:
-    """SQL twin of ``tpch.order_count_distribution`` (TPC-H Q13)."""
+    """TPC-H Q13 shape: the distribution of orders-per-customer,
+    including customers with zero orders — the canonical left-outer
+    join + double aggregation. The original excludes special-comment
+    orders; the fixture has no o_comment, so one priority class is
+    excluded instead (the point is a filtered outer join, not the
+    predicate text).
+
+    Scale: counting orders per custkey BEFORE the outer join keeps the
+    join input at |distinct custkey| rows instead of |orders| rows, and
+    the second aggregate (histogram of counts) is tiny. Spark picks a
+    shuffle join on custkey for the outer join; no row explosion exists
+    at any scale because both sides are already unique per key.
+
+    Output: (c_count, custdist)."""
     q = """
         WITH per_cust AS (
           SELECT o_custkey, COUNT(*) AS n_orders
@@ -284,7 +364,13 @@ def large_orders_sql(
     views: dict[str, str],
     min_qty: float = 300.0,
 ) -> DataFrame:
-    """SQL twin of ``relational.large_orders`` (TPC-H Q18)."""
+    """TPC-H Q18 shape: orders whose total lineitem quantity exceeds
+    ``min_qty``, with customer attribution. The IN-subquery-with-HAVING
+    becomes an aggregate + join: per-order quantity totals first (the
+    big shuffle, partial-agg combined map-side), then the few survivors
+    broadcast into the join with orders, and customer attributes them.
+
+    Output: (c_custkey, o_orderkey, o_totalprice, total_qty)."""
     q = """
         WITH totals AS (
           SELECT l_orderkey, tq FROM (

@@ -10,8 +10,9 @@ Spark-first design: the counts-product needs ONE shuffle of
 pre-aggregated (key, rel) counts — never a row-level join — so skew in
 the raw data is absorbed by map-side partial aggregation, which is the
 load-balancing effect the reference's hypercube chased. For genuine
-row-materializing star joins, `star_join_count` uses real joins and
-lets Catalyst/AQE pick broadcast + skew-split strategies.
+row-materializing star joins, `star_join_hypercube_rows` here and the
+relational star join (`sql_forms.star_join_count_sql`, q_star_join) use
+real joins and let Catalyst/AQE pick broadcast + skew-split strategies.
 """
 
 from __future__ import annotations
@@ -45,23 +46,6 @@ def star_cardinality(star: DataFrame, n_rels: int = 3) -> DataFrame:
         product = product * F.col(f"c{r}")
         cond = cond & F.col(f"c{r}").isNotNull()
     return wide.where(cond).select("key", product.alias("card"))
-
-
-def star_cardinality_join(star: DataFrame, n_rels: int = 3) -> DataFrame:
-    """Cross-check formulation of J2: materialize the 3-way equi-join of
-    the relation slices and count per key. Semantically identical to
-    `star_cardinality` but exercises the real join path (AQE picks
-    broadcast/skew strategies). Used in tests to validate the
-    counts-product; at scale prefer `star_cardinality`.
-    """
-    rels = [
-        star.where(F.col("rel") == r).select(F.col("key").alias(f"k{r}"))
-        for r in range(n_rels)
-    ]
-    joined = rels[0]
-    for r in range(1, n_rels):
-        joined = joined.join(rels[r], joined["k0"] == rels[r][f"k{r}"], "inner")
-    return joined.groupBy(F.col("k0").alias("key")).agg(F.count("*").alias("card"))
 
 
 def star_cardinality_hypercube(
@@ -367,20 +351,3 @@ def plan_cube_dims(
             plan.update({"mx": dims[0], "my": dims[1], "mz": dims[2]})
         out.append(plan)
     return out
-
-
-def star_join_count(
-    lineitem: DataFrame, orders: DataFrame, customer: DataFrame
-) -> DataFrame:
-    """Row-materializing 3-way star join over the relational tables
-    (FIXTURES.md §2): lineitem ⋈ orders ⋈ customer, grouped count per
-    market segment. The dimension (customer) is broadcast — at 100 TB
-    the fact table streams through without shuffling the small side.
-    Output ``(c_mktsegment, n)``.
-    """
-    return (
-        lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"], "inner")
-        .join(F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"], "inner")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n"))
-    )

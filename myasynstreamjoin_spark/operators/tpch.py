@@ -178,39 +178,6 @@ def late_shipment_mode_split(
     )
 
 
-def order_count_distribution(
-    customer: DataFrame,
-    orders: DataFrame,
-    exclude_priority: str = "1-URGENT",
-) -> DataFrame:
-    """TPC-H Q13 shape: the distribution of orders-per-customer,
-    including customers with zero orders — the canonical left-outer
-    join + double aggregation. The original excludes special-comment
-    orders; the fixture has no o_comment, so one priority class is
-    excluded instead (the point is a filtered outer join, not the
-    predicate text).
-
-    Scale: counting orders per custkey BEFORE the outer join keeps the
-    join input at |distinct custkey| rows instead of |orders| rows, and
-    the second aggregate (histogram of counts) is tiny. Spark picks a
-    shuffle join on custkey for the outer join; no row explosion exists
-    at any scale because both sides are already unique per key.
-
-    Output: (c_count, custdist).
-    """
-    per_cust = (
-        orders.where(F.col("o_orderpriority") != exclude_priority)
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("n_orders"))
-    )
-    return (
-        customer.join(per_cust, customer["c_custkey"] == per_cust["o_custkey"], "left")
-        .select(F.coalesce(F.col("n_orders"), F.lit(0)).alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-    )
-
-
 def top_suppliers(
     lineitem: DataFrame,
     supplier: DataFrame,
@@ -548,60 +515,6 @@ def min_cost_part_supplier(
     )
 
 
-def product_type_profit(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    part: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    name_substr: str = "widget",
-) -> DataFrame:
-    """TPC-H Q9 shape: profit per supplier nation per order year for
-    parts whose name contains a substring. The fixture has no
-    ps_supplycost, so unit cost is 60% of p_retailprice — the shape
-    (fact revenue minus dimension-priced cost, grouped by a dimension
-    attribute and a derived year) is what matters.
-
-    Scale: the name filter shrinks part before broadcast; supplier
-    (with its nation name attached via broadcast) also broadcasts.
-    lineitem⋈orders on orderkey is the one big shuffle; profit math
-    stays in small-precision DECIMAL (no scale-loss truncation at
-    p=38, so Spark and DuckDB agree bit-for-bit) until the final
-    rounded DOUBLE.
-
-    Output: (nation, o_year, sum_profit).
-    """
-    p = part.where(F.col("p_name").contains(name_substr)).select(
-        "p_partkey", F.col("p_retailprice").cast("decimal(10,4)").alias("unit_price")
-    )
-    s = (
-        supplier.join(
-            F.broadcast(nation), supplier["s_nationkey"] == nation["n_nationkey"]
-        )
-        .select("s_suppkey", F.col("n_name").alias("nation"))
-    )
-    rev = F.col("l_extendedprice").cast("decimal(12,4)") * (
-        F.lit(1).cast("decimal(5,4)") - F.col("l_discount").cast("decimal(5,4)")
-    )
-    cost = (
-        F.col("unit_price")
-        * F.col("l_quantity").cast("decimal(6,2)")
-        * F.lit(0.6).cast("decimal(2,1)")
-    )
-    return (
-        lineitem.join(F.broadcast(p), lineitem["l_partkey"] == p["p_partkey"])
-        .join(F.broadcast(s), lineitem["l_suppkey"] == s["s_suppkey"])
-        .join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("nation", F.year("o_orderdate").alias("o_year"))
-        .agg(F.sum(rev - cost).alias("profit_d"))
-        .select(
-            "nation",
-            "o_year",
-            F.round(F.col("profit_d"), 2).cast("double").alias("sum_profit"),
-        )
-    )
-
-
 def important_part_values(
     lineitem: DataFrame,
     supplier: DataFrame,
@@ -753,68 +666,4 @@ def excess_inventory_suppliers(
     return (
         ns.join(F.broadcast(pairs), ns["s_suppkey"] == pairs["l_suppkey"], "left_semi")
         .select("s_suppkey", "s_name")
-    )
-
-
-def local_supplier_volume(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-    region_name: str = "ASIA",
-    y_from: int = 1995,
-    y_to: int = 1996,
-) -> DataFrame:
-    """TPC-H Q5 shape (the last of the 22): per-nation revenue where
-    the ordering customer and the shipping supplier sit in the SAME
-    nation of one region, over an order-date year range.
-
-    Scale: region→nation is a driver-sized broadcast that semi-filters
-    supplier AND customer before either touches a fact table; orders
-    takes its date range in pushdown-able form. lineitem⋈orders is the
-    one big shuffle; the c_nationkey = s_nationkey locality predicate
-    applies right behind the broadcast dimension joins, so the final
-    aggregate groups only same-nation rows on the few-row nation key.
-
-    Output: (n_name, revenue) — revenue DECIMAL-summed, rounded to 2.
-    """
-    nat = (
-        nation.join(
-            F.broadcast(region.where(F.col("r_name") == region_name)),
-            nation["n_regionkey"] == region["r_regionkey"],
-        )
-        .select("n_nationkey", "n_name")
-    )
-    supp = supplier.join(
-        F.broadcast(nat), supplier["s_nationkey"] == nat["n_nationkey"]
-    ).select("s_suppkey", "s_nationkey", "n_name")
-    cust = customer.join(
-        F.broadcast(nat.select("n_nationkey")),
-        customer["c_nationkey"] == nat["n_nationkey"],
-    ).select("c_custkey", "c_nationkey")
-    # range form, not year(): reaches the parquet scan as a pushed
-    # filter (same rule as bilateral_trade)
-    ords = orders.where(
-        (F.col("o_orderdate") >= F.lit(f"{y_from}-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(f"{y_to + 1}-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    # orders⋈customer first (both already dimension-filtered), THEN the
-    # one lineitem shuffle — customer is NOT broadcast: at TPC-H scale
-    # it grows with SF and belongs on the shuffle path (AQE may still
-    # demote it to broadcast when the region filter makes it small).
-    ords_c = ords.join(cust, ords["o_custkey"] == cust["c_custkey"]).select(
-        "o_orderkey", "c_nationkey"
-    )
-    return (
-        lineitem.join(ords_c, lineitem["l_orderkey"] == ords_c["o_orderkey"])
-        .join(F.broadcast(supp), lineitem["l_suppkey"] == supp["s_suppkey"])
-        .where(F.col("c_nationkey") == F.col("s_nationkey"))
-        .groupBy("n_name")
-        .agg(F.sum(_revenue()).alias("rev_d"))
-        .select(
-            "n_name",
-            F.round(F.col("rev_d"), 2).cast("double").alias("revenue"),
-        )
     )

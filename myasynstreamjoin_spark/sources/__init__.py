@@ -1,4 +1,4 @@
-from myasynstreamjoin_spark.sources.tables import TABLE_NAMES, load_table, register_views
+from myasynstreamjoin_spark.sources.tables import TABLE_NAMES, load_table
 from myasynstreamjoin_spark.sources.grammar_source import (
     GrammarDataSource,
     register_grammar_source,
@@ -13,7 +13,6 @@ from myasynstreamjoin_spark.sources.fixtures import (
 __all__ = [
     "TABLE_NAMES",
     "load_table",
-    "register_views",
     "ported_words",
     "keyed_values",
     "star_rel",

@@ -95,12 +95,6 @@ def with_window(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, ts_col: str =
     return df.withColumn("ltw", F.expr(f"CAST({ts_col} DIV {cfg.lgw_ns} AS LONG)"))
 
 
-def ts_as_timestamp(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Convert the epoch-ns BIGINT ``ts`` to a TimestampType column
-    (needed by Structured Streaming watermarks / window())."""
-    return df.withColumn(ts_col, F.expr(f"timestamp_micros({ts_col} DIV 1000)"))
-
-
 # --- raw text grammar codec (reference record format round-trip) -----
 
 def encode_packed_lines(pw: DataFrame, pack_by: str = "source") -> DataFrame:

@@ -9,8 +9,12 @@ Kafka/text grammar preserved in :mod:`fixtures` as a codec and in
 
 from __future__ import annotations
 
+import hashlib
 import os
+import stat
+import threading
 import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,80 +87,82 @@ def normalize_epoch_ns(df: DataFrame, cols: tuple[str, ...] = ("ts",)) -> DataFr
     return df
 
 
-# Parquet SCHEMA cache for single-file driver tables, keyed on the
-# file's identity (path, mtime_ns, size). Schema inference is the
-# dominant cost of constructing a read — ~60 of the ~70 ms per
-# spark.read.parquet here (footer fetch + merge on the JVM), paid on
-# EVERY load_table call, several times per query, inside the timed
-# region of every bench pass (guide §7.3: planning is driver-side
-# work). An explicit .schema(...) skips inference (~13 ms). Only
-# metadata is cached — never data, plans, or results: the scan still
-# reads the parquet at execution, and a regenerated file (the
-# documented events.ts physical-type drift) changes mtime/size and
-# misses the cache, so drift handling in normalize_epoch_ns is
-# untouched. Directories are never cached (an overwritten part-file
-# need not touch the directory mtime); the driver tables are single
-# files, which is exactly the safe case.
-_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
+# One metadata cache for the driver tables: per SparkSession (weakly,
+# so a discarded session frees its plans), per table path, one entry
+# holding the file's identity (mtime_ns, size), its raw parquet schema,
+# the normalized lazy DataFrame, and the stable temp-view name once
+# ``table_view`` has registered one. Costs it removes from every warm
+# construction, all driver-side and inside the timed region of every
+# bench pass (guide §7.3): schema inference (~60 of the ~70 ms of a
+# spark.read.parquet here: footer fetch + merge on the JVM), reader
+# construction + file listing + normalize_epoch_ns (~28 ms per call,
+# ~47 load_table calls per headline pass), and the view registration
+# a spark.sql() string would otherwise pay per construction. A warm
+# load_table/table_view call is an os.stat plus dict lookups, zero
+# py4j calls.
+#
+# Only metadata is cached, never data, plans' results or rows: a
+# DataFrame is a logical plan and a temp view a named one, so every
+# action still scans the parquet. A regenerated file (the documented
+# events.ts physical-type drift) changes mtime/size, so its entry is
+# rebuilt, re-inferring the schema and re-deriving the normalization,
+# and the superseded view is dropped: the cache stays bounded by live
+# table count, not regeneration count. Directories are never cached
+# (an overwritten part-file need not touch the directory mtime); the
+# driver tables are single files, which is the safe case.
+@dataclass
+class _TableEntry:
+    identity: tuple[int, int]  # (mtime_ns, size)
+    schema: T.StructType  # raw parquet schema, before normalization
+    frame: DataFrame  # normalized lazy DataFrame
+    view: str | None = None  # temp view over ``frame``, once registered
 
 
-def _file_identity(path: str) -> tuple[str, int, int] | None:
-    """(path, mtime_ns, size) for a plain file; None for directories
-    or anything stat cannot see (never cache those)."""
-    try:
-        st = os.stat(path)
-        if not os.path.isfile(path):
-            return None
-    except OSError:
-        return None
-    return (path, st.st_mtime_ns, st.st_size)
-
-
-def _evict_superseded(cache: dict, path: str, new_key: tuple) -> None:
-    """Drop cache entries for PRIOR identities of ``path`` when a new
-    identity is inserted: a regenerated file supersedes its old
-    (mtime, size) keys, and keeping them would grow the cache without
-    bound in a long-lived process that regenerates inputs repeatedly
-    (round-11 advice). Bounds both caches by live table count."""
-    for k in [k for k in cache if k[0] == path and k != new_key]:
-        del cache[k]
-
-
-def _read_driver_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = _file_identity(path)
-    if key is None:
-        return spark.read.parquet(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _evict_superseded(_SCHEMA_CACHE, path, key)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
-
-
-def read_driver_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Public schema-cached batch-read handle for a driver parquet file
-    — the supported entry point for modules (e.g. streaming.windowed)
-    that need the on-disk schema without paying footer inference per
-    call. Same cache + invalidation rules as ``load_table``."""
-    return _read_driver_parquet(spark, path)
-
-
-# Lazy-DataFrame cache, one layer above the schema cache: load_table
-# returns the SAME (immutable, unexecuted) DataFrame object for the
-# same session + file identity. Still metadata only — a DataFrame is
-# a logical plan, so every action on it re-reads the parquet at
-# execution; nothing row-shaped is retained. Keyed per SparkSession
-# (weakly, so a discarded session frees its plans) and on the same
-# (path, mtime_ns, size) identity as the schema cache, so a
-# regenerated file misses and re-derives, drift normalization
-# included. Saves the ~28 ms/call of reader construction + file
-# listing + normalize_epoch_ns that remained after the schema cache
-# (~47 load_table calls per bench headline pass = ~1.3 s/pass).
-_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+_TABLES: "weakref.WeakKeyDictionary[SparkSession, dict[str, _TableEntry]]" = (
     weakref.WeakKeyDictionary()
 )
+# Serializes every cache mutation (entry rebuild, view registration) so
+# two threads building queries on one session neither register a view
+# over a superseded frame nor leak one; warm hits take no lock.
+_TABLES_LOCK = threading.RLock()
+
+
+def _file_identity(path: str) -> tuple[int, int] | None:
+    """(mtime_ns, size) for a plain file; None for directories or
+    anything stat cannot see (never cache those)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size) if stat.S_ISREG(st.st_mode) else None
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    return normalize_epoch_ns(spark.read.parquet(path), EPOCH_NS_COLUMNS.get(name, ()))
+
+
+def _table_entry(spark: SparkSession, sf_dir: str, name: str) -> _TableEntry | None:
+    """The cache entry for ``{sf_dir}/{name}.parquet``, rebuilt when the
+    file's identity changed; None for an un-stat-able path."""
+    if name not in TABLE_NAMES:
+        raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    path = f"{sf_dir}/{name}.parquet"
+    identity = _file_identity(path)
+    if identity is None:
+        return None
+    entry = _TABLES.get(spark, {}).get(path)
+    if entry is not None and entry.identity == identity:
+        return entry
+    with _TABLES_LOCK:
+        per_session = _TABLES.setdefault(spark, {})
+        entry = per_session.get(path)
+        if entry is None or entry.identity != identity:
+            if entry is not None and entry.view is not None:
+                spark.catalog.dropTempView(entry.view)
+            raw = spark.read.parquet(path)
+            frame = normalize_epoch_ns(raw, EPOCH_NS_COLUMNS.get(name, ()))
+            entry = per_session[path] = _TableEntry(identity, raw.schema, frame)
+        return entry
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -177,26 +183,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark raises AMBIGUOUS_SELF_JOIN — asserted by
     tests/test_schema_drift.py::test_load_table_self_join_via_alias.
     """
-    if name not in TABLE_NAMES:
-        raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = f"{sf_dir}/{name}.parquet"
-    key = _file_identity(path)
-    if key is None:
-        df = spark.read.parquet(path)
-        cols = EPOCH_NS_COLUMNS.get(name)
-        return normalize_epoch_ns(df, cols) if cols else df
-    try:
-        per_session = _DF_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable: skip the cache
-        per_session = {}
-    df = per_session.get(key)
-    if df is None:
-        base = _read_driver_parquet(spark, path)
-        cols = EPOCH_NS_COLUMNS.get(name)
-        df = normalize_epoch_ns(base, cols) if cols else base
-        _evict_superseded(per_session, path, key)
-        per_session[key] = df
-    return df
+    entry = _table_entry(spark, sf_dir, name)
+    if entry is None:
+        return _read_table(spark, f"{sf_dir}/{name}.parquet", name)
+    return entry.frame
+
+
+def table_file_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The on-disk (pre-normalization) parquet schema of a driver table,
+    from the same cache entry as ``load_table`` — for readers such as
+    ``readStream`` that need an explicit schema without paying footer
+    inference per call."""
+    entry = _table_entry(spark, sf_dir, name)
+    if entry is None:
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    return entry.schema
 
 
 def rebalance(df: DataFrame, partitions: int | None = None) -> DataFrame:
@@ -214,30 +215,6 @@ def rebalance(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (for spark.sql use)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# Stable-view cache, the spark.sql() counterpart of _DF_CACHE: each
-# (session, file identity) gets ONE uniquely-named temp view registered
-# once and reused by every single-string SQL query construction
-# (round-11 verdict #1: a spark.sql() string analyzes ~5x cheaper than
-# the equivalent DataFrame chain, but only if the per-construction
-# py4j cost stays at one call — the kwargs formatter's per-call
-# createOrReplaceTempView/dropTempView churn would eat the win). The
-# view name embeds a hash of the file identity, so a regenerated file
-# (new mtime/size) gets a FRESH view over the freshly-derived
-# DataFrame and two sf_dirs used in one session never collide; stale
-# views of a superseded identity are dropped on replacement. Metadata
-# only, same safety class as the schema/DataFrame caches: a temp view
-# is a named logical plan — every action still scans the parquet.
-_VIEW_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Return the name of a temp view over ``load_table(spark, sf_dir,
     name)``, registering it on first use per (session, file identity).
@@ -245,35 +222,24 @@ def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     The returned name is stable for the life of the file identity, so
     SQL text built around it can be constructed with zero py4j calls
     on the warm path. Views are prefixed ``masj_`` and suffixed with
-    an identity hash — they cannot collide with caller-owned views.
+    a hash of the path and identity — they cannot collide with
+    caller-owned views, and two sf_dirs used in one session never
+    share one.
     """
-    import hashlib
-
-    if name not in TABLE_NAMES:
-        raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    entry = _table_entry(spark, sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    key = _file_identity(path)
-    if key is None:
+    if entry is None:
         # Un-stat-able input (directory table): no identity to key on —
         # register a per-sf_dir name and refresh it every call.
-        ident = hashlib.md5(path.encode()).hexdigest()[:10]
-        view = f"masj_{name}_{ident}"
-        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
+        view = f"masj_{name}_{hashlib.md5(path.encode()).hexdigest()[:10]}"
+        _read_table(spark, path, name).createOrReplaceTempView(view)
         return view
-    try:
-        per_session = _VIEW_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable: skip the cache
-        per_session = {}
-    view = per_session.get(key)
-    if view is None:
-        ident = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-        view = f"masj_{name}_{ident}"
-        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
-        for k in [k for k in per_session if k[0] == path and k != key]:
-            try:
-                spark.catalog.dropTempView(per_session[k])
-            except Exception:
-                pass
-            del per_session[k]
-        per_session[key] = view
-    return view
+    if entry.view is None:
+        with _TABLES_LOCK:
+            entry = _table_entry(spark, sf_dir, name)  # current under the lock
+            if entry.view is None:
+                ident = hashlib.md5(repr((path, *entry.identity)).encode())
+                view = f"masj_{name}_{ident.hexdigest()[:10]}"
+                entry.frame.createOrReplaceTempView(view)
+                entry.view = view
+    return entry.view

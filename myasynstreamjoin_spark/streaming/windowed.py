@@ -59,20 +59,22 @@ EVENTS_SCHEMA = T.StructType(
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file stream (the test-rig replacement for
     the reference's Kafka direct stream, stateless/cluster/HashJoin.scala:64-65;
-    swap for readStream.format("kafka") in production — see sources.kafka).
+    in production, swap for readStream.format("kafka") and decode its
+    ``value`` column as ``payload`` with fixtures.decode_packed_lines,
+    the form ``stream_grammar_min_count`` uses).
 
     readStream requires an explicit schema; rather than hardcoding the
     parquet physical type (which the driver has changed between rounds),
-    read it from the parquet footer via a batch-read handle, then
-    normalize ``ts`` to the engine's BIGINT epoch-ns. Footer-only read —
-    no data scan.
+    take the on-disk schema from the parquet footer, then normalize
+    ``ts`` to the engine's BIGINT epoch-ns. Footer-only read — no data
+    scan.
     """
-    # Goes through the load-path schema cache (keyed on file identity,
-    # so a driver regeneration re-infers) — this footer read is paid
-    # once per streaming construction, inside the bench's timed region.
-    from myasynstreamjoin_spark.sources.tables import read_driver_parquet
+    # Served by the load_table cache entry (keyed on file identity, so
+    # a driver regeneration re-infers) — the footer is read once, not
+    # per streaming construction inside the bench's timed region.
+    from myasynstreamjoin_spark.sources.tables import table_file_schema
 
-    file_schema = read_driver_parquet(spark, f"{sf_dir}/events.parquet").schema
+    file_schema = table_file_schema(spark, sf_dir, "events")
     raw = (
         spark.readStream.schema(file_schema)
         .option("maxFilesPerTrigger", 1)

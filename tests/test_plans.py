@@ -8,11 +8,12 @@ these fail even though results stay correct.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
+import __spark_entry__ as contract
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG as CFG
 from myasynstreamjoin_spark.operators.asyn_join import min_count_per_window
 from myasynstreamjoin_spark.operators.grouping import count_per_key
-from myasynstreamjoin_spark.operators.relational import regional_revenue
 from myasynstreamjoin_spark.plans.explain import (
     has_broadcast_join,
     n_nodes,
@@ -55,14 +56,7 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
 
 
 def test_regional_revenue_broadcasts_dims(spark, sf_dir):
-    df = regional_revenue(
-        tables.load_table(spark, sf_dir, "customer"),
-        tables.load_table(spark, sf_dir, "orders"),
-        tables.load_table(spark, sf_dir, "lineitem"),
-        tables.load_table(spark, sf_dir, "supplier"),
-        tables.load_table(spark, sf_dir, "nation"),
-        tables.load_table(spark, sf_dir, "region"),
-    )
+    df = contract.queries()["q_regional_revenue"](spark, sf_dir)
     assert has_broadcast_join(df)
     # the region filter must be pushed into the region scan
     assert any(
@@ -116,13 +110,7 @@ def test_anti_join_shape(spark, sf_dir):
 
 
 def test_q3_broadcasts_and_takeordered(spark, sf_dir):
-    from myasynstreamjoin_spark.operators.relational import shipping_priority
-
-    df = shipping_priority(
-        tables.load_table(spark, sf_dir, "customer"),
-        tables.load_table(spark, sf_dir, "orders"),
-        tables.load_table(spark, sf_dir, "lineitem"),
-    )
+    df = contract.queries()["q_tpch_q3"](spark, sf_dir)
     plan = simple_plan(df)
     # lineitem (the fact) never shuffles for the joins: both build sides
     # broadcast, and top-k is a heap merge, not a global sort.
@@ -284,19 +272,53 @@ def test_q2_single_fact_shuffle_and_broadcast_min(spark, sf_dir):
 
 
 def test_q9_broadcasts_both_dims(spark, sf_dir):
-    from myasynstreamjoin_spark.operators.tpch import product_type_profit
-
-    df = product_type_profit(
-        tables.load_table(spark, sf_dir, "lineitem"),
-        tables.load_table(spark, sf_dir, "orders"),
-        tables.load_table(spark, sf_dir, "part"),
-        tables.load_table(spark, sf_dir, "supplier"),
-        tables.load_table(spark, sf_dir, "nation"),
-    )
+    df = contract.queries()["q_tpch_q9"](spark, sf_dir)
     assert has_broadcast_join(df)
     # only the lineitem⋈orders join may shuffle facts; dims broadcast,
     # then one partial→final aggregate — bounded exchange count
     assert n_shuffles(df) <= 3
+
+
+def _aggregates_before_join(plan: str, key: str) -> bool:
+    # the tree string prints parents first: an aggregate keyed on
+    # ``key`` printed after the join line sits below (before) the join
+    join = plan.find("Join ")
+    return join >= 0 and plan.find(f"HashAggregate(keys=[{key}#", join) > join
+
+
+# One intent per declared SQL-form query, from its docstring in
+# operators/sql_forms.py (q_regional_revenue, q_tpch_q3 and q_tpch_q9
+# have tests of their own above).
+SQL_FORM_INTENTS = {
+    # region→nation→supplier collapse into broadcast dimensions
+    "q_tpch_q5": lambda df, plan: has_broadcast_join(df),
+    # orders are counted per customer BEFORE the outer join
+    "q_tpch_q13": lambda df, plan: _aggregates_before_join(plan, "o_custkey"),
+    # the few over-quantity orders broadcast into the orders join
+    "q_tpch_q18": lambda df, plan: has_broadcast_join(df),
+    # the customer dimension broadcasts
+    "q_star_join": lambda df, plan: has_broadcast_join(df),
+    # top-k is a heap merge, never a global sort
+    "q_topk_revenue": lambda df, plan: "TakeOrderedAndProject" in plan,
+    # one scan, one partial→final aggregate, no join
+    "q_tpch_q1": lambda df, plan: n_shuffles(df) == 1 and "Join" not in plan,
+}
+
+
+@pytest.mark.parametrize("name", sorted(SQL_FORM_INTENTS))
+def test_sql_form_plan_intent(spark, sf_dir, name):
+    """With auto-broadcast off, only the query's own BROADCAST hints
+    broadcast, so a dropped hint fails here instead of being masked by
+    the tiny test tables."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = contract.queries()[name](spark, sf_dir)
+        plan = simple_plan(df)
+        assert SQL_FORM_INTENTS[name](df, plan), plan
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_q20_semi_filters_before_the_pair_aggregate(spark, sf_dir):
@@ -319,9 +341,7 @@ def test_topk_revenue_is_heap_merge_not_global_sort(spark, sf_dir):
     """The headline top-k query must plan as TakeOrderedAndProject (a
     per-partition heap + driver merge of k rows) — a global Sort before
     a Limit would shuffle the whole aggregate at 100 TB."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["q_topk_revenue"](spark, sf_dir)
+    df = contract.queries()["q_topk_revenue"](spark, sf_dir)
     plan = simple_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert has_broadcast_join(df)  # customer dim broadcasts
@@ -682,8 +702,6 @@ def test_unpivot_is_expand_plus_one_exchange(spark, sf_dir, duck):
     assert plan.count("Scan parquet") == 1, plan
     from tests.conftest import assert_matches_oracle
 
-    import __spark_entry__ as contract
-
     assert_matches_oracle(df, duck, contract.oracle_sql()["q_unpivot"])
 
 
@@ -711,7 +729,5 @@ def test_q16_fact_side_never_shuffles_at_pair_grain(spark, sf_dir, duck):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
     assert "SortMergeJoin" not in plan, plan
     from tests.conftest import assert_matches_oracle
-
-    import __spark_entry__ as contract
 
     assert_matches_oracle(df, duck, contract.oracle_sql()["q_tpch_q16"])

@@ -196,37 +196,34 @@ def test_documents_text_is_ascii(spark, sf_dir):
     )
 
 
-def test_schema_cache_invalidates_on_file_change(spark, sf_dir, tmp_path):
-    """The load-path schema cache keys on (path, mtime_ns, size): a
-    regenerated file — the exact drift scenario this module guards —
-    must MISS the cache and re-infer, or the next physical-type drift
-    would be masked by a stale cached schema."""
-    import shutil
-
-    src = f"{sf_dir}/nation.parquet"
-    p = tmp_path / "nation.parquet"
-    shutil.copy(src, p)
-    df1 = tables._read_driver_parquet(spark, str(p))
-    key1 = [k for k in tables._SCHEMA_CACHE if k[0] == str(p)]
-    assert len(key1) == 1
-    # second read: served from cache, schema identical to inference
-    df2 = tables._read_driver_parquet(spark, str(p))
-    assert df2.schema == df1.schema
-    assert df2.collect() == df1.collect()
-    # "regenerate" the file (int32 regionkey -> int64): new mtime/size,
-    # so the cached entry must not be used and the NEW schema must win
-    import duckdb
-
+def _regenerate_nation(sf_dir, dest, limit=None):
+    """Rewrite ``dest`` as the nation table with regionkey widened
+    int32 -> int64 (a new mtime/size, i.e. a new file identity)."""
+    tail = f" ORDER BY n_nationkey LIMIT {limit}" if limit else ""
     duckdb.sql(
         f"COPY (SELECT n_nationkey, n_name, CAST(n_regionkey AS BIGINT) "
-        f"AS n_regionkey FROM '{src}') TO '{p}' (FORMAT PARQUET)"
+        f"AS n_regionkey FROM '{sf_dir}/nation.parquet'{tail}) "
+        f"TO '{dest}' (FORMAT PARQUET)"
     )
-    df3 = tables._read_driver_parquet(spark, str(p))
-    assert df3.schema["n_regionkey"].dataType == T.LongType()
-    keys = [k for k in tables._SCHEMA_CACHE if k[0] == str(p)]
-    # superseded identity evicted on insert (round-11 advice): the
-    # cache stays bounded by live table count, not regeneration count
-    assert keys == [tables._file_identity(str(p))]
+
+
+def test_schema_cache_invalidates_on_file_change(spark, sf_dir, tmp_path):
+    """The cached on-disk schema keys on the file identity (mtime_ns,
+    size): a regenerated file — the exact drift scenario this module
+    guards — must MISS the cache and re-infer, or the next
+    physical-type drift would be masked by a stale cached schema."""
+    import shutil
+
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+    s1 = tables.table_file_schema(spark, str(tmp_path), "nation")
+    assert s1["n_regionkey"].dataType == T.IntegerType()
+    # second read: served from cache, identical to inference
+    assert tables.table_file_schema(spark, str(tmp_path), "nation") == s1
+    assert s1 == spark.read.parquet(str(tmp_path / "nation.parquet")).schema
+
+    _regenerate_nation(sf_dir, tmp_path / "nation.parquet")
+    s2 = tables.table_file_schema(spark, str(tmp_path), "nation")
+    assert s2["n_regionkey"].dataType == T.LongType()
 
 
 def test_load_table_dataframe_cache_invalidates_on_file_change(
@@ -243,13 +240,7 @@ def test_load_table_dataframe_cache_invalidates_on_file_change(
     assert df2 is df1  # cache hit: identical plan object, no data held
     assert df1.count() == 25
 
-    import duckdb
-
-    duckdb.sql(
-        f"COPY (SELECT n_nationkey, n_name, CAST(n_regionkey AS BIGINT) "
-        f"AS n_regionkey FROM '{sf_dir}/nation.parquet') "
-        f"TO '{tmp_path / 'nation.parquet'}' (FORMAT PARQUET)"
-    )
+    _regenerate_nation(sf_dir, tmp_path / "nation.parquet")
     df3 = tables.load_table(spark, str(tmp_path), "nation")
     assert df3 is not df1
     assert df3.schema["n_regionkey"].dataType == T.LongType()
