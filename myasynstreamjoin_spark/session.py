@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 import weakref
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 # SQL configs applied to any session that runs engine queries. All of
@@ -52,7 +54,41 @@ SESSION_CONFS: dict[str, str] = {
     # the UnsafeExternalSorter that OOM'd PageRank's shuffle-join
     # fallback at 957 M edges (SCALEPROBE_r09_crossover_sf40).
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+    # Write offset logs, commit logs and state-store deltas through the
+    # Hadoop FileSystem API. The default FileContext manager on a local
+    # file: path without libhadoop forks `readlink` per rename
+    # (getFileLinkStatus → FileUtil.readLink): ~200 child processes
+    # and ~285 ms of state commit per micro-batch of a 4-partition
+    # windowed stream on a 4-core box (~45 and ~15 ms with this
+    # manager). The swap is safe:
+    # - local file: paths: both managers check-then-rename;
+    #   DelegateToFileSystem does not override the 3-arg
+    #   renameInternal, so FileContext's rename there is
+    #   AbstractFileSystem's non-atomic default too;
+    # - HDFS: DistributedFileSystem.rename is atomic and fails when the
+    #   destination exists, which this manager turns into
+    #   FileAlreadyExistsException, so a second writer still loses;
+    # - checksums: Hadoop's .crc files and Spark's own checkpoint
+    #   checksums are written exactly as before.
+    # The chmod forked per file create needs libhadoop to go away; it
+    # stays. A runtime SQL conf, read from the session's Hadoop conf
+    # when a query starts, so a harness-built session gets it from
+    # prepare_session.
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
 }
+
+
+def _set_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Set each conf; one the deployment refuses (a static conf, a
+    locked-down Connect server) is warned about by key and skipped, so
+    a lost engine default leaves a trace instead of a silent change."""
+    for k, v in confs.items():
+        try:
+            spark.conf.set(k, v)
+        except PySparkException as exc:
+            warnings.warn(f"could not set {k}={v}: {exc}", RuntimeWarning, stacklevel=3)
 
 
 # Executor-memory sizing for the GRAPH family (operator documentation
@@ -78,13 +114,18 @@ SESSION_CONFS: dict[str, str] = {
 #   real cluster every executor brings its own heap, so these numbers
 #   are per-executor, not per-job.
 
-# Micro-batch TRIGGER SIZING (operator documentation, round 8 —
-# distilled from the sf10ish streaming campaign): every streaming
-# kernel pays a roughly volume-independent per-batch fixed cost —
-# micro-batch planning, state-store version commit, the foreachBatch
-# kernels' index read/union/write and checkpoint-block release — ~1-3 s
-# per trigger locally (q_stream_grammar's 3.5 s is ~all fixed cost; the
-# sf10ish stream twins' 36-41 s were trigger-bound, not volume-bound).
+# Micro-batch TRIGGER SIZING (operator documentation): every streaming
+# kernel pays a roughly volume-independent per-batch fixed cost. The
+# windowed min-count on an open-loop 16 k rows/s stream, 1 s trigger,
+# 4 state partitions, local[4] on a 4-core box, spends ~240 ms per
+# trigger: addBatch ~205 ms (state update ~105 ms and state commit
+# ~15 ms, each summed over the partitions), planning ~20 ms, offset
+# and commit logs ~15 ms. With a `readlink` fork per checkpoint rename
+# (before checkpointFileManagerClass above) the same trigger took
+# ~380 ms, of which state commit ~285 ms and logs ~55 ms. The
+# foreachBatch kernels add their index read/union/write and
+# checkpoint-block release on top (the sf10ish stream twins' 36-41 s
+# were trigger-bound, not volume-bound).
 # Amortize it by sizing triggers in RECORDS, not wall time:
 # - target >= 1 M events (or >= 100 MB parquet input) per micro-batch
 #   for the stateless/windowed kernels — below that the fixed cost
@@ -119,11 +160,7 @@ def prepare_streaming_scale(spark: SparkSession) -> SparkSession:
     production deployment; the provider is locked into the checkpoint
     at query start. Verified against the HDFS-backed default by
     tests/test_streaming.py::test_rocksdb_state_store_equivalence."""
-    for k, v in STREAMING_SCALE_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
+    _set_confs(spark, STREAMING_SCALE_CONFS)
     return spark
 
 
@@ -167,13 +204,7 @@ def prepare_session(
     except TypeError:  # not weak-referenceable: apply every time
         seen = False
     if force or not seen:
-        for k, v in SESSION_CONFS.items():
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                # Non-settable in this deployment; engine degrades
-                # gracefully.
-                pass
+        _set_confs(spark, SESSION_CONFS)
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark

@@ -78,15 +78,19 @@ def adaptive_count_stream(
             .sum()
         )
 
-    q = (
-        kv.writeStream.foreachBatch(process)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="masj_fb_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    # The replay never resumes: its checkpoint goes when the query stops.
+    with tempfile.TemporaryDirectory(
+        prefix="masj_fb_", ignore_cleanup_errors=True
+    ) as checkpoint:
+        q = (
+            kv.writeStream.foreachBatch(process)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
     if not running:
         merged = spark.createDataFrame([], "key string, cnt long")

@@ -26,6 +26,7 @@ phase 3 risk note).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 import uuid
@@ -222,17 +223,25 @@ def stream_min_count_join(
     )
 
 
-def _replay_checkpoint_dir() -> str:
-    """Checkpoint dir for FINITE local replays: tmpfs (/dev/shm) when
-    present — state-store commits and the offset/commit logs are
-    fsync-bound, and memory-backed checkpoints shave ~15-20% off a
-    replayed stateful query (measured 4.9 s → 4.2 s at sf0.1). A
-    durable deployment passes an explicit checkpoint_dir on real
-    storage instead — recovery (tests/test_checkpoint_recovery.py)
-    needs the checkpoint to outlive the machine, a replayed test rig
-    does not."""
+def _replay_checkpoint_dir(checkpoint_dir: str | None = None):
+    """Context manager yielding the checkpoint dir of a FINITE replay.
+
+    A caller's ``checkpoint_dir`` is yielded as is and never deleted —
+    a durable deployment passes one on real storage, because recovery
+    (tests/test_checkpoint_recovery.py) needs the checkpoint to outlive
+    the query. Otherwise a fresh dir on tmpfs (/dev/shm, when present)
+    is yielded and removed on exit: a replayed query never resumes, so
+    its checkpoint is dead once the query stops, and left behind it
+    piles up in shared memory. tmpfs because the offset/commit logs and
+    state-store commits are fsync-bound; memory-backed checkpoints
+    shaved ~15-20% off a replayed stateful query (4.9 s → 4.2 s at
+    sf0.1)."""
+    if checkpoint_dir:
+        return contextlib.nullcontext(checkpoint_dir)
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="masj_ckpt_", dir=base)
+    return tempfile.TemporaryDirectory(
+        prefix="masj_ckpt_", dir=base, ignore_cleanup_errors=True
+    )
 
 
 def replay_state_partitions(
@@ -278,30 +287,30 @@ def run_stream_to_parquet(
         state_partitions = replay_state_partitions(
             spark, input_bytes, floor=state_partitions
         )
-    checkpoint = checkpoint_dir or _replay_checkpoint_dir()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev) if prev.isdigit() else state_partitions, state_partitions)),
-        )
-    try:
-        w = (
-            streaming_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint)
-        )
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        q = w.start()
-    finally:
+    with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
         if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+            spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                str(min(int(prev) if prev.isdigit() else state_partitions, state_partitions)),
+            )
+        try:
+            w = (
+                streaming_df.writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", out_path)
+                .option("checkpointLocation", checkpoint)
+            )
+            if partition_cols:
+                w = w.partitionBy(*partition_cols)
+            q = w.start()
+        finally:
+            if state_partitions is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.read.parquet(out_path)
 
 
@@ -321,11 +330,14 @@ def run_stream_to_table(
     duration of query startup: stateful operators commit one state-store
     file per partition per micro-batch, so a finite local replay with
     the 200-partition default pays ~50× the state-commit overhead of a
-    4-partition run for the same data (8→4 alone is ~0.8 s per replayed
-    query at sf0.1 — commit overhead, not compute; the r11 sweep
-    measured 4→2 worth another ~0.3 s on the flagship replay and 2→1
-    only noise beyond that, so the default keeps the last factor of
-    parallelism). The partition count is locked
+    4-partition run for the same data. Through the FileSystem-API
+    checkpoint manager (session.SESSION_CONFS) a commit costs ~4 ms per
+    partition per micro-batch on a 4-core box, down from ~70 ms with a
+    `readlink` fork per rename, so at small widths the count barely
+    matters: the flagship replay at sf0.1 on local[4] took 0.55 / 0.63
+    / 0.60 / 0.59 s (min of 4) at 1 / 2 / 4 / 8 partitions, against
+    0.92 / 0.92 / 0.96 / 0.98 s with the fork. The default keeps 2,
+    the last factor of parallelism. The partition count is locked
     into the checkpoint at query start; the session value is restored
     afterwards. On a real cluster-scale deployment pass None and size
     shuffle partitions to the executor count instead. ``input_bytes``
@@ -340,28 +352,28 @@ def run_stream_to_table(
             spark, input_bytes, floor=state_partitions
         )
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    checkpoint = checkpoint_dir or _replay_checkpoint_dir()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev) if prev.isdigit() else state_partitions, state_partitions)),
-        )
-    try:
-        q = (
-            streaming_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-    finally:
+    with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
         if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+            spark.conf.set(
+                "spark.sql.shuffle.partitions",
+                str(min(int(prev) if prev.isdigit() else state_partitions, state_partitions)),
+            )
+        try:
+            q = (
+                streaming_df.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", checkpoint)
+                .start()
+            )
+        finally:
+            if state_partitions is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.table(name)
 
 

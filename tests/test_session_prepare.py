@@ -1,12 +1,18 @@
 """prepare_session contract (round 12): SESSION_CONFS apply once per
 session — per-query re-application was ~3.8 ms × 34 queries × 3 passes
 of pure py4j overhead inside the bench's timed region — and a caller's
-deliberate mid-session override is respected until ``force=True``.
+deliberate mid-session override is respected until ``force=True``. A
+conf the session refuses is warned about, never dropped silently.
 """
 
 from __future__ import annotations
 
+import pytest
+
+from myasynstreamjoin_spark import session
 from myasynstreamjoin_spark.session import SESSION_CONFS, prepare_session
+
+CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 def test_prepare_session_applies_once_and_respects_overrides(spark):
@@ -52,3 +58,36 @@ def test_replay_state_partitions_rule(spark):
     assert replay_state_partitions(spark, 320 << 20) == min(cap, 5)
     assert replay_state_partitions(spark, 1 << 40) == cap        # 1 TB
     assert replay_state_partitions(spark, 0, floor=4) == 4
+
+
+def test_refused_conf_is_warned_not_swallowed(spark, monkeypatch):
+    """A static conf cannot be set on a running session: prepare_session
+    must name the key in a warning, and still apply the other confs."""
+    key = "spark.sql.warehouse.dir"
+    monkeypatch.setitem(session.SESSION_CONFS, key, "/nonexistent-warehouse")
+    tz = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz)
+    spark.conf.set(tz, "America/New_York")
+    try:
+        with pytest.warns(RuntimeWarning, match=key):
+            prepare_session(spark, force=True)
+        assert spark.conf.get(tz) == "UTC"
+    finally:
+        spark.conf.set(tz, prev)
+
+
+def test_checkpoint_manager_routes_to_filesystem_api(spark, tmp_path):
+    """Streaming checkpoints of a prepared session go through the
+    FileSystem-based manager, not the FileContext default that forks
+    `readlink` per rename on a local path."""
+    prepare_session(spark)
+    assert SESSION_CONFS[CKPT_MANAGER_KEY].endswith(
+        ".FileSystemBasedCheckpointFileManager"
+    )
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == SESSION_CONFS[CKPT_MANAGER_KEY]

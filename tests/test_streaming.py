@@ -185,3 +185,28 @@ def test_rocksdb_state_store_equivalence(spark, sf_dir, ripe_filter):
     }
     assert got == ripe_filter(batch)
     assert got
+
+
+def test_replay_checkpoints_are_removed(spark, sf_dir, tmp_path):
+    """A finite replay deletes the checkpoint dir it created once the
+    query stops, and keeps its result; a checkpoint_dir the caller
+    passed in is the caller's and stays."""
+    import glob
+
+    import __spark_entry__ as entry_mod
+
+    pattern = "/dev/shm/masj_ckpt_*"
+    before = set(glob.glob(pattern))
+    df = entry_mod.queries()["q_stream_min_count_window"](spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    assert set(glob.glob(pattern)) == before
+    assert df.count() > 0
+
+    ckpt = tmp_path / "ckpt"
+    got = run_stream_to_table(
+        stream_min_count_per_window(stream_events(spark, sf_dir), CFG),
+        spark,
+        checkpoint_dir=str(ckpt),
+    )
+    assert got.count() == df.count()
+    assert (ckpt / "offsets").is_dir() and (ckpt / "commits").is_dir()

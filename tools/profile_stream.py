@@ -44,29 +44,29 @@ def run_profiled(spark, make_df, state_partitions: int | None = 2) -> dict:
     df = make_df()
     t1 = time.perf_counter()
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    checkpoint = _replay_checkpoint_dir()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-    finally:
+    with _replay_checkpoint_dir() as checkpoint:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
         if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    t2 = time.perf_counter()
-    try:
-        q.processAllAvailable()
-        t3 = time.perf_counter()
-        progress = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        q.stop()
-    t4 = time.perf_counter()
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        try:
+            q = (
+                df.writeStream.outputMode("append")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", checkpoint)
+                .start()
+            )
+        finally:
+            if state_partitions is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+        t2 = time.perf_counter()
+        try:
+            q.processAllAvailable()
+            t3 = time.perf_counter()
+            progress = [json.loads(p.json) for p in q.recentProgress]
+        finally:
+            q.stop()
+        t4 = time.perf_counter()
     n = spark.table(name).count()
     t5 = time.perf_counter()
     batches = [
