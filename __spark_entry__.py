@@ -55,15 +55,18 @@ def _sql_views(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, str]:
 # entry: flagship query (stateful async join, SURVEY.md §7 phase 1)
 # --------------------------------------------------------------------
 
-def _stage_parquet_feed(frames, tmp: str) -> str:
+def _stage_parquet_feed(frames, name: str) -> tuple[DataFrame, str]:
     """Stage DataFrames as single-file parquet micro-batches under
-    ``{tmp}/feed`` with strictly increasing mtimes, so a
-    maxFilesPerTrigger=1 file stream replays them as ordered
-    micro-batches — the shared fixture recipe of every streaming twin
-    that feeds documents (neardup, decontamination)."""
+    ``{tmp}/feed`` (``tmp`` a new ``stream_{name}_`` temp dir) with
+    strictly increasing mtimes, and open a maxFilesPerTrigger=1 file
+    stream over them with the first frame's schema, which replays them
+    as ordered micro-batches — the shared fixture recipe of every
+    streaming twin. Returns ``(stream, tmp)``."""
     import os
     import shutil
+    import tempfile
 
+    tmp = tempfile.mkdtemp(prefix="stream_" + name + "_")
     feed = os.path.join(tmp, "feed")
     os.makedirs(feed)
     for i, frame in enumerate(frames):
@@ -77,7 +80,12 @@ def _stage_parquet_feed(frames, tmp: str) -> str:
         shutil.move(os.path.join(staging, part), dst)
         shutil.rmtree(staging)
         os.utime(dst, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
-    return feed
+    stream = (
+        frames[0].sparkSession.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+    return stream, tmp
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -780,7 +788,6 @@ def _q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream satisfies the same replayable oracle
     (streaming/neardup.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.neardup import (
         read_neardup_pairs,
@@ -791,18 +798,12 @@ def _q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_neardup_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             docs.where(F.col("doc_id") % 2 == 0),
             docs.where(F.col("doc_id") % 2 == 1),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "neardup",
     )
     run_stream_neardup(
         stream,
@@ -825,7 +826,6 @@ def _q_stream_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks union to EXACTLY the batch answer — shared DuckDB oracle
     (streaming/spanremove.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.spanremove import (
         read_clean_docs,
@@ -837,18 +837,12 @@ def _q_stream_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="stream_spans_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             docs.where(F.col("doc_id") <= mid),
             docs.where(F.col("doc_id") > mid),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "spans",
     )
     run_stream_remove_spans(
         stream,
@@ -866,7 +860,6 @@ def _q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark gram set at ingest; the per-batch clean sinks union to
     EXACTLY the batch operator's clean set (shared oracle)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.decontaminate import (
         read_clean_ids,
@@ -882,18 +875,12 @@ def _q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.where(F.col("source").isin(*bench_sources)).select(
         "doc_id", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_decon_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             train.where(F.col("doc_id") % 2 == 0),
             train.where(F.col("doc_id") % 2 == 1),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "decon",
     )
     run_stream_decontaminate(
         stream,
@@ -2309,7 +2296,6 @@ def _q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus min/max, the fixed-reference-range shape a production
     monitor deploys with."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.drift import (
         read_drift,
@@ -2336,14 +2322,8 @@ def _q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("w")
         .collect()
     ]
-    tmp = tempfile.mkdtemp(prefix="stream_drift_")
-    feed = _stage_parquet_feed(
-        [events.where(F.expr(f"ts DIV {week}L") == w) for w in wins], tmp
-    )
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    stream, tmp = _stage_parquet_feed(
+        [events.where(F.expr(f"ts DIV {week}L") == w) for w in wins], "drift"
     )
     out_dir = os.path.join(tmp, "drift")
     run_streaming_drift(
@@ -2455,7 +2435,6 @@ def _q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statistics are order-free integer sums, so ANY batch split
     satisfies the same oracle (streaming/export.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.export import (
         read_export_manifest,
@@ -2464,18 +2443,12 @@ def _q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="stream_export_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             docs.where(F.col("doc_id") % 2 == 0),
             docs.where(F.col("doc_id") % 2 == 1),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "export",
     )
     run_stream_export_shards(
         stream,
@@ -2498,7 +2471,6 @@ def _q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/pipeline_e2e.py documents the stage-by-stage
     stream ≡ batch argument)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.pipeline_e2e import (
         read_pipeline_manifest,
@@ -2516,18 +2488,12 @@ def _q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     half = docs.count() // 2  # ascending doc_id ranges (stream ≡ batch)
-    tmp = tempfile.mkdtemp(prefix="stream_pipeline_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             train.where(F.col("doc_id") < half),
             train.where(F.col("doc_id") >= half),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "pipeline",
     )
     work = os.path.join(tmp, "work")
     run_stream_pipeline_e2e(
@@ -3224,7 +3190,6 @@ def _q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/cdc.py). The final snapshot satisfies the SAME oracle as
     the batch MERGE — stream ≡ batch for the CDC path."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.cdc import (
         read_snapshot,
@@ -3251,13 +3216,7 @@ def _q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2).cast("long").alias("gen"),
     ).select(*data, "op", "gen")
 
-    tmp = tempfile.mkdtemp(prefix="stream_cdc_")
-    feed = _stage_parquet_feed((seed, g1, g2), tmp)
-    changes = (
-        spark.readStream.schema(seed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    changes, tmp = _stage_parquet_feed((seed, g1, g2), "cdc")
     run_cdc_stream(
         changes,
         snapshot_dir=os.path.join(tmp, "snap"),
@@ -3961,7 +3920,6 @@ def _q_stream_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares q_cdc_chunks's DuckDB oracle verbatim
     (streaming/cdcchunks.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.cdcchunks import (
         read_chunk_stats,
@@ -3973,18 +3931,12 @@ def _q_stream_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source"
     )
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="stream_cdc_chunks_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             docs.where(F.col("doc_id") <= mid),
             docs.where(F.col("doc_id") > mid),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "cdc_chunks",
     )
     run_stream_cdc_chunks(
         stream,
@@ -4002,7 +3954,6 @@ def _q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned sinks union to EXACTLY the batch answer — shared DuckDB
     oracle (streaming/linededup.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.linededup import (
         read_clean_docs,
@@ -4014,18 +3965,12 @@ def _q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="stream_lines_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             docs.where(F.col("doc_id") <= mid),
             docs.where(F.col("doc_id") > mid),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "lines",
     )
     run_stream_line_dedup(
         stream,
@@ -4045,7 +3990,6 @@ def _q_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANY batch arrangement, a stronger equality than the ascending-feed
     twins (streaming/sample.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.text import quality_score
     from myasynstreamjoin_spark.streaming.sample import (
@@ -4055,18 +3999,12 @@ def _q_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     scored = quality_score(tables.load_table(spark, sf_dir, "documents"))
-    tmp = tempfile.mkdtemp(prefix="stream_wrs_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             scored.where(F.col("doc_id") % 2 == 0),
             scored.where(F.col("doc_id") % 2 == 1),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(scored.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "wrs",
     )
     run_stream_weighted_sample(
         stream,
@@ -4259,7 +4197,6 @@ def _q_stream_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_stream_sketches.py) — and therefore shares its exact
     set-algebra oracle (streaming/sketches.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.sketches import (
         read_theta_algebra,
@@ -4270,18 +4207,12 @@ def _q_stream_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_theta_")
-    feed = _stage_parquet_feed(
+    stream, tmp = _stage_parquet_feed(
         (
             ev.where(F.col("user_id") % 2 == 0),
             ev.where(F.col("user_id") % 2 == 1),
         ),
-        tmp,
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+        "theta",
     )
     run_stream_theta_sketches(
         stream,
@@ -4323,7 +4254,6 @@ def _q_stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks union to EXACTLY the batch answer — shared oracle
     (streaming/debounce.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.debounce import (
         read_kept_events,
@@ -4335,14 +4265,8 @@ def _q_stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts", "user_id", "event_type", "event_id"
     )
     mid = ev.agg(F.expr("percentile(ts, 0.5)")).collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="stream_deb_")
-    feed = _stage_parquet_feed(
-        (ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)), tmp
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    stream, tmp = _stage_parquet_feed(
+        (ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)), "deb"
     )
     run_stream_debounce(
         stream,
@@ -4360,7 +4284,6 @@ def _q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     union to EXACTLY the batch answer — shared oracle
     (streaming/debounce.py::throttle_batch_with_state)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.debounce import (
         read_kept_events,
@@ -4372,14 +4295,8 @@ def _q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts", "user_id", "event_type", "event_id"
     )
     mid = ev.agg(F.expr("percentile(ts, 0.5)")).collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="stream_thr_")
-    feed = _stage_parquet_feed(
-        (ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)), tmp
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    stream, tmp = _stage_parquet_feed(
+        (ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)), "thr"
     )
     run_stream_throttle(
         stream,

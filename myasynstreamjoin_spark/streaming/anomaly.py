@@ -15,7 +15,7 @@ PER-BATCH directory ``{out}/b{N}`` in overwrite mode, so a redelivered
 batch replaces its own output instead of appending duplicates; the
 per-group totals are snapshotted to ``{state}/s{N}.json`` after each
 batch (atomic tmp+rename) and a replayed batch N reloads the newest
-snapshot BELOW N — the same pre-N-base rule as ``streaming/cdc.py``.
+snapshot BELOW N — the pre-N-base rule of ``streaming/commits.py``.
 A restarted monitor therefore resumes its baselines instead of
 cold-starting.
 
@@ -26,52 +26,23 @@ the sink, never in the driver.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _load_state_below(state_dir: str, batch_id: int) -> dict:
-    best, state = None, {}
-    if not os.path.isdir(state_dir):
-        return state
-    for name in os.listdir(state_dir):
-        if not (name.startswith("s") and name.endswith(".json")):
-            continue
-        try:
-            v = int(name[1:-5])
-        except ValueError:
-            continue
-        if v < batch_id and (best is None or v > best):
-            best = v
-    if best is not None:
-        with open(os.path.join(state_dir, f"s{best}.json")) as f:
-            state = {k: tuple(v) for k, v in json.load(f).items()}
-    return state
-
-
-def _save_state(state_dir: str, batch_id: int, totals: dict) -> None:
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, f".s{batch_id}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({k: list(v) for k, v in totals.items()}, f)
-    os.replace(tmp, os.path.join(state_dir, f"s{batch_id}.json"))
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    load_snapshot_below,
+    read_committed_batches,
+    save_snapshot,
+)
 
 
 def read_flagged(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """All flagged rows across batches, or None if nothing flagged."""
-    if not os.path.isdir(out_dir):
-        return None
-    dirs = [
-        os.path.join(out_dir, d)
-        for d in os.listdir(out_dir)
-        if d.startswith("b")
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    """All flagged rows across committed batches, or None if nothing
+    flagged."""
+    return read_committed_batches(spark, out_dir)
 
 
 def run_streaming_anomalies(
@@ -101,7 +72,8 @@ def run_streaming_anomalies(
             # first batch of this incarnation, or a replay: resume the
             # baselines from the newest snapshot BELOW this batch
             totals.clear()
-            totals.update(_load_state_below(sdir, bid))
+            snap = load_snapshot_below(sdir, bid) or {}
+            totals.update({g: tuple(t) for g, t in snap.items()})
         bspark = batch_df.sparkSession
         xq = F.round(F.col(value_col) * F.lit(unit)).cast("decimal(38,0)")
         batch = batch_df.select(group_col, id_col, value_col, xq.alias("__x"))
@@ -153,17 +125,8 @@ def run_streaming_anomalies(
             totals[r[group_col]] = (
                 n0 + int(r["n"]), s0 + int(r["s"]), ss0 + int(r["ss"])
             )
-        _save_state(sdir, bid, totals)
+        save_snapshot(sdir, bid, totals)
         last_applied[0] = bid
 
-    q = (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(events, checkpoint_dir, process)
     return totals

@@ -5,11 +5,10 @@ of :mod:`myasynstreamjoin_spark.operators.cdc`).
 
 Snapshot layout: ``{snapshot_dir}/v{batch_id}`` per applied micro-batch;
 the live table is the highest version. Each ``foreachBatch`` merges the
-batch into the LATEST VERSION BELOW ITS OWN BATCH ID — that base choice
-is what makes replays idempotent: if batch N is re-delivered after a
-crash, it re-reads the same pre-N base and overwrites ``v{N}`` with the
-identical result (exactly-once snapshots on top of at-least-once batch
-delivery).
+batch into the newest version below its own batch id (the pre-N-base
+rule of ``streaming/commits.py``), so a batch re-delivered after a crash
+overwrites ``v{N}`` with the identical result (exactly-once snapshots on
+top of at-least-once batch delivery).
 
 Ordering semantics: the change LOG's arrival order is the order of
 authority across batches (standard for CDC feeds); ``order_cols``
@@ -28,57 +27,22 @@ is orthogonal to the merge semantics tested here).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 from myasynstreamjoin_spark.operators.cdc import cdc_apply
-
-_VERSION_RE = re.compile(r"^v(\d+)$")
-
-
-def replay_base_version(snapshot_dir: str, batch_id: int) -> int | None:
-    """The version a (possibly replayed) micro-batch must rebuild
-    against: the highest committed version STRICTLY BELOW its own
-    batch id. On first delivery no version ≥ batch_id exists yet, so
-    this is simply the latest; on redelivery it skips the batch's own
-    (possibly half-written) version and lands on the state the batch
-    originally saw — the one call that replaces the old two-step
-    "latest ≤ bid, fall back if it IS bid" dance (provably equivalent:
-    the fallback fired exactly when the max ≤ bid was bid itself, and
-    both paths then return the max < bid). Shared by the CDC,
-    near-dup, and span-removal streams."""
-    return latest_version(snapshot_dir, below=int(batch_id))
-
-
-def latest_version(snapshot_dir: str, below: int | None = None) -> int | None:
-    """Highest committed snapshot version (optionally below a batch id).
-
-    A version is committed iff Spark's ``_SUCCESS`` marker exists —
-    a crash mid-write leaves no marker and the replay overwrites it.
-    """
-    if not os.path.isdir(snapshot_dir):
-        return None
-    best = None
-    for name in os.listdir(snapshot_dir):
-        m = _VERSION_RE.match(name)
-        if not m:
-            continue
-        v = int(m.group(1))
-        if below is not None and v >= below:
-            continue
-        if not os.path.exists(os.path.join(snapshot_dir, name, "_SUCCESS")):
-            continue
-        best = v if best is None or v > best else best
-    return best
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    is_committed,
+    read_latest_version,
+    read_replay_base,
+    version_dirs,
+)
 
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
     """The live table: the highest committed version, or None."""
-    v = latest_version(snapshot_dir)
-    if v is None:
-        return None
-    return spark.read.parquet(os.path.join(snapshot_dir, f"v{v}"))
+    return read_latest_version(spark, snapshot_dir)
 
 
 def run_cdc_stream(
@@ -100,16 +64,10 @@ def run_cdc_stream(
     ]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base_v = replay_base_version(snapshot_dir, batch_id)
-        if base_v is None:
-            base = spark.createDataFrame(
-                [], batch_df.select(*data_cols).schema
-            )
-        else:
-            base = spark.read.parquet(
-                os.path.join(snapshot_dir, f"v{base_v}")
-            )
+        base = read_replay_base(
+            batch_df.sparkSession, snapshot_dir, batch_id,
+            batch_df.select(*data_cols).schema,
+        )
         merged = cdc_apply(
             base, batch_df, keys=keys, order_cols=order_cols, op_col=op_col
         )
@@ -117,16 +75,7 @@ def run_cdc_stream(
             os.path.join(snapshot_dir, f"v{int(batch_id)}")
         )
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(changes, checkpoint_dir, apply_batch)
 
 
 def vacuum_snapshots(snapshot_dir: str, keep: int = 2) -> list[int]:
@@ -153,40 +102,11 @@ def vacuum_snapshots(snapshot_dir: str, keep: int = 2) -> list[int]:
             "keep must be >= 2: the newest version's replay base must "
             "survive vacuum (see run_cdc_stream's idempotency contract)"
         )
-    if not os.path.isdir(snapshot_dir):
-        return []
-    committed = []
+    dirs = version_dirs(snapshot_dir)
+    live = [d for d in dirs if is_committed(d[1])][-keep:]
     removed = []
-    for name in os.listdir(snapshot_dir):
-        m = _VERSION_RE.match(name)
-        if not m:
-            continue
-        v = int(m.group(1))
-        if os.path.exists(os.path.join(snapshot_dir, name, "_SUCCESS")):
-            committed.append(v)
-        else:
-            shutil.rmtree(os.path.join(snapshot_dir, name))
+    for v, path in dirs:
+        if (v, path) not in live:
+            shutil.rmtree(path)
             removed.append(v)
-    for v in sorted(committed)[:-keep]:
-        shutil.rmtree(os.path.join(snapshot_dir, f"v{v}"))
-        removed.append(v)
-    return sorted(removed)
-
-
-def drain_foreach_batch(docs, checkpoint_dir: str, process) -> None:
-    """The shared drain loop of every accumulated-index / stateful
-    foreachBatch stream in this package: run the (bounded, for tests)
-    stream to exhaustion and stop. Factored so the replay-safety
-    contract (checkpointLocation + processAllAvailable + stop in a
-    finally) lives in one place; the older stream modules predate it
-    and still inline the identical block."""
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    return removed

@@ -13,9 +13,9 @@ Per micro-batch (foreachBatch):
 2. fold the batch's per-(source, chunk_hash) counts into the index
    version (old ∪ new with counts ADDED — a full-outer merge);
 3. advance the per-source doc-count tally the same way;
-4. versioning uses the pre-N-base replay rule shared with the
-   CDC/near-dup/span/line streams, so a redelivered batch rebuilds
-   against the state it originally saw.
+4. versioning uses the pre-N-base replay rule of
+   `streaming/commits.py`, so a redelivered batch rebuilds against
+   the state it originally saw.
 
 Chunk-count accumulation is COMMUTATIVE — unlike the line/span twins
 (first-seen-wins needs ascending arrival to equal the batch answer),
@@ -38,8 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.blocks import scoped_batch
-from myasynstreamjoin_spark.streaming.cdc import (
+from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
+    latest_version,
+    mark_committed,
     replay_base_version,
 )
 
@@ -109,12 +111,9 @@ def fold_batch_chunks(
         vdir = os.path.join(index_dir, f"v{bid}")
         merged.write.mode("overwrite").parquet(os.path.join(vdir, "chunks"))
         merged_docs.write.mode("overwrite").parquet(os.path.join(vdir, "docs"))
-        # the version's OWN commit marker goes last — the shared
-        # versioning helpers treat a v{N} without a root-level
-        # _SUCCESS as uncommitted (each sub-dataset's marker only
-        # covers itself; a crash between the two writes must leave
-        # the version invisible to replay_base_version)
-        open(os.path.join(vdir, "_SUCCESS"), "w").close()
+        # a crash between the two writes must leave the version
+        # invisible to replay_base_version
+        mark_committed(vdir)
 
     return commit
 
@@ -146,8 +145,6 @@ def read_chunk_stats(spark: SparkSession, work_dir: str) -> DataFrame | None:
     column-for-column the batch ``cdc_dedup_stats`` schema, and (by
     commutativity of count folding) value-identical to running the
     batch operator over everything the stream has ingested."""
-    from myasynstreamjoin_spark.streaming.cdc import latest_version
-
     index_dir = os.path.join(work_dir, "chunks")
     v = latest_version(index_dir)
     if v is None:

@@ -16,9 +16,10 @@ earlier batch. Under ascending event-time feeds the per-batch sinks
 union to EXACTLY the batch `debounce_events` answer, which is how
 `q_stream_debounce` shares `q_debounce`'s oracle.
 
-State versioning is the shared pre-N-base replay rule; at 100 TB the
-state is |active keys| narrow rows and each batch pays one exchange on
-the key — the same shape as the batch op.
+State versioning is the pre-N-base replay rule of
+`streaming/commits.py`; at 100 TB the state is |active keys| narrow
+rows and each batch pays one exchange on the key — the same shape as
+the batch op.
 """
 
 from __future__ import annotations
@@ -40,7 +41,11 @@ from myasynstreamjoin_spark.blocks import (
     scoped_batch,
 )
 
-from myasynstreamjoin_spark.streaming.cdc import drain_foreach_batch, replay_base_version
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_committed_batches,
+    read_replay_base,
+)
 
 
 def debounce_batch_with_state(
@@ -63,12 +68,10 @@ def debounce_batch_with_state(
     bspark = batch_df.sparkSession
     pre_batch = persisted_ids(bspark)
 
-    base_v = replay_base_version(state_dir, bid)
-    state_schema = "user_id long, event_type string, last_ts_us long"
-    if base_v is not None:
-        state = bspark.read.parquet(os.path.join(state_dir, f"v{base_v}"))
-    else:
-        state = bspark.createDataFrame([], state_schema)
+    state = read_replay_base(
+        bspark, state_dir, bid,
+        "user_id long, event_type string, last_ts_us long",
+    )
 
     # seed rows: pseudo-events at the key's last raw arrival, with an
     # event_id below every real id so ties at the same ts order the
@@ -142,18 +145,7 @@ def run_stream_debounce(
 
 def read_kept_events(spark: SparkSession, work_dir: str) -> DataFrame | None:
     """Union of the COMMITTED (_SUCCESS) per-batch survivor sinks."""
-    kept_dir = os.path.join(work_dir, "kept")
-    if not os.path.isdir(kept_dir):
-        return None
-    dirs = [
-        os.path.join(kept_dir, d)
-        for d in os.listdir(kept_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(kept_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "kept"))
 
 
 def throttle_batch_with_state(
@@ -175,12 +167,10 @@ def throttle_batch_with_state(
     bspark = batch_df.sparkSession
     pre_batch = persisted_ids(bspark)
 
-    base_v = replay_base_version(state_dir, bid)
-    state_schema = "user_id long, event_type string, last_bucket long"
-    if base_v is not None:
-        state = bspark.read.parquet(os.path.join(state_dir, f"v{base_v}"))
-    else:
-        state = bspark.createDataFrame([], state_schema)
+    state = read_replay_base(
+        bspark, state_dir, bid,
+        "user_id long, event_type string, last_bucket long",
+    )
 
     survivors = throttle_events(batch_df, window_us)
     kept = (

@@ -10,8 +10,7 @@ shingle the batch into word 8-grams, semi-join against the broadcast
 bench gram set (computed ONCE, driver-held by reference through the
 closure, checkpointed so micro-batches don't recompute it), and append
 the clean doc ids to a per-batch overwrite sink — replay-idempotent
-exactly like the other foreachBatch sinks (streaming/cdc.py,
-streaming/neardup.py). The union over batches equals the batch
+under the commit protocol of streaming/commits.py. The union over batches equals the batch
 operator's answer by construction: decontamination against a static
 set is embarrassingly batch-parallel (no cross-batch state at all,
 unlike near-dup's accumulated index).
@@ -29,7 +28,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
 from myasynstreamjoin_spark.blocks import scoped_batch
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_committed_batches,
+)
 
 
 def run_stream_decontaminate(
@@ -72,34 +76,11 @@ def run_stream_decontaminate(
             os.path.join(clean_dir, f"b{int(batch_id)}")
         )
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(docs, checkpoint_dir, process)
 
 
 def read_clean_ids(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    clean_dir = os.path.join(work_dir, "clean")
-    if not os.path.isdir(clean_dir):
-        return None
-    # only COMMITTED batch dirs (Spark's _SUCCESS marker), mirroring
-    # spanremove/export's convention — a crash mid-write leaves a
-    # half-written b{N} whose partial rows the replay will rewrite
-    dirs = [
-        os.path.join(clean_dir, d)
-        for d in os.listdir(clean_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(clean_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "clean"))
 
 
 def run_stream_semantic_decontaminate(
@@ -147,28 +128,8 @@ def run_stream_semantic_decontaminate(
             os.path.join(scored_dir, f"b{int(batch_id)}")
         )
 
-    q = (
-        vecs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(vecs, checkpoint_dir, process)
 
 
 def read_scored_vecs(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    scored_dir = os.path.join(work_dir, "scored")
-    if not os.path.isdir(scored_dir):
-        return None
-    dirs = [
-        os.path.join(scored_dir, d)
-        for d in os.listdir(scored_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(scored_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "scored"))

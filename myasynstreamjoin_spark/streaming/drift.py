@@ -17,8 +17,7 @@ Replay safety (foreachBatch is at-least-once): per-batch output dirs
 ``{out}/b{N}`` in overwrite mode; the predecessor histogram (one
 n_buckets-long integer list) snapshots to ``{state}/s{N}.json``
 (atomic tmp+rename) and a replayed batch N reloads the newest snapshot
-BELOW N — the pre-N-base rule shared with streaming/anomaly.py and
-streaming/cdc.py.
+BELOW N — the pre-N-base rule of streaming/commits.py.
 
 Bounded state, unbounded stream: n_buckets integers per snapshot.
 The per-batch bucket histogram is computed distributed (groupBy on the
@@ -30,7 +29,6 @@ Python float arithmetic, so no libm-vs-JVM ulp risk.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,50 +38,18 @@ from myasynstreamjoin_spark.operators.stats import (
     psi_close_expr,
     psi_nano_term,
 )
-
-
-def _load_prev_below(state_dir: str, batch_id: int) -> tuple | None:
-    best = None
-    if not os.path.isdir(state_dir):
-        return None
-    for name in os.listdir(state_dir):
-        if not (name.startswith("s") and name.endswith(".json")):
-            continue
-        try:
-            v = int(name[1:-5])
-        except ValueError:
-            continue
-        if v < batch_id and (best is None or v > best):
-            best = v
-    if best is None:
-        return None
-    with open(os.path.join(state_dir, f"s{best}.json")) as f:
-        d = json.load(f)
-    return d["win"], d["counts"]
-
-
-def _save_state(state_dir: str, batch_id: int, win, counts: list) -> None:
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, f".s{batch_id}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"win": win, "counts": counts}, f)
-    os.replace(tmp, os.path.join(state_dir, f"s{batch_id}.json"))
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    load_snapshot_below,
+    read_committed_batches,
+    save_snapshot,
+)
 
 
 def read_drift(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """All drift rows across COMMITTED batches (the ``_SUCCESS`` rule),
-    or None if nothing scored yet."""
-    if not os.path.isdir(out_dir):
-        return None
-    dirs = [
-        os.path.join(out_dir, d)
-        for d in sorted(os.listdir(out_dir))
-        if d.startswith("b")
-        and os.path.exists(os.path.join(out_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    """All drift rows across committed batches, or None if nothing
+    scored yet."""
+    return read_committed_batches(spark, out_dir)
 
 
 def run_streaming_drift(
@@ -122,7 +88,10 @@ def run_streaming_drift(
         if last_applied[0] != bid - 1:
             # first batch of this incarnation, or a replay: resume the
             # predecessor histogram from the newest snapshot BELOW bid
-            prev_state[0] = _load_prev_below(sdir, bid)
+            snap = load_snapshot_below(sdir, bid)
+            prev_state[0] = (
+                None if snap is None else (snap["win"], snap["counts"])
+            )
         bspark = batch_df.sparkSession
         xq = F.round(F.col(value_col) * F.lit(unit)).cast("long")
         rows = (
@@ -200,17 +169,8 @@ def run_streaming_drift(
             )
         # per-batch overwrite → replays replace, never duplicate
         out.write.mode("overwrite").parquet(os.path.join(out_dir, f"b{bid}"))
-        _save_state(sdir, bid, cur_win, cur_counts)
+        save_snapshot(sdir, bid, {"win": cur_win, "counts": cur_counts})
         prev_state[0] = (cur_win, cur_counts)
         last_applied[0] = bid
 
-    q = (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(events, checkpoint_dir, process)

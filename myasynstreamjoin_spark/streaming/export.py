@@ -7,8 +7,8 @@ export_shards` / `shard_manifest`).
 Per micro-batch (foreachBatch):
 1. rows append as a per-batch OVERWRITE directory tree
    ``data/b{N}/shard=K/`` — replay rewrites b{N} in place, so
-   redelivery never duplicates rows (same idempotence recipe as every
-   foreachBatch sink here);
+   redelivery never duplicates rows (the commit protocol of
+   `streaming/commits.py`);
 2. the manifest advances one version: ``manifest/v{N}`` = the replay
    base version (+) the batch's own `shard_manifest` delta. All three
    manifest statistics are ORDER-FREE integer sums (doc count, token
@@ -31,9 +31,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from myasynstreamjoin_spark.blocks import scoped_batch
 
-from myasynstreamjoin_spark.streaming.cdc import latest_version, replay_base_version
+from myasynstreamjoin_spark.blocks import scoped_batch
+from myasynstreamjoin_spark.streaming.commits import (
+    committed_batch_dirs,
+    drain_foreach_batch,
+    read_latest_version,
+    replay_base_version,
+)
 
 
 def run_stream_export_shards(
@@ -82,42 +87,18 @@ def run_stream_export_shards(
             os.path.join(man_dir, f"v{bid}")
         )
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(docs, checkpoint_dir, process)
 
 
 def read_export_manifest(
     spark: SparkSession, work_dir: str
 ) -> DataFrame | None:
     """The latest committed manifest version."""
-    man_dir = os.path.join(work_dir, "manifest")
-    v = latest_version(man_dir)
-    if v is None:
-        return None
-    return spark.read.parquet(os.path.join(man_dir, f"v{v}"))
+    return read_latest_version(spark, os.path.join(work_dir, "manifest"))
 
 
 def read_exported_docs(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    data_dir = os.path.join(work_dir, "data")
-    if not os.path.isdir(data_dir):
-        return None
-    # only COMMITTED batch dirs (Spark's _SUCCESS marker), mirroring
-    # latest_version's convention — a crash mid-write leaves a
-    # half-written b{N} whose partial rows the replay will rewrite
-    dirs = sorted(
-        os.path.join(data_dir, d)
-        for d in os.listdir(data_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(data_dir, d, "_SUCCESS"))
-    )
+    dirs = committed_batch_dirs(os.path.join(work_dir, "data"))
     if not dirs:
         return None
     # one read per batch dir, unioned: a multi-root read would refuse

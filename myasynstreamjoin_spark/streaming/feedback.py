@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
+from myasynstreamjoin_spark.streaming.commits import drain_foreach_batch
 
 
 def adaptive_count_stream(
@@ -82,15 +83,7 @@ def adaptive_count_stream(
     with tempfile.TemporaryDirectory(
         prefix="masj_fb_", ignore_cleanup_errors=True
     ) as checkpoint:
-        q = (
-            kv.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain_foreach_batch(kv, checkpoint, process)
 
     if not running:
         merged = spark.createDataFrame([], "key string, cnt long")

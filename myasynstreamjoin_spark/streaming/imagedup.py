@@ -12,9 +12,9 @@ Per micro-batch (foreachBatch):
    batch's within-batch band collisions;
 3. exact bit_count(xor) verification on candidates only; pairs within
    the radius land in a per-batch OVERWRITE sink (replay-idempotent);
-4. the hash index advances one version with the same pre-N-base
-   versioning as `streaming/cdc.py`, so redelivered batches rebuild
-   against the index state they originally saw.
+4. the hash index advances one version with the pre-N-base
+   versioning of `streaming/commits.py`, so redelivered batches
+   rebuild against the index state they originally saw.
 
 Pairs are emitted once, when the LATER image arrives (a < b by id);
 the union over batches equals the batch operator's pair set for any
@@ -33,9 +33,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from myasynstreamjoin_spark.blocks import scoped_batch
 
-from myasynstreamjoin_spark.streaming.cdc import replay_base_version
+from myasynstreamjoin_spark.blocks import scoped_batch
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_committed_batches,
+    read_replay_base,
+)
 
 
 def run_stream_image_neardup(
@@ -68,13 +72,9 @@ def run_stream_image_neardup(
             batch_df.localCheckpoint(eager=True)
         ).localCheckpoint(eager=True)
 
-        base_v = replay_base_version(hash_dir, bid)
-        if base_v is not None:
-            old_hashed = bspark.read.parquet(
-                os.path.join(hash_dir, f"v{base_v}")
-            )
-        else:
-            old_hashed = bspark.createDataFrame([], new_hashed.schema)
+        old_hashed = read_replay_base(
+            bspark, hash_dir, bid, new_hashed.schema
+        )
 
         new_bands = _ahash_band_rows(new_hashed, nb)
         old_bands = _ahash_band_rows(old_hashed, nb)
@@ -121,16 +121,7 @@ def run_stream_image_neardup(
             os.path.join(hash_dir, f"v{bid}")
         )
 
-    q = (
-        media.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(media, checkpoint_dir, process)
 
 
 def read_image_neardup_pairs(
@@ -138,15 +129,4 @@ def read_image_neardup_pairs(
 ) -> DataFrame | None:
     """Union of the COMMITTED per-batch pair sinks (the ``_SUCCESS``
     rule — a crash mid-batch-write must not leak partial pairs)."""
-    pairs_dir = os.path.join(work_dir, "pairs")
-    if not os.path.isdir(pairs_dir):
-        return None
-    dirs = [
-        os.path.join(pairs_dir, d)
-        for d in os.listdir(pairs_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(pairs_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "pairs"))

@@ -18,8 +18,8 @@ Per micro-batch (foreachBatch):
 4. reassemble via the shared `_line_reassemble` into a per-batch
    overwrite sink (replay-idempotent);
 5. the index advances one version (old ∪ distinct new lines) with the
-   pre-N-base versioning shared with CDC/near-dup/span streams, so a
-   redelivered batch rebuilds against the state it originally saw.
+   pre-N-base versioning of `streaming/commits.py`, so a redelivered
+   batch rebuilds against the state it originally saw.
 
 When batches arrive in ascending doc_id ranges, first-seen order
 equals the batch operator's (doc_id, line_no) order and the per-batch
@@ -40,7 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.blocks import scoped_batch
-from myasynstreamjoin_spark.streaming.cdc import drain_foreach_batch, replay_base_version
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_committed_batches,
+    read_replay_base,
+)
 
 
 def dedup_batch_against_lines(
@@ -84,12 +88,8 @@ def dedup_batch_against_lines(
         "line", "doc_id", "line_no"
     )
 
-    base_v = replay_base_version(index_dir, bid)
     new_index = cand.select("line").distinct()
-    if base_v is not None:
-        old_index = bspark.read.parquet(os.path.join(index_dir, f"v{base_v}"))
-    else:
-        old_index = bspark.createDataFrame([], new_index.schema)
+    old_index = read_replay_base(bspark, index_dir, bid, new_index.schema)
 
     cross_drops = cand.join(old_index, "line", "left_semi").select(
         "doc_id", "line_no"
@@ -156,15 +156,4 @@ def run_stream_line_dedup(
 
 def read_clean_docs(spark: SparkSession, work_dir: str) -> DataFrame | None:
     """Union of the COMMITTED (_SUCCESS) per-batch cleaned sinks."""
-    clean_dir = os.path.join(work_dir, "clean")
-    if not os.path.isdir(clean_dir):
-        return None
-    dirs = [
-        os.path.join(clean_dir, d)
-        for d in os.listdir(clean_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(clean_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "clean"))

@@ -12,7 +12,7 @@ Per micro-batch (foreachBatch):
 3. exact-Jaccard verification on candidates only, pairs ≥ threshold
    land in a per-batch overwrite sink (replay-idempotent);
 4. the index advances one version (bands + shingles), written with the
-   same pre-N-base versioning as ``streaming/cdc.py``, so redelivered
+   pre-N-base versioning of ``streaming/commits.py``, so redelivered
    batches rebuild against the index state they originally saw.
 
 Pairs are emitted once, when the LATER document arrives, oriented
@@ -32,9 +32,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from myasynstreamjoin_spark.blocks import scoped_batch
 
-from myasynstreamjoin_spark.streaming.cdc import replay_base_version
+from myasynstreamjoin_spark.blocks import scoped_batch
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_committed_batches,
+    replay_base_version,
+)
 
 
 def _band_rows(
@@ -154,31 +158,8 @@ def run_stream_neardup(
             os.path.join(sh_dir, f"v{bid}")
         )
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(docs, checkpoint_dir, process)
 
 
 def read_neardup_pairs(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    pairs_dir = os.path.join(work_dir, "pairs")
-    if not os.path.isdir(pairs_dir):
-        return None
-    # only COMMITTED batch sinks (the _SUCCESS rule shared by every
-    # foreachBatch reader here) — a crash mid-write must not leak
-    # partial pairs into the union
-    dirs = [
-        os.path.join(pairs_dir, d)
-        for d in os.listdir(pairs_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(pairs_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "pairs"))

@@ -47,9 +47,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.streaming.cdc import (
-    latest_version,
-    replay_base_version,
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_latest_version,
+    read_replay_base,
 )
 
 _STATE_SCHEMA = (
@@ -148,13 +149,7 @@ def run_stream_pipeline_e2e(
             F.sum("h").alias("checksum"),
             F.max_by("nt", "doc_id").alias("last_n"),
         )
-        man_base_v = replay_base_version(man_dir, bid)
-        if man_base_v is not None:
-            base = bspark.read.parquet(
-                os.path.join(man_dir, f"v{man_base_v}")
-            )
-        else:
-            base = bspark.createDataFrame([], _STATE_SCHEMA)
+        base = read_replay_base(bspark, man_dir, bid, _STATE_SCHEMA)
         b, d = base.alias("b"), delta.alias("d")
         z = F.lit(0).cast("long")
         merged = b.join(d, "shard", "full").select(
@@ -180,16 +175,7 @@ def run_stream_pipeline_e2e(
         # kernel's snapshot (myasynstreamjoin_spark/blocks.py).
         commit_index()
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(docs, checkpoint_dir, process)
 
 
 def read_pipeline_manifest(
@@ -199,11 +185,9 @@ def read_pipeline_manifest(
     (shard, n_docs, n_tokens, n_seqs, checksum). ``budget`` is applied
     HERE — the folded state is budget-independent (see module
     docstring), so one run answers any packing budget at read time."""
-    man_dir = os.path.join(work_dir, "manifest")
-    v = latest_version(man_dir)
-    if v is None:
+    state = read_latest_version(spark, os.path.join(work_dir, "manifest"))
+    if state is None:
         return None
-    state = spark.read.parquet(os.path.join(man_dir, f"v{v}"))
     return state.select(
         "shard",
         "n_docs",

@@ -14,10 +14,9 @@ an UNORDERED (hash) split.
 
 State: one parquet version per batch, ≤ k rows each (schema = input
 columns + the __wkey the merge orders by), with the pre-N-base replay
-versioning shared with the CDC/near-dup/span/line streams. At 100 TB
-the reservoir is k rows — driver-tiny; the per-batch cost is the
-batch's own scan + a k-row TakeOrderedAndProject, no corpus state at
-all.
+versioning of `streaming/commits.py`. At 100 TB the reservoir is k
+rows — driver-tiny; the per-batch cost is the batch's own scan + a
+k-row TakeOrderedAndProject, no corpus state at all.
 """
 
 from __future__ import annotations
@@ -27,7 +26,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.streaming.cdc import drain_foreach_batch, latest_version, replay_base_version
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_latest_version,
+    read_replay_base,
+)
 
 
 def sample_batch_with_reservoir(
@@ -52,11 +55,7 @@ def sample_batch_with_reservoir(
         (w > 0) & ~F.isnan(w.cast("double"))
     ).withColumn("__wkey", wrs_key(weight_col, id_col))
 
-    base_v = replay_base_version(state_dir, bid)
-    if base_v is not None:
-        old = bspark.read.parquet(os.path.join(state_dir, f"v{base_v}"))
-    else:
-        old = bspark.createDataFrame([], cand.schema)
+    old = read_replay_base(bspark, state_dir, bid, cand.schema)
 
     merged = (
         old.unionByName(cand)
@@ -97,10 +96,5 @@ def run_stream_weighted_sample(
 def read_sample(spark: SparkSession, work_dir: str) -> DataFrame | None:
     """The current sample: the LATEST committed reservoir version,
     with the merge key dropped (schema = the sampled input rows)."""
-    state_dir = os.path.join(work_dir, "reservoir")
-    v = latest_version(state_dir)
-    if v is None:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, f"v{v}")).drop(
-        "__wkey"
-    )
+    res = read_latest_version(spark, os.path.join(work_dir, "reservoir"))
+    return None if res is None else res.drop("__wkey")

@@ -6,10 +6,9 @@ accumulated state answers exactly what a batch sketch over all rows
 seen so far would, under ANY batch split: no ascending-feed caveat.
 
 State per group is ONE row (sketch binary + row count), versioned with
-the pre-N-base replay rule shared by every accumulated-index stream in
-this package; at any corpus size the state is |groups| KB-sized rows —
-driver-tiny — and each micro-batch costs its own scan plus a
-|groups|-row merge.
+the pre-N-base replay rule of ``streaming/commits.py``; at any corpus
+size the state is |groups| KB-sized rows — driver-tiny — and each
+micro-batch costs its own scan plus a |groups|-row merge.
 
 Theta state additionally stays EXACT below the sketch threshold, so
 the streamed audience algebra equals the batch operator's answer
@@ -24,7 +23,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.streaming.cdc import drain_foreach_batch, latest_version, replay_base_version
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_latest_version,
+    read_replay_base,
+)
 
 
 def _merge_kll(sketches_col):
@@ -60,11 +63,7 @@ def update_batch_quantile_sketches(
             F.count("*").cast("long").alias("n"),
         )
     )
-    base_v = replay_base_version(state_dir, bid)
-    if base_v is not None:
-        old = bspark.read.parquet(os.path.join(state_dir, f"v{base_v}"))
-    else:
-        old = bspark.createDataFrame([], fresh.schema)
+    old = read_replay_base(bspark, state_dir, bid, fresh.schema)
     merged = (
         old.unionByName(fresh)
         .groupBy("grp")
@@ -111,11 +110,9 @@ def read_quantile_estimates(
 ) -> DataFrame | None:
     """Per-group quantile estimates from the LATEST committed KLL
     state — the any-time answer the accumulated bank exists for."""
-    state_dir = os.path.join(work_dir, "kll")
-    v = latest_version(state_dir)
-    if v is None:
+    st = read_latest_version(spark, os.path.join(work_dir, "kll"))
+    if st is None:
         return None
-    st = spark.read.parquet(os.path.join(state_dir, f"v{v}"))
     cols = [
         F.kll_sketch_get_quantile_double(F.col("sketch"), F.lit(q)).alias(
             f"est_q{int(q * 100)}"
@@ -146,11 +143,7 @@ def update_batch_theta_sketches(
             ).alias("sketch")
         )
     )
-    base_v = replay_base_version(state_dir, bid)
-    if base_v is not None:
-        old = bspark.read.parquet(os.path.join(state_dir, f"v{base_v}"))
-    else:
-        old = bspark.createDataFrame([], fresh.schema)
+    old = read_replay_base(bspark, state_dir, bid, fresh.schema)
     merged = (
         old.unionByName(fresh)
         .groupBy("grp")
@@ -191,11 +184,9 @@ def read_theta_algebra(
 ) -> DataFrame | None:
     """Audience set algebra from the LATEST committed Theta state —
     the same output shape as the batch `audience_set_algebra`."""
-    state_dir = os.path.join(work_dir, "theta")
-    v = latest_version(state_dir)
-    if v is None:
+    sk = read_latest_version(spark, os.path.join(work_dir, "theta"))
+    if sk is None:
         return None
-    sk = spark.read.parquet(os.path.join(state_dir, f"v{v}"))
     a = sk.select(F.col("grp").alias("a"), F.col("sketch").alias("__sa"))
     b = sk.select(F.col("grp").alias("b"), F.col("sketch").alias("__sb"))
     want = spark.createDataFrame(pairs, "a string, b string")
@@ -243,11 +234,7 @@ def update_batch_hll_sketches(
             ).alias("sketch")
         )
     )
-    base_v = replay_base_version(state_dir, bid)
-    if base_v is not None:
-        old = bspark.read.parquet(os.path.join(state_dir, f"v{base_v}"))
-    else:
-        old = bspark.createDataFrame([], fresh.schema)
+    old = read_replay_base(bspark, state_dir, bid, fresh.schema)
     merged = (
         old.unionByName(fresh)
         .groupBy("grp")
@@ -286,11 +273,10 @@ def read_distinct_estimates(
 ) -> DataFrame | None:
     """Per-group distinct-count estimates from the LATEST committed
     HLL state."""
-    state_dir = os.path.join(work_dir, "hll")
-    v = latest_version(state_dir)
-    if v is None:
+    st = read_latest_version(spark, os.path.join(work_dir, "hll"))
+    if st is None:
         return None
-    return spark.read.parquet(os.path.join(state_dir, f"v{v}")).select(
+    return st.select(
         "grp",
         F.hll_sketch_estimate("sketch").cast("long").alias("est_distinct"),
     )

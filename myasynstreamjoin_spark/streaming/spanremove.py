@@ -21,7 +21,7 @@ Per micro-batch (foreachBatch):
    (`_span_reassemble`) into a per-batch overwrite sink
    (replay-idempotent);
 5. the index advances one version (old ∪ distinct new grams), with
-   the same pre-N-base versioning as `streaming/cdc.py`, so a
+   the pre-N-base versioning of `streaming/commits.py`, so a
    redelivered batch rebuilds against the index state it originally
    saw.
 
@@ -44,7 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.blocks import scoped_batch
-from myasynstreamjoin_spark.streaming.cdc import replay_base_version
+from myasynstreamjoin_spark.streaming.commits import (
+    drain_foreach_batch,
+    read_committed_batches,
+    read_replay_base,
+)
 
 
 def clean_batch_against_index(
@@ -93,12 +97,8 @@ def clean_batch_against_index(
     toked = _span_toked(batch_df)
     grams = ckpt_disk(_span_grams(toked, k, hashed))
 
-    base_v = replay_base_version(grams_dir, bid)
     new_index = grams.select("gram").distinct()
-    if base_v is not None:
-        old_index = bspark.read.parquet(os.path.join(grams_dir, f"v{base_v}"))
-    else:
-        old_index = bspark.createDataFrame([], new_index.schema)
+    old_index = read_replay_base(bspark, grams_dir, bid, new_index.schema)
 
     cross_dels = grams.join(old_index, "gram", "left_semi").select(
         "doc_id",
@@ -148,31 +148,8 @@ def run_stream_remove_spans(
         )
         commit_index()
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_foreach_batch(docs, checkpoint_dir, process)
 
 
 def read_clean_docs(spark: SparkSession, work_dir: str) -> DataFrame | None:
-    clean_dir = os.path.join(work_dir, "clean")
-    if not os.path.isdir(clean_dir):
-        return None
-    # only COMMITTED batch dirs (Spark's _SUCCESS marker), mirroring
-    # latest_version's convention — a crash mid-write leaves a
-    # half-written b{N} whose partial rows the replay will rewrite
-    dirs = [
-        os.path.join(clean_dir, d)
-        for d in os.listdir(clean_dir)
-        if d.startswith("b")
-        and os.path.exists(os.path.join(clean_dir, d, "_SUCCESS"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return read_committed_batches(spark, os.path.join(work_dir, "clean"))

@@ -111,8 +111,9 @@ def assert_matches_oracle(spark_df, duck_con, sql: str):
 def stage_stream_file(df, feed, name: str, mtime: int) -> None:
     """Stage ``df`` as ONE parquet file ``{feed}/{name}`` with a pinned
     mtime — the staging recipe every maxFilesPerTrigger=1 file-stream
-    fixture shares (mirrors __spark_entry__._stage_parquet_feed). The
-    mtime scheme IS the micro-batch order; keep it in one place."""
+    fixture shares (the staging half of
+    __spark_entry__._stage_parquet_feed, which also opens the stream).
+    The mtime scheme IS the micro-batch order; keep it in one place."""
     import shutil
 
     feed = str(feed)

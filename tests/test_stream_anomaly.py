@@ -114,3 +114,21 @@ def test_replayed_batches_do_not_duplicate_flags(spark, tmp_path):
     after = sorted(tuple(r) for r in read_flagged(spark, out).collect())
     assert after == before
     assert totals["a"][0] == 33
+
+
+def test_uncommitted_flag_dir_is_ignored(spark, tmp_path):
+    """A crash mid-write leaves a b{N} dir with data but no _SUCCESS
+    marker; read_flagged must return none of its rows."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    _write_batch(spark, feed, "f0.parquet", BASE, 1_700_000_000)
+    _write_batch(spark, feed, "f1.parquet", B1, 1_700_000_100)
+    out, _ = _run(spark, tmp_path)
+    committed = read_flagged(spark, out)
+
+    junk_dir = os.path.join(out, "b99")
+    spark.createDataFrame([("a", 9999, 1e6, 99)], committed.schema).write.parquet(
+        junk_dir
+    )
+    os.remove(os.path.join(junk_dir, "_SUCCESS"))
+    assert {r.event_id for r in read_flagged(spark, out).collect()} == {101}

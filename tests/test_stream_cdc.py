@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.operators.cdc import cdc_apply
 from myasynstreamjoin_spark.streaming.cdc import (
-    latest_version,
     read_snapshot,
     run_cdc_stream,
 )
+from myasynstreamjoin_spark.streaming.commits import latest_version
 
 CHANGE_SCHEMA = "k long, name string, v double, op string, gen long"
 
