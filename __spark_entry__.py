@@ -3502,9 +3502,9 @@ def _q_stream_min_count_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     import os as _os
 
-    # data-proportional state width (r12): floor 2 locally, grows with
-    # the replayed file's size so a large finite replay through this
-    # helper is never serialized onto the 2-partition test default
+    # data-proportional state width (session.replay_state_partitions):
+    # 1 partition locally, growing with the replayed file's size so a
+    # large finite replay is never serialized onto one task
     return run_stream_to_table(
         stream_min_count_per_window(stream_events(spark, sf_dir), CFG),
         spark,

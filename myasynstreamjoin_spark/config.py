@@ -33,9 +33,6 @@ class EngineConfig:
         Heavy-hitter frequency fraction: a key is heavy iff
         freq > hh_threshold * total / n_mappers
         (one-group-stateless/cluster/APKGrouping.scala:97).
-    shuffle_partitions
-        spark.sql.shuffle.partitions for batch work; sized to cores in
-        local mode, to cluster fan-out on a real deployment.
     watermark_delay
         Structured Streaming watermark tolerance. The reference assumes
         in-order-per-port data (state/timetable/MyStateJoinUtils.scala:44-46);
@@ -47,7 +44,6 @@ class EngineConfig:
     n_mappers: int = 12
     n_reducers: int = 2
     hh_threshold: float = 0.2
-    shuffle_partitions: int = 32
     watermark_delay: str = "1 hour"
 
     @property

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from myasynstreamjoin_spark.functions.text import normalized, tokens
+from myasynstreamjoin_spark.session import batch_width
 from myasynstreamjoin_spark.sources.tables import rebalance
 
 
@@ -386,9 +387,7 @@ def _span_election_dels(
     # derives it from the token table in the same control read as the
     # reassembly width) pass it in and skip this block pass.
     n_grams = grams.count() if n_rows is None else n_rows
-    session_w = int(
-        grams.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    session_w = batch_width(grams.sparkSession)
     width = min(4096, max(session_w, -(-n_grams // 2_000_000)))
     if width > session_w:
         grams = grams.repartition(width, "gram")
@@ -433,9 +432,7 @@ def _span_reassemble(
     # already hold the token count pass it in (one fewer block pass).
     if n_tok is None:
         n_tok = toked.agg(F.sum(F.size("__t"))).first()[0] or 0
-    session_w = int(
-        toked.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    session_w = batch_width(toked.sparkSession)
     width = min(4096, max(session_w, -(-n_tok // 2_000_000)))
     if width > session_w:
         pos_tok = pos_tok.repartition(width, "doc_id", "pos")
@@ -518,7 +515,7 @@ def ngram_jaccard_pairs(
     # persisted blocks every downstream branch re-reads; below ~16 M
     # index rows the session width wins and the plan is unchanged.
     n_sh = shd.agg(F.sum(F.size("sh"))).first()[0] or 0
-    session_w = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    session_w = batch_width(sh.sparkSession)
     width = min(4096, max(session_w, -(-n_sh // 500_000)))
     sh_j = sh.repartition(width, "shingle") if width > session_w else sh
     # Per-doc set size straight off the cached array — shingle arrays

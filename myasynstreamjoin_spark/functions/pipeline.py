@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.operators.relational import hash_bucket
+from myasynstreamjoin_spark.session import batch_width
 
 
 def hash_split(
@@ -1008,9 +1009,7 @@ def _pack_token_arrays(
     # is a cheap bounded read; below ~64 M tokens the session width
     # wins and the plan is unchanged.
     n_tokens = enc.agg(F.sum(F.size("__t"))).first()[0] or 0
-    session_w = int(
-        enc.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    session_w = batch_width(enc.sparkSession)
     pack_width = min(4096, max(session_w, -(-n_tokens // 2_000_000)))
     base = pack_sequences(
         enc, F.size("__t"), budget=budget, n_shards=n_shards, id_col=id_col

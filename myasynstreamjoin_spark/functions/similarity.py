@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from myasynstreamjoin_spark.session import batch_width, override_widths
 from myasynstreamjoin_spark.sources.tables import rebalance
 
 
@@ -924,23 +925,14 @@ def kmeans_fit(
 
     Output: (cell, n_vectors, inertia) — one row per cluster.
     """
-    import math
-
     spark = embeddings.sparkSession
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    width = None
     if shuffle_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev_sp) if prev_sp.isdigit() else shuffle_partitions,
-                    shuffle_partitions)),
-        )
-    try:
+        width = min(batch_width(spark), shuffle_partitions)
+    with override_widths(spark, batch=width):
         return _kmeans_fit_inner(
             embeddings, k, n_iters, tol, vec_col, id_col
         )
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 def _kmeans_fit_inner(embeddings, k, n_iters, tol, vec_col, id_col):

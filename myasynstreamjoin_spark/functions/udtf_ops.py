@@ -49,12 +49,16 @@ def split_sentences(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Lateral-apply the sentence UDTF to every document.
 
     Output: (doc_id, sent_idx, sentence, n_tokens).
+
+    ``docs`` is bound as a ``spark.sql`` argument (a uuid-named view
+    that PySpark drops when the call returns), so concurrent callers on
+    one session never read each other's documents.
     """
     spark.udtf.register("split_sentences", SentenceSplitter)
-    docs.createOrReplaceTempView("__udtf_docs")
     return spark.sql(
         """
         SELECT d.doc_id, s.sent_idx, s.sentence, s.n_tokens
-        FROM __udtf_docs d, LATERAL split_sentences(d.text) s
-        """
+        FROM {docs} d, LATERAL split_sentences(d.text) s
+        """,
+        docs=docs,
     )

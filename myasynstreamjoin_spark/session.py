@@ -4,6 +4,20 @@ Design notes for scale (local[32] here, 1000-executor cluster target):
 - AQE on: runtime partition coalescing, skew-join splitting, and
   broadcast-join demotion replace the reference's hand-rolled adaptive
   partitioners (SURVEY.md §2.3 X5-X12).
+- Two widths, two confs. A batch exchange starts at the BATCH width,
+  ``spark.sql.shuffle.partitions`` (the core count by default; AQE's
+  ``coalescePartitions.initialPartitionNum`` where a deployment sets
+  it), and AQE coalesces it from there. A stateful stream takes the
+  STATE width, Spark's stateful-operator width
+  ``spark.sql.streaming.internal.stateStore.partitions``, and locks it
+  into its checkpoint. The state width follows
+  ``replay_state_partitions``: 1 partition with no input, about one more
+  per 64 MB. Every state partition pays its own state-store update and
+  commit per micro-batch, and the reference balanced its reducers' load
+  rather than maximizing their count (``n_reducers = 2``,
+  stream.json:6-7). ``batch_width`` reads the batch width;
+  ``override_widths`` is the one way to change either width for a
+  stretch of work.
 - UTC session timezone so timestamp arithmetic agrees with the DuckDB
   oracle (naive UTC timestamps).
 - ``spark.sql.legacy.parquet.nanosAsLong=true``: robustness flag for
@@ -19,6 +33,7 @@ Design notes for scale (local[32] here, 1000-executor cluster target):
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import warnings
@@ -117,13 +132,15 @@ def _set_confs(spark: SparkSession, confs: dict[str, str]) -> None:
 # Micro-batch TRIGGER SIZING (operator documentation): every streaming
 # kernel pays a roughly volume-independent per-batch fixed cost. The
 # windowed min-count on an open-loop 16 k rows/s stream, 1 s trigger,
-# 4 state partitions, local[4] on a 4-core box, spends ~240 ms per
-# trigger: addBatch ~205 ms (state update ~105 ms and state commit
-# ~15 ms, each summed over the partitions), planning ~20 ms, offset
-# and commit logs ~15 ms. With a `readlink` fork per checkpoint rename
-# (before checkpointFileManagerClass above) the same trigger took
-# ~380 ms, of which state commit ~285 ms and logs ~55 ms. The
-# foreachBatch kernels add their index read/union/write and
+# 1 state partition (the session's state width), local[4] on a 4-core
+# box, spends ~290 ms per trigger: addBatch ~245 ms (state update
+# ~20 ms, state commit ~2 ms), planning ~25 ms, offset and commit logs
+# ~20 ms. At 4 state partitions the same trigger, measured in the same
+# hour, took ~360 ms: state update ~145 ms and state commit ~19 ms
+# summed over the partitions, 8 tasks per trigger instead of 5. With a
+# `readlink` fork per checkpoint rename (before
+# checkpointFileManagerClass above) a 4-partition trigger spent ~285 ms
+# in state commit and ~55 ms in logs alone. The foreachBatch kernels add their index read/union/write and
 # checkpoint-block release on top (the sf10ish stream twins' 36-41 s
 # were trigger-bound, not volume-bound).
 # Amortize it by sizing triggers in RECORDS, not wall time:
@@ -175,6 +192,88 @@ def prepare_streaming_scale(spark: SparkSession) -> SparkSession:
 _PREPARED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
+# The two widths (module docstring). SQLConf.numShufflePartitions plans
+# a batch exchange at BATCH_WIDTH while AQE coalescing is on and that
+# conf is set, else at SHUFFLE_WIDTH. A fresh streaming query records
+# STATE_WIDTH (or SHUFFLE_WIDTH when it is unset) in its offset log as
+# its stateful operators' partition count, and a restart restores it
+# from there while SHUFFLE_WIDTH keeps serving the batch work inside
+# foreachBatch (both checked on Spark 4.1.2). STATE_WIDTH is marked
+# internal in SQLConf, but it is the only conf that separates the two:
+# with SHUFFLE_WIDTH as the state width, every batch plan of a session
+# with AQE coalescing off ran at 1 partition. Were a later Spark to drop
+# it, streams would fall back to the batch width, not fail.
+SHUFFLE_WIDTH = "spark.sql.shuffle.partitions"
+BATCH_WIDTH = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+STATE_WIDTH = "spark.sql.streaming.internal.stateStore.partitions"
+
+
+def replay_state_partitions(
+    spark: SparkSession, input_bytes: int, floor: int = 1
+) -> int:
+    """The state width rule: ~1 partition per 64 MB of input, floored
+    at ``floor`` and capped at the scheduler parallelism. Each state
+    partition pays its own state-store update and commit per
+    micro-batch, so small inputs keep one partition (the open-loop
+    stream benchmark spent ~25 % less CPU per input second at 1 than at
+    4 on local[4]), while a 10 GB replay gets ~160 partitions (capped),
+    so a large stream is never serialized onto one task. ``get_spark``
+    sets the session's state width from it with no input;
+    ``run_stream_to_table`` and ``run_stream_to_parquet`` size each
+    replay from its input."""
+    cap = spark.sparkContext.defaultParallelism
+    return max(floor, min(cap, int(input_bytes) // (64 << 20)))
+
+
+def _batch_width_conf(spark: SparkSession) -> str:
+    """The conf that governs the batch width of this session."""
+    # No default argument: get(key, default) answers ``default`` for an
+    # unset key, not Spark's own default.
+    get = spark.conf.get
+    if (
+        get("spark.sql.adaptive.enabled").lower() == "true"
+        and get("spark.sql.adaptive.coalescePartitions.enabled").lower() == "true"
+    ):
+        return BATCH_WIDTH
+    return SHUFFLE_WIDTH
+
+
+def batch_width(spark: SparkSession) -> int:
+    """The partition count Spark plans a batch exchange at (before AQE
+    coalesces it): what a data-proportional width rule compares itself
+    against. Mirrors SQLConf.numShufflePartitions, so it is also right
+    on a harness-built session with AQE off or no initial width."""
+    return int(spark.conf.get(_batch_width_conf(spark)) or spark.conf.get(SHUFFLE_WIDTH))
+
+
+@contextlib.contextmanager
+def override_widths(
+    spark: SparkSession, *, batch: int | None = None, state: int | None = None
+):
+    """Set the batch and/or state width for the body of the ``with``
+    and restore the session's values on exit (an unset conf is unset
+    again). A stream locks its state width in at ``start()``, so a
+    state override need only cover the start; a batch plan reads its
+    width when it is planned, so a batch override must cover the jobs
+    it is meant for. The override is session-wide while it lasts."""
+    confs: dict[str, int] = {}
+    if batch is not None:
+        confs[_batch_width_conf(spark)] = batch
+    if state is not None:
+        confs[STATE_WIDTH] = state
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def prepare_session(
     spark: SparkSession,
     shuffle_partitions: int | None = None,
@@ -191,11 +290,13 @@ def prepare_session(
     engine will not silently repair it per query; pass ``force=True``
     to re-apply the engine defaults).
 
-    Shuffle partitions are deliberately NOT adjusted unless the caller
-    asks: measured on a vanilla low-core session, the stock 200 + AQE
+    Widths are deliberately NOT adjusted unless the caller asks:
+    measured on a vanilla low-core session, the stock 200 + AQE
     coalescing beat a slots-proportional setting on shuffle-heavy
     queries (finer map-side splits, AQE shrinks the rest) — resist the
     folk fix of downsizing it on behalf of the session owner.
+    ``shuffle_partitions`` sets ``spark.sql.shuffle.partitions``, the
+    batch width of a session without an AQE initial width.
     """
     try:
         seen = spark in _PREPARED
@@ -206,7 +307,7 @@ def prepare_session(
     if force or not seen:
         _set_confs(spark, SESSION_CONFS)
     if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        spark.conf.set(SHUFFLE_WIDTH, str(shuffle_partitions))
     return spark
 
 
@@ -218,10 +319,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Local default: ``local[$SPARK_GRAFT_CPUS]`` threads with shuffle
-    partitions matched to cores — the 200 default over-parallelizes
+    Local default: ``local[$SPARK_GRAFT_CPUS]`` threads. The batch
+    width (``spark.sql.shuffle.partitions``) is ``shuffle_partitions``
+    when given, else the core count — the 200 default over-parallelizes
     small local runs and under-parallelizes a real cluster; both are
-    corrected by AQE coalescing once the base number is sane.
+    corrected by AQE coalescing once the base number is sane. The state
+    width comes from ``replay_state_partitions`` with no input: 1
+    partition, which the finite replays widen from their input size.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -231,7 +335,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(SHUFFLE_WIDTH, str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -264,4 +368,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return prepare_session(spark, shuffle_partitions)
+    prepare_session(spark, shuffle_partitions)
+    spark.conf.set(STATE_WIDTH, str(replay_state_partitions(spark, 0)))
+    return spark

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
+from myasynstreamjoin_spark.session import override_widths, replay_state_partitions
 from myasynstreamjoin_spark.sources.tables import normalize_epoch_ns
 
 # The ENGINE's logical events schema: ts is BIGINT epoch-ns (the
@@ -114,20 +115,21 @@ def _windowed_min_count(with_time: DataFrame, cfg: EngineConfig) -> DataFrame:
     (etime TIMESTAMP, source INT, key STRING) stream — shared by the
     events file stream and the grammar DataSource stream.
 
-    Built as ONE spark.sql string over a temp view of the watermarked
-    stream (round 12, guide §7.3): the DataFrame chain paid an
-    analyzer pass per transformation plus a py4j round trip per Column
+    Built as ONE spark.sql string over the watermarked stream (round
+    12, guide §7.3): the DataFrame chain paid an analyzer pass per
+    transformation plus a py4j round trip per Column
     — measured 138 ms vs 48 ms per construction, and the bench pays
     construction on every timed pass. Expression trees are identical
     (count(CASE WHEN) ≡ count(when()); `/` on longs is double in both;
-    schema equality asserted in tests), and the view is resolved
-    eagerly at spark.sql time (Spark Classic), so a later construction
-    replacing the view cannot retarget an existing plan. Streaming
-    semantics unchanged: the watermark is attached to the view's plan
-    BEFORE the stateful aggregation."""
+    schema equality asserted in tests). The source is bound as a
+    ``spark.sql`` argument: PySpark registers it under a fresh uuid view
+    name, the plan resolves eagerly (Spark Classic), and the view is
+    dropped when ``spark.sql`` returns, so two threads building on one
+    session never bind each other's source and no view outlives the
+    query. Streaming semantics unchanged: the watermark is attached to
+    the source's plan BEFORE the stateful aggregation."""
     spark = with_time.sparkSession
     src = with_time.withWatermark("etime", cfg.watermark_delay)
-    src.createOrReplaceTempView("masj_stream_wmc_src")
     counts = ", ".join(
         f"count(CASE WHEN source = {r} THEN 1 END) AS c{r}"
         for r in range(cfg.n_sources)
@@ -140,11 +142,11 @@ def _windowed_min_count(with_time: DataFrame, cfg: EngineConfig) -> DataFrame:
              CAST(least({least}) AS LONG) AS min_cnt
       FROM (
         SELECT key, window(etime, '{cfg.lgw_ms} milliseconds') AS w, {counts}
-        FROM masj_stream_wmc_src
+        FROM {{src}}
         GROUP BY key, window(etime, '{cfg.lgw_ms} milliseconds')
       )
       WHERE {complete}
-    """)
+    """, src=src)
 
 
 def stream_grammar_min_count(
@@ -244,30 +246,12 @@ def _replay_checkpoint_dir(checkpoint_dir: str | None = None):
     )
 
 
-def replay_state_partitions(
-    spark: SparkSession, input_bytes: int, floor: int = 2
-) -> int:
-    """Data-proportional shuffle/state width for a FINITE replay:
-    ~1 partition per 64 MB of replayed input, floored at ``floor``
-    (state-store commits cost per partition per micro-batch — the
-    measured local sweet spot is 2) and capped at the scheduler
-    parallelism. Mirrors the dedup operators' data-proportional width
-    rules (r11 verdict item 6) so a large finite replay through the
-    run_stream_* helpers is never serialized onto the small local
-    default: a 10 GB replay gets ~160 partitions (capped), a 2 MB
-    test replay keeps the floor. Cluster deployments still pass
-    ``state_partitions=None`` and size to executor count."""
-    cap = spark.sparkContext.defaultParallelism
-    return max(floor, min(cap, int(input_bytes) // (64 << 20)))
-
-
 def run_stream_to_parquet(
     streaming_df: DataFrame,
     spark: SparkSession,
     out_path: str,
     partition_cols: list[str] | None = None,
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 4,
     input_bytes: int | None = None,
 ) -> DataFrame:
     """Run a (finite) streaming DataFrame to completion into a
@@ -279,34 +263,22 @@ def run_stream_to_parquet(
     Append mode + exactly-once file sink semantics (the checkpoint's
     file manifest, not directory listing, defines the committed set);
     partitioning by a window/date column keeps downstream reads pruned.
-    ``input_bytes`` (when known — e.g. the size of the replayed file)
-    makes the state width data-proportional via
-    ``replay_state_partitions``.
+    The state width comes from ``input_bytes`` as in
+    ``run_stream_to_table``.
     """
-    if state_partitions is not None and input_bytes is not None:
-        state_partitions = replay_state_partitions(
-            spark, input_bytes, floor=state_partitions
-        )
     with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(min(int(prev) if prev.isdigit() else state_partitions, state_partitions)),
-            )
-        try:
-            w = (
-                streaming_df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_path)
-                .option("checkpointLocation", checkpoint)
-            )
-            if partition_cols:
-                w = w.partitionBy(*partition_cols)
+        w = (
+            streaming_df.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out_path)
+            .option("checkpointLocation", checkpoint)
+        )
+        if partition_cols:
+            w = w.partitionBy(*partition_cols)
+        with override_widths(
+            spark, state=replay_state_partitions(spark, input_bytes or 0)
+        ):
             q = w.start()
-        finally:
-            if state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
         try:
             q.processAllAvailable()
         finally:
@@ -318,7 +290,6 @@ def run_stream_to_table(
     streaming_df: DataFrame,
     spark: SparkSession,
     checkpoint_dir: str | None = None,
-    state_partitions: int | None = 2,
     output_mode: str = "append",
     input_bytes: int | None = None,
 ) -> DataFrame:
@@ -326,40 +297,28 @@ def run_stream_to_table(
     source and return the materialized result as a batch DataFrame
     (memory sink + processAllAvailable).
 
-    ``state_partitions`` bounds ``spark.sql.shuffle.partitions`` for the
-    duration of query startup: stateful operators commit one state-store
-    file per partition per micro-batch, so a finite local replay with
-    the 200-partition default pays ~50× the state-commit overhead of a
+    The state width is ``session.replay_state_partitions`` of
+    ``input_bytes`` (the replayed volume when the caller knows it, e.g.
+    the size of the replayed parquet file; none counts as 0): 1
+    partition for small replays, ~1 more per 64 MB, up to the scheduler
+    parallelism. Stateful operators commit one state-store file per
+    partition per micro-batch, so a finite local replay at the
+    200-partition default pays ~50× the state-commit overhead of a
     4-partition run for the same data. Through the FileSystem-API
     checkpoint manager (session.SESSION_CONFS) a commit costs ~4 ms per
-    partition per micro-batch on a 4-core box, down from ~70 ms with a
-    `readlink` fork per rename, so at small widths the count barely
-    matters: the flagship replay at sf0.1 on local[4] took 0.55 / 0.63
-    / 0.60 / 0.59 s (min of 4) at 1 / 2 / 4 / 8 partitions, against
-    0.92 / 0.92 / 0.96 / 0.98 s with the fork. The default keeps 2,
-    the last factor of parallelism. The partition count is locked
-    into the checkpoint at query start; the session value is restored
-    afterwards. On a real cluster-scale deployment pass None and size
-    shuffle partitions to the executor count instead. ``input_bytes``
-    (when the caller knows the replayed volume — e.g. the size of the
-    replayed parquet file) makes the width data-proportional via
-    ``replay_state_partitions``: floor(2) locally, growing ~1
-    partition per 64 MB up to the scheduler parallelism, so a large
-    finite replay is never serialized onto the local test default.
+    partition per micro-batch on a 4-core box, so at small widths the
+    count matters less than it did: the flagship replay at sf0.1 on
+    local[4] took 0.55 / 0.63 / 0.60 / 0.59 s (min of 4) at 1 / 2 / 4 /
+    8 partitions. The width is set for the query's start only, which
+    locks it into the checkpoint; the session value is restored
+    afterwards, and a restart from a caller's checkpoint keeps the
+    width it was started with.
     """
-    if state_partitions is not None and input_bytes is not None:
-        state_partitions = replay_state_partitions(
-            spark, input_bytes, floor=state_partitions
-        )
     name = f"sink_{uuid.uuid4().hex[:12]}"
     with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(min(int(prev) if prev.isdigit() else state_partitions, state_partitions)),
-            )
-        try:
+        with override_widths(
+            spark, state=replay_state_partitions(spark, input_bytes or 0)
+        ):
             q = (
                 streaming_df.writeStream.outputMode(output_mode)
                 .format("memory")
@@ -367,9 +326,6 @@ def run_stream_to_table(
                 .option("checkpointLocation", checkpoint)
                 .start()
             )
-        finally:
-            if state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
         try:
             q.processAllAvailable()
         finally:

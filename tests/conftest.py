@@ -5,8 +5,11 @@ columns sorted by name)."""
 
 from __future__ import annotations
 
+import ast
+import contextlib
 import math
 import os
+import re
 import sys
 
 import duckdb
@@ -127,3 +130,50 @@ def stage_stream_file(df, feed, name: str, mtime: int) -> None:
     shutil.move(os.path.join(tmp, part), dst)
     shutil.rmtree(tmp)
     os.utime(dst, (mtime, mtime))
+
+
+def code_nodes(tree):
+    """Every AST node except docstrings (comments never reach the AST)."""
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node,
+            (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    return [n for n in ast.walk(tree) if id(n) not in docstrings]
+
+
+_HASH_EXCHANGE = re.compile(r"hashpartitioning\(.*?, (\d+)\), ENSURE_REQUIREMENTS")
+
+
+@contextlib.contextmanager
+def executed_plans(spark):
+    """Yields a list that, after the block, holds the final physical
+    plan of every SQL execution the block ran (from the SQL status
+    store, which exists with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in executions()}
+    plans: list[str] = []
+    yield plans
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    plans.extend(
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in seen
+    )
+
+
+def hash_exchange_widths(plans: list[str]) -> set[int]:
+    """Partition counts of the planner-inserted hash exchanges in
+    ``plans`` (user ``repartition(n, ...)`` calls are not counted)."""
+    return {int(n) for plan in plans for n in _HASH_EXCHANGE.findall(plan)}

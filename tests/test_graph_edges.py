@@ -25,6 +25,7 @@ from myasynstreamjoin_spark.operators.graph import (
     write_copurchase_edges,
 )
 from myasynstreamjoin_spark.sources.tables import load_table
+from tests.conftest import executed_plans, hash_exchange_widths
 
 TABLE = "test_copurchase_edges"
 
@@ -237,11 +238,25 @@ def test_edge_table_deg_column_is_out_degree_and_conf_restored(spark, sf_dir):
     """The round-8 degree-annotated build: every row's ``deg`` must
     equal the actual out-degree of its src (the broadcast fold can't
     drop or duplicate), and the data-proportional shuffle-width
-    override inside the build must restore the session conf."""
+    override inside the build must restore the session conf. The
+    override sets the batch width, so the build's shuffles really run
+    at 8 × n_buckets partitions, and both width confs come back."""
+    from myasynstreamjoin_spark.session import (
+        BATCH_WIDTH,
+        SHUFFLE_WIDTH,
+        STATE_WIDTH,
+        batch_width,
+    )
+
     lineitem = load_table(spark, sf_dir, "lineitem")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    write_copurchase_edges(lineitem, "test_deg_edges", n_buckets=4)
+    widths = {k: spark.conf.get(k) for k in (SHUFFLE_WIDTH, BATCH_WIDTH, STATE_WIDTH)}
+    assert batch_width(spark) < 8 * 4
+    with executed_plans(spark) as plans:
+        write_copurchase_edges(lineitem, "test_deg_edges", n_buckets=4)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert {k: spark.conf.get(k) for k in widths} == widths
+    assert hash_exchange_widths(plans) == {8 * 4}
     t = read_copurchase_edges(spark, "test_deg_edges")
     recomputed = t.groupBy("src").agg(F.count("*").alias("d"))
     assert t.join(recomputed, "src").where("deg <> d").count() == 0

@@ -3,11 +3,20 @@ session — per-query re-application was ~3.8 ms × 34 queries × 3 passes
 of pure py4j overhead inside the bench's timed region — and a caller's
 deliberate mid-session override is respected until ``force=True``. A
 conf the session refuses is warned about, never dropped silently.
+The two widths: a batch exchange starts at the core count, a stream's
+state at the rule's width, and only session.py names the width confs.
 """
 
 from __future__ import annotations
 
+import ast
+import json
+import os
+import time
+from pathlib import Path
+
 import pytest
+from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark import session
 from myasynstreamjoin_spark.session import SESSION_CONFS, prepare_session
@@ -46,15 +55,15 @@ def test_prepare_session_shuffle_partitions_still_applied(spark):
 
 
 def test_replay_state_partitions_rule(spark):
-    """Data-proportional replay width (r12): floor(2) for small
+    """Data-proportional replay width (r12): floor(1) for small
     replays, ~1 partition per 64 MB, capped at scheduler parallelism."""
     from myasynstreamjoin_spark.streaming.windowed import (
         replay_state_partitions,
     )
 
     cap = spark.sparkContext.defaultParallelism
-    assert replay_state_partitions(spark, 0) == 2
-    assert replay_state_partitions(spark, 2 << 20) == 2          # 2 MB
+    assert replay_state_partitions(spark, 0) == 1
+    assert replay_state_partitions(spark, 2 << 20) == 1          # 2 MB
     assert replay_state_partitions(spark, 320 << 20) == min(cap, 5)
     assert replay_state_partitions(spark, 1 << 40) == cap        # 1 TB
     assert replay_state_partitions(spark, 0, floor=4) == 4
@@ -91,3 +100,154 @@ def test_checkpoint_manager_routes_to_filesystem_api(spark, tmp_path):
         spark._jsparkSession.sessionState().newHadoopConf(),
     )
     assert manager.getClass().getName() == SESSION_CONFS[CKPT_MANAGER_KEY]
+
+
+def _restore(spark, saved: dict) -> None:
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_get_spark_plans_batch_at_core_count(spark):
+    """A get_spark session starts a batch exchange at the core count,
+    with AQE coalescing on or off, while its state width is the rule's."""
+    from myasynstreamjoin_spark.session import (
+        BATCH_WIDTH,
+        SHUFFLE_WIDTH,
+        STATE_WIDTH,
+        batch_width,
+        get_spark,
+        replay_state_partitions,
+    )
+    from tests.conftest import hash_exchange_widths
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = int(cpus) if cpus.isdigit() else 32
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    keys = (SHUFFLE_WIDTH, BATCH_WIDTH, STATE_WIDTH, coalesce)
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        # the running session, configured the way get_spark builds one
+        assert get_spark() is spark
+        assert spark.conf.get(STATE_WIDTH) == str(replay_state_partitions(spark, 0))
+        for on in ("true", "false"):
+            spark.conf.set(coalesce, on)
+            df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+            assert len(df.collect()) == 7
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert hash_exchange_widths([plan]) == {cores}, on
+            assert batch_width(spark) == cores
+    finally:
+        _restore(spark, saved)
+
+
+def test_batch_width_follows_the_conf_spark_plans_with(spark):
+    """batch_width mirrors SQLConf.numShufflePartitions: AQE's initial
+    width while AQE coalescing is on and it is set, else the shuffle
+    width; override_widths sets that conf and restores it."""
+    from myasynstreamjoin_spark.session import (
+        BATCH_WIDTH,
+        SHUFFLE_WIDTH,
+        STATE_WIDTH,
+        batch_width,
+        override_widths,
+    )
+
+    aqe = "spark.sql.adaptive.enabled"
+    keys = (SHUFFLE_WIDTH, BATCH_WIDTH, STATE_WIDTH, aqe)
+    saved = {k: spark.conf.get(k) for k in keys}
+    jconf = spark._jsparkSession.sessionState().conf()
+    try:
+        spark.conf.set(BATCH_WIDTH, "6")
+        spark.conf.set(SHUFFLE_WIDTH, "3")
+        assert batch_width(spark) == jconf.numShufflePartitions() == 6
+        with override_widths(spark, batch=5):
+            assert batch_width(spark) == jconf.numShufflePartitions() == 5
+            assert spark.conf.get(SHUFFLE_WIDTH) == "3"
+        assert spark.conf.get(BATCH_WIDTH) == "6"
+        spark.conf.unset(BATCH_WIDTH)
+        assert batch_width(spark) == jconf.numShufflePartitions() == 3
+        with override_widths(spark, batch=5):
+            assert batch_width(spark) == 5
+        assert spark.conf.get(BATCH_WIDTH) is None  # unset again
+        spark.conf.set(BATCH_WIDTH, "6")
+        spark.conf.set(aqe, "false")
+        assert batch_width(spark) == jconf.numShufflePartitions() == 3
+        with override_widths(spark, batch=5):
+            assert batch_width(spark) == jconf.numShufflePartitions() == 5
+        assert spark.conf.get(SHUFFLE_WIDTH) == "3"
+        state = spark.conf.get(STATE_WIDTH)
+        with override_widths(spark, state=2):
+            assert spark.conf.get(STATE_WIDTH) == "2"
+            assert batch_width(spark) == 3
+        assert spark.conf.get(STATE_WIDTH) == state
+    finally:
+        _restore(spark, saved)
+
+
+def test_stream_state_width_is_the_rule(spark, tmp_path):
+    """A stateful stream started straight on the session runs its state
+    at the rule's width for no input (the session's state width)."""
+    from myasynstreamjoin_spark.config import EngineConfig
+    from myasynstreamjoin_spark.session import batch_width, replay_state_partitions
+    from myasynstreamjoin_spark.streaming.windowed import (
+        stream_min_count_per_window,
+    )
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 200).load()
+    events = rate.select(
+        (F.unix_micros("timestamp") * 1000).alias("ts"),
+        F.col("value").alias("user_id"),
+        F.concat(F.lit("k"), (F.col("value") % 5).cast("string")).alias("event_type"),
+    )
+    cfg = EngineConfig(lgw_ms=1000, watermark_delay="1 second")
+    q = (
+        stream_min_count_per_window(events, cfg)
+        .writeStream.format("noop")
+        .outputMode("append")
+        .trigger(processingTime="500 milliseconds")
+        .option("checkpointLocation", str(tmp_path))
+        .start()
+    )
+    ops = []
+    try:
+        deadline = time.monotonic() + 90
+        while not ops and time.monotonic() < deadline:
+            ops = [
+                op
+                for p in q.recentProgress
+                for op in json.loads(p.json).get("stateOperators", [])
+            ]
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert ops, "no micro-batch reported its state operator"
+    assert {op["numStateStoreInstances"] for op in ops} == {
+        replay_state_partitions(spark, 0)
+    }
+    # the batch width of the same session is not the state width
+    assert batch_width(spark) > replay_state_partitions(spark, 0)
+
+
+def test_only_session_module_names_the_width_confs():
+    """Every read or change of a width goes through session.py
+    (batch_width, override_widths, get_spark): a direct conf read would
+    take the state width for the batch width, or the reverse."""
+    from myasynstreamjoin_spark.session import BATCH_WIDTH, SHUFFLE_WIDTH, STATE_WIDTH
+    from tests.conftest import code_nodes
+
+    root = Path(__file__).resolve().parent.parent
+    files = sorted((root / "myasynstreamjoin_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    found = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in files
+        if path != root / "myasynstreamjoin_spark" / "session.py"
+        for node in code_nodes(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and any(k in node.value for k in (SHUFFLE_WIDTH, BATCH_WIDTH, STATE_WIDTH))
+    ]
+    assert not found, "width conf named outside session.py:\n" + "\n".join(found)

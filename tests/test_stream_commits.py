@@ -13,6 +13,7 @@ from myasynstreamjoin_spark.streaming.commits import (
     mark_committed,
     save_snapshot,
 )
+from tests.conftest import code_nodes
 
 STREAMING = Path(__file__).resolve().parent.parent / (
     "myasynstreamjoin_spark/streaming"
@@ -39,22 +40,6 @@ def test_snapshot_loader_takes_newest_strictly_below(tmp_path):
     assert load_snapshot_below(root, 6) == {"n": 5}
 
 
-def _code_nodes(tree):
-    """Every AST node except docstrings (comments never reach the AST)."""
-    docstrings = {
-        id(node.body[0].value)
-        for node in ast.walk(tree)
-        if isinstance(
-            node,
-            (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
-        )
-        and node.body
-        and isinstance(node.body[0], ast.Expr)
-        and isinstance(node.body[0].value, ast.Constant)
-    }
-    return [n for n in ast.walk(tree) if id(n) not in docstrings]
-
-
 def test_only_commits_module_knows_the_protocol():
     allowed = {
         "_SUCCESS": {"commits.py"},
@@ -63,7 +48,7 @@ def test_only_commits_module_knows_the_protocol():
     }
     found = []
     for path in sorted(STREAMING.glob("*.py")):
-        for node in _code_nodes(ast.parse(path.read_text())):
+        for node in code_nodes(ast.parse(path.read_text())):
             if (
                 isinstance(node, ast.Constant)
                 and isinstance(node.value, str)

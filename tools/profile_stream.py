@@ -25,7 +25,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from myasynstreamjoin_spark.config import EngineConfig  # noqa: E402
-from myasynstreamjoin_spark.session import get_spark  # noqa: E402
+from myasynstreamjoin_spark.session import (  # noqa: E402
+    get_spark,
+    override_widths,
+    replay_state_partitions,
+)
 from myasynstreamjoin_spark.streaming.windowed import (  # noqa: E402
     _replay_checkpoint_dir,
     stream_events,
@@ -36,7 +40,7 @@ from myasynstreamjoin_spark.streaming.windowed import (  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def run_profiled(spark, make_df, state_partitions: int | None = 2) -> dict:
+def run_profiled(spark, make_df, input_bytes: int = 0) -> dict:
     """run_stream_to_table, instrumented phase by phase."""
     import uuid
 
@@ -45,10 +49,9 @@ def run_profiled(spark, make_df, state_partitions: int | None = 2) -> dict:
     t1 = time.perf_counter()
     name = f"sink_{uuid.uuid4().hex[:12]}"
     with _replay_checkpoint_dir() as checkpoint:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
+        with override_widths(
+            spark, state=replay_state_partitions(spark, input_bytes)
+        ):
             q = (
                 df.writeStream.outputMode("append")
                 .format("memory")
@@ -56,9 +59,6 @@ def run_profiled(spark, make_df, state_partitions: int | None = 2) -> dict:
                 .option("checkpointLocation", checkpoint)
                 .start()
             )
-        finally:
-            if state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
         t2 = time.perf_counter()
         try:
             q.processAllAvailable()
@@ -124,6 +124,7 @@ def main() -> int:
                 lambda: stream_min_count_per_window(
                     stream_events(spark, SF_DIR), DEFAULT_CONFIG
                 ),
+                input_bytes=os.path.getsize(f"{SF_DIR}/events.parquet"),
             )
         )
     json.dump(out, sys.stdout, indent=1)

@@ -236,8 +236,9 @@ def _stream_sessions_parquet(spark, sf_dir):
     at the correctness SF), which is driver-bound by design — at 30 M
     events the collected sessions blow spark.driver.maxResultSize.
     The kernel itself is sound; probe it through the exactly-once
-    parquet sink a real deployment uses. state_partitions=None keeps
-    the session's full shuffle width for probe-scale state."""
+    parquet sink a real deployment uses. The replayed file's size sets
+    the state width (session.replay_state_partitions), so probe-scale
+    state is spread over up to the scheduler parallelism."""
     import tempfile
 
     from myasynstreamjoin_spark.streaming.windowed import (
@@ -251,7 +252,7 @@ def _stream_sessions_parquet(spark, sf_dir):
         stream_sessions(stream_events(spark, sf_dir)),
         spark,
         out_path=f"{out}/data",
-        state_partitions=None,
+        input_bytes=os.path.getsize(f"{sf_dir}/events.parquet"),
     )
 
 
