@@ -5,7 +5,8 @@ LAST stdout line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, ...}
 
-plus writes the FULL artifact (all three per-query passes, both ANN
+plus writes the FULL artifact (artifact_version 6: all three
+per-query passes with each query's ``run_query`` record, both ANN
 recall profiles) to ``BENCH_full.json`` at the repo root, which the
 round snapshot commits. The split exists because the driver records
 only a 2000-char tail of stdout: round 10's single fat line (3 runs x
@@ -14,9 +15,10 @@ back ``parsed: null`` — the compact line carries the headline value,
 the cold/warm-min totals, and the per-query warm-min map at 2
 decimals, and names the committed file holding everything else.
 
-Each query is timed end-to-end (plan + execute) by writing the full
-result to the ``noop`` sink — every output row and column is
-materialized on the executors but nothing ships to the driver. (v1/v2
+Each query is timed end-to-end by ``observe.run_query``: construction,
+a write of the full result to the ``noop`` sink (every output row and
+column is materialized on the executors but nothing ships to the
+driver), and the release of the blocks it left persisted. (v1/v2
 artifacts used ``df.count()``, which let Catalyst prune whole branches
 of some plans; BASELINE.md carries a v3 anchor and
 ``tools/bench_compare.py`` refuses to diff mismatched artifact
@@ -33,11 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as contract  # noqa: E402
-from myasynstreamjoin_spark.blocks import (  # noqa: E402
-    batch_lock,
-    persisted_ids,
-    release_blocks,
-)
+from myasynstreamjoin_spark.observe import run_query  # noqa: E402
 from myasynstreamjoin_spark.session import get_spark  # noqa: E402
 
 # Headline set: one per operator family (SURVEY.md §2 + phase-5 ops).
@@ -88,10 +86,70 @@ HEADLINE = [
 ]
 
 
+def grammar_warmup(spark, _sf_dir: str):
+    """Warms the Python-DataSource streaming machinery (worker pool,
+    source registration, state store) with an 8-message grammar
+    stream — a different, tiny workload, so the timed
+    q_stream_grammar measures the 200-message grid, not cold-start."""
+    from myasynstreamjoin_spark.config import EngineConfig
+    from myasynstreamjoin_spark.streaming.windowed import (
+        run_stream_to_table,
+        stream_grammar_min_count,
+    )
+
+    return run_stream_to_table(
+        stream_grammar_min_count(
+            spark, EngineConfig(lgw_ms=1000, watermark_delay="2 seconds"),
+            messages="8", records_per_message="8", partitions="2",
+            messages_per_batch="8",
+        ),
+        spark,
+    )
+
+
+def timed_passes(
+    spark, names: list[str], sf_dir: str
+) -> list[dict[str, dict]]:
+    """Three passes over ``names``; each query is built, written to the
+    ``noop`` sink and released through ``observe.run_query``, and the
+    cache is cleared after each pass. Returns one ``{name: record}``
+    map per pass, figures at 3 decimals. A query's time is its
+    record's ``wall_s``: construct + execute + release.
+
+    Pass 1 is the cold anchor; passes 2-3 are warm, and callers report
+    the per-query MIN of the two. A single warm pass whipsawed ±10-20%
+    on sub-second queries (round-9 verdict #8), and interference only
+    adds time, so min-of-warm is the de-noised statistic for a
+    deterministic workload."""
+    queries = contract.queries()
+    passes: list[dict[str, dict]] = []
+    for i in range(3):
+        records: dict[str, dict] = {}
+        for name in names:
+            rec = run_query(spark, queries[name], sf_dir)
+            records[name] = {k: round(v, 3) for k, v in rec.items()}
+            print(f"# pass{i} {name}: {records[name]['wall_s']}s",
+                  file=sys.stderr)
+        passes.append(records)
+        spark.catalog.clearCache()
+    return passes
+
+
+def wall_times(records: dict[str, dict]) -> dict[str, float]:
+    """``{name: wall_s}`` of one ``timed_passes`` pass."""
+    return {name: rec["wall_s"] for name, rec in records.items()}
+
+
+def warm_min(runs: list[dict[str, float]]) -> dict[str, float]:
+    """Per-query min over the warm passes (all but the first)."""
+    return {name: round(min(r[name] for r in runs[1:]), 3) for name in runs[0]}
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="bench")
+    queries = contract.queries()
 
     # Warm the engine before timing (JIT/codegen, parquet reader, Python
     # gateway) on the *smoke* dataset so headline numbers measure query
@@ -110,82 +168,25 @@ def main() -> int:
     # "cold" total is lower from r12 on because this JIT/worker
     # startup now happens in the untimed warmup — same policy, wider
     # coverage; pre-r12 cold anchors include it.
+    smoke = "/root/testdata/sf0.001"
     for wq in ("q_word_count", "q_minhash_pairs"):
-        contract.queries()[wq](spark, "/root/testdata/sf0.001").count()
+        run_query(spark, queries[wq], smoke, action=lambda df: df.count())
     for wq in ("q_remove_spans", "q_semantic_dedup_arrow"):
         # noop, not count(): count() would prune the reassembly /
         # kernel output columns whose codegen is exactly what needs
         # warming (same reasoning as the timed action, guide §1.4)
-        contract.queries()[wq](spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
-    # Warm the Python-DataSource streaming machinery (worker pool,
-    # source registration, state store) with an 8-message grammar
-    # stream — a different, tiny workload, so the timed
-    # q_stream_grammar measures the 200-message grid, not cold-start.
-    from myasynstreamjoin_spark.config import EngineConfig
-    from myasynstreamjoin_spark.streaming.windowed import (
-        run_stream_to_table,
-        stream_grammar_min_count,
-    )
-
-    run_stream_to_table(
-        stream_grammar_min_count(
-            spark, EngineConfig(lgw_ms=1000, watermark_delay="2 seconds"),
-            messages="8", records_per_message="8", partitions="2",
-            messages_per_batch="8",
-        ),
-        spark,
-    ).count()
+        run_query(spark, queries[wq], smoke)
+    run_query(spark, grammar_warmup, smoke, action=lambda df: df.count())
     spark.catalog.clearCache()
 
-    queries = contract.queries()
-    # Two full back-to-back passes: cross-round bench deltas are
-    # sandbox noise until proven otherwise (SCALE.md round-5 bisect),
-    # so every recording now carries its own same-machine repeat —
-    # future drift questions are answerable from the artifact alone.
-    # The headline ``value`` stays run 1 (the cold-cache pass,
-    # comparable to every prior round's recording), but the per-query
-    # ``queries`` map is the WARM run (round-6 verdict item: per-query
-    # regression tables must not mix cold-start noise; the r5/r6
-    # "regressions" all vanished on the warm pass). Run-1 per-query
-    # timings stay available as ``queries_cold``.
-    # THREE passes since v4 (round-9 verdict #8): run 1 is the cold
-    # anchor; runs 2-3 are warm, and the per-query ``queries`` map is
-    # the per-query MIN of the two warm passes — r9's warm run-2
-    # whipsawed ±10-20% on sub-second queries (judge re-ran on an idle
-    # machine and the deltas vanished), so a single warm pass is noise,
-    # not signal. min-of-warm is the standard de-noised statistic for
-    # a deterministic workload: variance is one-sided (interference
-    # only adds time).
-    runs: list[dict[str, float]] = []
-    for _ in range(3):
-        timings: dict[str, float] = {}
-        for name in HEADLINE:
-            fn = queries[name]
-            t0 = time.perf_counter()
-            # noop-sink full materialization, NOT count(): Catalyst
-            # re-optimizes a counted plan and prunes columns the count
-            # never reads — round 8 measured q_asof_join's count()
-            # deleting the as-of Window and the whole purchase branch
-            # (2.6 s for a plan whose honest wall is 6.3 s at sf30ish).
-            # Artifact v3 marks the action change. Each query's
-            # checkpoint/persist blocks are released after the write so
-            # corpus-grain residue can't skew (or OOM) later queries —
-            # snapshot/diff, NOT batch_scope: holding the context lock
-            # across a streaming twin deadlocks its scoped foreachBatch
-            # (the lock is per-thread re-entrant; the micro-batch
-            # thread is a different thread).
-            pre = persisted_ids(spark)
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            with batch_lock(spark):
-                release_blocks(spark, pre)
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"# {name}: {timings[name]}s", file=sys.stderr)
-        runs.append(timings)
-        spark.catalog.clearCache()
+    # The headline ``value`` is pass 1 (the cold pass, comparable to
+    # every prior round's recording); the per-query ``queries`` map is
+    # the warm-min (round-6 verdict item: per-query regression tables
+    # must not mix cold-start noise). Every recording carries its own
+    # same-machine repeat, so drift questions are answerable from the
+    # artifact alone (SCALE.md round-5 bisect).
+    passes = timed_passes(spark, HEADLINE, sf_dir)
+    runs = [wall_times(p) for p in passes]
 
     total = round(sum(runs[0].values()), 3)
     # Retrieval-quality regression guard (round-9 verdict stretch #8):
@@ -217,9 +218,7 @@ def main() -> int:
             "recall_ivf": float(row["recall_ivf"]),
             "wall_sec": wall,
         }
-    warm_min = {
-        name: round(min(r[name] for r in runs[1:]), 3) for name in HEADLINE
-    }
+    warm = warm_min(runs)
     run_totals = [round(sum(r.values()), 3) for r in runs]
     # Artifact-semantics marker (round-8 advice): in v1 artifacts
     # (BENCH_r01..r06) `queries` held the COLD run-1 timings; v2 (r07+)
@@ -238,8 +237,12 @@ def main() -> int:
     # ``BENCH_full.json``; stdout's last line is a compact headline
     # (per-query warm-min at 2 decimals) sized for the driver's
     # 2000-char tail capture, which r10's single fat line overflowed
-    # (BENCH_r10.json parsed=null). Cross-round per-query tooling must
-    # branch on this field instead of silently comparing semantics.
+    # (BENCH_r10.json parsed=null). v6 keeps v5 timing semantics and
+    # adds `records`: per pass, each query's `run_query` record
+    # (construct/execute/release wall, their sum `wall_s` — the
+    # query's time — and `persisted_n`). Cross-round per-query tooling
+    # must branch on this field instead of silently comparing
+    # semantics.
     # Scaling legibility (round-11 verdict #2): the effective master
     # and scheduler parallelism, read back from the LIVE context — not
     # an echo of the env var — so the driver's low-core run can verify
@@ -252,14 +255,15 @@ def main() -> int:
         "metric": "headline_total_wall",
         "value": total,
         "unit": "sec",
-        "queries": warm_min,
+        "queries": warm,
         "sf": sf,
         "runs": run_totals,
         "master": eff_master,
         "parallelism": eff_par,
         "queries_cold": runs[0],
         "queries_warm_runs": runs[1:],
-        "artifact_version": 5,
+        "records": passes,
+        "artifact_version": 6,
         "queries_semantics": "warm_min_noop_sink",
         "ann_recall": ann_recall,
     }
@@ -276,11 +280,11 @@ def main() -> int:
         # 2-decimal warm-min map: the driver tail budget is 2000 chars
         # and 34 queries at 3 decimals plus the raw passes was what
         # overflowed it in r10.
-        "queries": {k: round(v, 2) for k, v in warm_min.items()},
+        "queries": {k: round(v, 2) for k, v in warm.items()},
         "sf": sf,
         "runs": run_totals,
-        "warm_min_total": round(sum(warm_min.values()), 2),
-        "artifact_version": 5,
+        "warm_min_total": round(sum(warm.values()), 2),
+        "artifact_version": 6,
         "queries_semantics": "warm_min_noop_sink",
         "master": eff_master,
         "parallelism": eff_par,

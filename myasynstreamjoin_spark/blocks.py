@@ -21,13 +21,12 @@ Two primitives:
   it goes through the CacheManager, which only tracks
   ``df.persist()``-style cached plans, never the RDD-level
   checkpoint storage), so freeing them needs the RDD handles from
-  ``JavaSparkContext.getPersistentRDDs``. A kernel snapshots the live
-  ids at batch entry and releases everything NEW at commit time —
-  which also sweeps checkpoints made INSIDE library calls (the span
-  election's internal one, a caller's post-kernel gates), without
-  each site having to thread handles around. Blocks persisted before
-  the snapshot (static benchmark frames, prebuilt tables) are
-  untouched.
+  ``JavaSparkContext.getPersistentRDDs``. A batch snapshots the live
+  ids at entry and releases everything NEW when it ends — which also
+  sweeps checkpoints made INSIDE library calls (the span election's
+  internal one, a caller's post-kernel gates), without each site
+  having to thread handles around. Blocks persisted before the
+  snapshot (static benchmark frames, prebuilt tables) are untouched.
 
 - ``batch_scope(spark)`` — the safe wrapper around the pair. The raw
   snapshot/diff release frees EVERY RDD persisted context-wide since
@@ -158,7 +157,8 @@ def batch_scope(
 
 def scoped_batch(fn: Callable) -> Callable:
     """Decorator form of ``batch_scope`` for ``foreachBatch``
-    callbacks: the whole batch body runs inside one scope, so its
+    callbacks (``streaming.commits.drain_foreach_batch`` wraps every
+    batch body in it): the whole body runs inside one scope, so its
     checkpoint blocks are released exactly once per batch and never
     while another scope on the same context is mid-flight."""
 

@@ -376,7 +376,10 @@ def write_line_index(
 
     ``mode="append"`` is the steady-state: after a delta is admitted,
     append its surviving NEW lines; appends land in the same buckets,
-    so the exchange-free probe plans survive updates.
+    so the exchange-free probe plans survive updates. An append
+    skips every line the index already holds, so the index keeps one
+    row per line (which `line_dedup_against_index` relies on) and an
+    indexed line keeps its original first occurrence.
     """
     from myasynstreamjoin_spark.sources.sinks import write_bucketed
 
@@ -391,6 +394,9 @@ def write_line_index(
             F.col("first.line_no").alias("keep_line_no"),
         )
     )
+    spark = docs.sparkSession
+    if mode == "append" and spark.catalog.tableExists(table):
+        firsts = firsts.join(spark.table(table).select("line"), "line", "left_anti")
     write_bucketed(
         firsts, table, ["line"], n_buckets=n_buckets,
         sort_cols=["line"], path=path, mode=mode,

@@ -37,7 +37,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.blocks import scoped_batch
 from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
     latest_version,
@@ -131,7 +130,6 @@ def run_stream_cdc_chunks(
     accumulate under ``{work_dir}/chunks/v{N}``."""
     index_dir = os.path.join(work_dir, "chunks")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch_chunks(
             batch_df, index_dir, int(batch_id), w, mask_bits, text_col

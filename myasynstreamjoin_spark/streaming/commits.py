@@ -21,7 +21,10 @@ Rules:
   half-written, version and lands on the state the batch originally
   saw, so the replay reproduces the original output;
 - the drain: ``checkpointLocation`` → ``processAllAvailable`` →
-  ``stop`` in a ``finally``.
+  ``stop`` in a ``finally``;
+- each micro-batch body runs inside one ``blocks.batch_scope``: every
+  block it persists is released when it returns or raises, and no
+  other scope on the same SparkContext runs meanwhile.
 """
 
 from __future__ import annotations
@@ -32,6 +35,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myasynstreamjoin_spark.blocks import scoped_batch
+
 _SUCCESS = "_SUCCESS"
 _VERSION_RE = re.compile(r"^v(\d+)$")
 _BATCH_RE = re.compile(r"^b(\d+)$")
@@ -40,11 +45,12 @@ _SNAPSHOT_RE = re.compile(r"^s(\d+)\.json$")
 
 def drain_foreach_batch(stream: DataFrame, checkpoint_dir: str, process) -> None:
     """Run a (bounded, for tests) stream through ``process`` to
-    exhaustion and stop it, whatever ``process`` raises."""
+    exhaustion and stop it, whatever ``process`` raises. Each call of
+    ``process`` runs inside its own ``blocks.batch_scope``."""
     q = (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(process)
+        .foreachBatch(scoped_batch(process))
         .start()
     )
     try:

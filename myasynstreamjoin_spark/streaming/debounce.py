@@ -31,15 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # event-grain per-batch checkpoints follow the corpus-grain rule
-# (DISK_ONLY + RDD-level end-of-batch release — see
-# myasynstreamjoin_spark/blocks.py): bounded replays deliver half the
-# corpus per "batch", so these are corpus-grain, not trigger-sized.
-from myasynstreamjoin_spark.blocks import (
-    ckpt_disk,
-    persisted_ids,
-    release_blocks,
-    scoped_batch,
-)
+# (DISK_ONLY — see myasynstreamjoin_spark/blocks.py): bounded replays
+# deliver half the corpus per "batch", so these are corpus-grain, not
+# trigger-sized. The batch scope of drain_foreach_batch releases them.
+from myasynstreamjoin_spark.blocks import ckpt_disk
 
 from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
@@ -58,15 +53,13 @@ def debounce_batch_with_state(
     events (batch-operator schema), commit_state() advances the
     per-key last-raw-ts state to v{batch_id}.
 
-    The internal snapshot→release pair is lock-free: direct callers
-    must not run concurrently with another batch body on the same
-    SparkContext (blocks.py constraint); the stream runners wrap each
-    batch in ``blocks.batch_scope``, which enforces this."""
+    The kernel releases none of its checkpoint blocks: call it inside
+    a ``blocks.batch_scope``, as every ``drain_foreach_batch`` body
+    runs, which releases them when the batch ends."""
     from myasynstreamjoin_spark.operators.sessions import debounce_events
 
     bid = int(batch_id)
     bspark = batch_df.sparkSession
-    pre_batch = persisted_ids(bspark)
 
     state = read_replay_base(
         bspark, state_dir, bid,
@@ -108,10 +101,6 @@ def debounce_batch_with_state(
         merged_state.write.mode("overwrite").parquet(
             os.path.join(state_dir, f"v{bid}")
         )
-        # commit runs LAST: the kept sink has already materialized —
-        # release the batch's checkpoint blocks at the RDD level
-        # (DataFrame.unpersist is a no-op for localCheckpoint storage)
-        release_blocks(bspark, pre_batch)
 
     return kept, commit_state
 
@@ -129,7 +118,6 @@ def run_stream_debounce(
     kept_dir = os.path.join(work_dir, "kept")
     state_dir = os.path.join(work_dir, "state")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         kept, commit_state = debounce_batch_with_state(
@@ -159,13 +147,12 @@ def throttle_batch_with_state(
     the LATEST bucket can span a batch boundary, so dropping batch
     survivors whose bucket equals the state bucket makes the streamed
     survivors exactly the batch `throttle_events` answer. Returns
-    ``(kept, commit_state)``. Same single-concurrent-batch constraint
-    as ``debounce_batch_with_state`` (blocks.py)."""
+    ``(kept, commit_state)``. Like ``debounce_batch_with_state``, it
+    leaves its checkpoint blocks to the enclosing batch scope."""
     from myasynstreamjoin_spark.operators.sessions import throttle_events
 
     bid = int(batch_id)
     bspark = batch_df.sparkSession
-    pre_batch = persisted_ids(bspark)
 
     state = read_replay_base(
         bspark, state_dir, bid,
@@ -205,10 +192,6 @@ def throttle_batch_with_state(
         merged_state.write.mode("overwrite").parquet(
             os.path.join(state_dir, f"v{bid}")
         )
-        # commit runs LAST: the kept sink has already materialized —
-        # release the batch's checkpoint blocks at the RDD level
-        # (DataFrame.unpersist is a no-op for localCheckpoint storage)
-        release_blocks(bspark, pre_batch)
 
     return kept, commit_state
 
@@ -223,7 +206,6 @@ def run_stream_throttle(
     kept_dir = os.path.join(work_dir, "kept")
     state_dir = os.path.join(work_dir, "state")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         kept, commit_state = throttle_batch_with_state(

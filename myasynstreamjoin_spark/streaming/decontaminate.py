@@ -29,7 +29,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.blocks import scoped_batch
 from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
     read_committed_batches,
@@ -56,7 +55,6 @@ def run_stream_decontaminate(
         .localCheckpoint(eager=True)
     )
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # batch_scope (blocks.py): the batch's checkpoint blocks are
         # released at scope exit, serialized against any concurrent
@@ -117,7 +115,6 @@ def run_stream_semantic_decontaminate(
     bench = bench_vecs.localCheckpoint(eager=True)
     bench_matrix = collect_benchmark_matrix(bench)
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.localCheckpoint(eager=True)
         out = semantic_decontaminate(

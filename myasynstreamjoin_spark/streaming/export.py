@@ -32,7 +32,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.blocks import scoped_batch
 from myasynstreamjoin_spark.streaming.commits import (
     committed_batch_dirs,
     drain_foreach_batch,
@@ -57,7 +56,6 @@ def run_stream_export_shards(
     data_dir = os.path.join(work_dir, "data")
     man_dir = os.path.join(work_dir, "manifest")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         bspark = batch_df.sparkSession

@@ -39,7 +39,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.blocks import scoped_batch
 from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
     read_committed_batches,
@@ -62,27 +61,21 @@ def dedup_batch_against_lines(
     ``commit_index()`` advances the versioned index to v{batch_id};
     call it LAST, after every other sink commits.
 
-    The internal snapshot→release pair is lock-free: direct callers
-    must not run concurrently with another batch body on the same
-    SparkContext (blocks.py constraint). ``run_stream_line_dedup``
-    wraps each batch in ``blocks.batch_scope``, which enforces this."""
+    The kernel releases none of its checkpoint blocks: call it inside
+    a ``blocks.batch_scope``, as every ``drain_foreach_batch`` body
+    runs, which releases them when the batch ends."""
     from myasynstreamjoin_spark.functions.lines import (
         _line_reassemble,
         doc_lines,
     )
 
-    from myasynstreamjoin_spark.blocks import (
-        ckpt_disk,
-        persisted_ids,
-        release_blocks,
-    )
+    from myasynstreamjoin_spark.blocks import ckpt_disk
 
     bid = int(batch_id)
     bspark = batch_df.sparkSession
     sep = " " if width is not None else delim
-    # corpus-grain rule + end-of-batch block release — see
-    # myasynstreamjoin_spark/blocks.py (round-7 streaming-e2e finding)
-    pre_batch = persisted_ids(bspark)
+    # corpus-grain rule — see myasynstreamjoin_spark/blocks.py
+    # (round-7 streaming-e2e finding)
     lines = ckpt_disk(doc_lines(batch_df, width, delim))
     cand = lines.where(F.length("line") >= min_chars).select(
         "line", "doc_id", "line_no"
@@ -117,10 +110,6 @@ def dedup_batch_against_lines(
         old_index.unionByName(new_index).distinct().write.mode(
             "overwrite"
         ).parquet(os.path.join(index_dir, f"v{bid}"))
-        # commit runs LAST: every sink has materialized — release the
-        # batch's checkpoint blocks at the RDD level (DataFrame
-        # .unpersist is a no-op for localCheckpoint storage).
-        release_blocks(bspark, pre_batch)
 
     return cleaned, commit_index
 
@@ -140,7 +129,6 @@ def run_stream_line_dedup(
     clean_dir = os.path.join(work_dir, "clean")
     index_dir = os.path.join(work_dir, "lines")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         cleaned, commit_index = dedup_batch_against_lines(

@@ -33,7 +33,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.blocks import scoped_batch
 from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
     read_committed_batches,
@@ -88,7 +87,6 @@ def run_stream_neardup(
     sh_dir = os.path.join(work_dir, "shingles")
     pairs_dir = os.path.join(work_dir, "pairs")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         bspark = batch_df.sparkSession

@@ -169,10 +169,9 @@ def run_stream_pipeline_e2e(
             os.path.join(man_dir, f"v{bid}")
         )
         # index advances LAST: a crash before this point replays the
-        # batch against the exact state it originally saw.
-        # commit_index() also releases EVERY checkpoint block this
-        # batch created — including `gated` above, which postdates the
-        # kernel's snapshot (myasynstreamjoin_spark/blocks.py).
+        # batch against the exact state it originally saw. Every
+        # checkpoint block this batch created, `gated` above included,
+        # is released by drain_foreach_batch's batch scope on return.
         commit_index()
 
     drain_foreach_batch(docs, checkpoint_dir, process)

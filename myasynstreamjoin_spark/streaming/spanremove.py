@@ -43,7 +43,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myasynstreamjoin_spark.blocks import scoped_batch
 from myasynstreamjoin_spark.streaming.commits import (
     drain_foreach_batch,
     read_committed_batches,
@@ -68,10 +67,9 @@ def clean_batch_against_index(
     crash replays the batch against the exact state it originally
     saw (`replay_base_version` is strictly-below).
 
-    The internal snapshot→release pair is lock-free: direct callers
-    must not run concurrently with another batch body on the same
-    SparkContext (blocks.py constraint). The stream runners wrap each
-    batch in ``blocks.batch_scope``, which enforces this."""
+    The kernel releases none of its checkpoint blocks: call it inside
+    a ``blocks.batch_scope``, as every ``drain_foreach_batch`` body
+    runs, which releases them when the batch ends."""
     from myasynstreamjoin_spark.functions.dedup import (
         _span_election_dels,
         _span_grams,
@@ -79,21 +77,10 @@ def clean_batch_against_index(
         _span_toked,
     )
 
-    from myasynstreamjoin_spark.blocks import (
-        ckpt_disk,
-        persisted_ids,
-        release_blocks,
-    )
+    from myasynstreamjoin_spark.blocks import ckpt_disk
 
     bid = int(batch_id)
     bspark = batch_df.sparkSession
-    # snapshot BEFORE any of this batch's checkpoints: commit_index()
-    # releases everything persisted after this point — grams, toked,
-    # the span election's internal checkpoint, and any post-kernel
-    # checkpoint the caller makes before committing (see
-    # myasynstreamjoin_spark/blocks.py for why DataFrame.unpersist
-    # cannot do this and why DISK_ONLY is the corpus-grain rule).
-    pre_batch = persisted_ids(bspark)
     toked = _span_toked(batch_df)
     grams = ckpt_disk(_span_grams(toked, k, hashed))
 
@@ -114,11 +101,6 @@ def clean_batch_against_index(
         old_index.unionByName(new_index).distinct().write.mode(
             "overwrite"
         ).parquet(os.path.join(grams_dir, f"v{bid}"))
-        # the contract says commit LAST: every sink that consumes this
-        # batch's frames has already materialized, so release ALL of
-        # the batch's checkpoint blocks synchronously (RDD-level —
-        # DataFrame.unpersist is a no-op for localCheckpoint storage).
-        release_blocks(bspark, pre_batch)
 
     return cleaned, commit_index
 
@@ -137,7 +119,6 @@ def run_stream_remove_spans(
     clean_dir = os.path.join(work_dir, "clean")
     grams_dir = os.path.join(work_dir, "grams")
 
-    @scoped_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
         cleaned, commit_index = clean_batch_against_index(

@@ -403,6 +403,51 @@ def test_index_append_steady_state(spark, line_index):
     assert again[0]["n_dup_index"] == again[0]["n_lines"]
 
 
+def test_index_append_keeps_one_row_per_line(spark, line_index):
+    """An append that repeats indexed lines adds only the new one: the
+    repeated lines keep their first occurrence, and a probe reads the
+    index as if the append had held the new line alone."""
+    write_line_index(
+        _docs(spark, [(41, "alpha beta gamma one two three brand new line", "web")]),
+        TABLE, width=W, n_buckets=4, mode="append",
+    )
+    rows = spark.table(TABLE).collect()
+    assert len(rows) == len({r["line"] for r in rows})
+    assert {r["line"]: r["keep_doc"] for r in rows} == {
+        "alpha beta gamma": 0,
+        "delta epsilon zeta": 0,
+        "one two three": 2,
+        "four five six": 2,
+        "brand new line": 41,
+    }
+
+    def probe(table):
+        delta = _docs(
+            spark, [(51, "alpha beta gamma brand new line fresh words here", "web")]
+        )
+        return sorted(
+            tuple(r) for r in line_dedup_against_index(delta, table, width=W).collect()
+        )
+
+    overlapping = probe(TABLE)
+    disjoint = "test_line_index_disjoint"
+    tmp = tempfile.mkdtemp(prefix="line_idx_")
+    write_line_index(
+        _docs(spark, [(0, "alpha beta gamma delta epsilon zeta", "web"),
+                      (2, "one two three four five six", "web")]),
+        disjoint, width=W, n_buckets=4, path=os.path.join(tmp, "idx"),
+    )
+    try:
+        write_line_index(
+            _docs(spark, [(41, "brand new line", "web")]),
+            disjoint, width=W, n_buckets=4, mode="append",
+        )
+        assert overlapping == probe(disjoint)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {disjoint}")
+    assert overlapping == [(51, 3, 2, 0, "fresh words here")]
+
+
 def test_index_probe_is_bucket_local(spark, line_index):
     """The index side must read bucket-local: zero Exchange above the
     index scan (the bucketed table's output partitioning already

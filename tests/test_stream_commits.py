@@ -1,19 +1,25 @@
 """The replay-safe commit protocol (streaming/commits.py): numeric
-batch order, strict name matching, the JSON snapshot rule, and the
-structural guard that keeps the protocol in that one module."""
+batch order, strict name matching, the JSON snapshot rule, the batch
+scope every drained micro-batch runs in, and the structural guard that
+keeps the protocol in that one module."""
 
 from __future__ import annotations
 
 import ast
+import threading
 from pathlib import Path
 
+import pytest
+
+from myasynstreamjoin_spark.blocks import batch_lock, ckpt_disk, persisted_ids
 from myasynstreamjoin_spark.streaming.commits import (
     committed_batch_dirs,
+    drain_foreach_batch,
     load_snapshot_below,
     mark_committed,
     save_snapshot,
 )
-from tests.conftest import code_nodes
+from tests.conftest import code_nodes, stage_stream_file
 
 STREAMING = Path(__file__).resolve().parent.parent / (
     "myasynstreamjoin_spark/streaming"
@@ -64,3 +70,69 @@ def test_only_commits_module_knows_the_protocol():
             if key in allowed and path.name not in allowed[key]:
                 found.append(f"{path.name}:{node.lineno} {key}")
     assert not found, "protocol code outside commits.py:\n" + "\n".join(found)
+
+
+def _drain(spark, tmp_path, process) -> None:
+    """Drain a two-file feed, one micro-batch per file, through
+    ``process``."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for i in range(2):
+        stage_stream_file(
+            spark.range(i * 50, (i + 1) * 50), feed, f"b{i}.parquet",
+            1_700_000_000 + i,
+        )
+    stream = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(feed))
+    )
+    drain_foreach_batch(stream, str(tmp_path / "ckpt"), process)
+
+
+def _other_thread_gets_batch_lock(spark) -> bool:
+    got = []
+
+    def try_lock():
+        lock = batch_lock(spark)
+        if lock.acquire(blocking=False):
+            lock.release()
+            got.append(True)
+
+    other = threading.Thread(target=try_lock)
+    other.start()
+    other.join(timeout=30)
+    assert not other.is_alive()
+    return bool(got)
+
+
+def test_drained_batch_runs_in_its_own_batch_scope(spark, tmp_path):
+    """Each batch body holds the batch lock against other threads, and
+    the blocks it checkpoints are gone once the drain returns."""
+    before = persisted_ids(spark)
+    seen = []
+
+    def process(batch_df, batch_id):
+        ckpt_disk(batch_df.selectExpr("id * 2 AS d")).count()
+        seen.append((persisted_ids(spark) - before, _other_thread_gets_batch_lock(spark)))
+
+    _drain(spark, tmp_path, process)
+    assert len(seen) == 2
+    assert all(made and not locked for made, locked in seen), seen
+    assert persisted_ids(spark) - before == set()
+    assert _other_thread_gets_batch_lock(spark)
+
+
+def test_drained_batch_that_raises_releases_its_blocks(spark, tmp_path):
+    before = persisted_ids(spark)
+    made = []
+
+    def process(batch_df, batch_id):
+        ckpt_disk(batch_df.selectExpr("id * 2 AS d")).count()
+        made.append(persisted_ids(spark) - before)
+        raise ValueError("batch body failed")
+
+    with pytest.raises(Exception, match="batch body failed"):
+        _drain(spark, tmp_path, process)
+    assert made and made[0], made
+    assert persisted_ids(spark) - before == set()

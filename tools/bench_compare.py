@@ -11,7 +11,10 @@ statistic — single-warm-run diffs whipsawed ±10-20% on sub-second
 queries); v5 (r11+) keeps v4 timing semantics but stdout carries only
 a COMPACT line (warm-min at 2 decimals) naming a committed
 ``BENCH_full.json`` with the cold run and raw warm passes — ``load``
-merges the full artifact in when the headline values match.
+merges the full artifact in when the headline values match; v6 keeps
+v5 timing semantics (a query's time is its ``observe.run_query``
+construct + execute + release wall) and adds those per-pass records
+to the full artifact, so v5↔v6 diffs compare the same statistic.
 Comparing across versions silently reads as a regression
 (or an improvement) that is really a measurement-semantics change —
 BASELINE.md's v3 anchor section and the round-8 verdict both require

@@ -3,7 +3,9 @@ headliners at a compute-bound scale under the CURRENT
 ``$SPARK_GRAFT_CPUS``, with warm min-of-2 semantics (one warmup pass,
 two measured passes, per-query min — the bench's own de-noising
 statistic; a single cold pass mixes JIT/codegen into the ratio, which
-is exactly what made the sf0.1 scaling block unreadable).
+is exactly what made the sf0.1 scaling block unreadable). The passes
+are ``bench.timed_passes``, so each query is timed as the bench times
+it.
 
 Run once per core count; each run is its own JVM so the core count is
 real:
@@ -24,16 +26,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as contract  # noqa: E402
-from myasynstreamjoin_spark.blocks import (  # noqa: E402
-    batch_lock,
-    persisted_ids,
-    release_blocks,
-)
+import bench  # noqa: E402
 from myasynstreamjoin_spark.session import get_spark  # noqa: E402
 
 # The heavy batch headliners (r11 driver bench, descending warm cost),
@@ -55,7 +51,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else ".scratch/sf1ish"
     names = sys.argv[2:] or DEFAULT
     spark = get_spark(app_name="core_probe")
-    queries = contract.queries()
 
     out: dict[str, object] = {
         "sf_dir": sf_dir,
@@ -65,26 +60,11 @@ def main() -> int:
         "driver_memory": spark.sparkContext.getConf().get("spark.driver.memory"),
         "semantics": "warm_min_of_2_noop_sink",
     }
-    per_pass: list[dict[str, float]] = []
-    for _pass in range(3):
-        timings: dict[str, float] = {}
-        for name in names:
-            fn = queries[name]
-            spark.sparkContext.setJobDescription(f"core_probe:{name}")
-            pre = persisted_ids(spark)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            with batch_lock(spark):
-                release_blocks(spark, pre)
-            spark.sparkContext.setJobDescription(None)
-            print(f"# pass{_pass} {name}: {timings[name]}s", file=sys.stderr)
-        per_pass.append(timings)
-        spark.catalog.clearCache()
+    per_pass = [
+        bench.wall_times(p) for p in bench.timed_passes(spark, names, sf_dir)
+    ]
     out["queries_cold"] = per_pass[0]
-    out["queries"] = {
-        n: round(min(p[n] for p in per_pass[1:]), 3) for n in names
-    }
+    out["queries"] = bench.warm_min(per_pass)
     out["passes"] = per_pass
     json.dump(out, sys.stdout, indent=1)
     print()

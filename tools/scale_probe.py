@@ -2,8 +2,10 @@
 
 Runs the shuffle- and explode-heavy queries against the 10×-sf0.1
 corpus built by tools/make_scale_probe.py and reports, per query:
-wall time, output rows, and the executor-aggregated shuffle/spill
-metrics pulled from the Spark status store (the numbers SCALE.md
+output rows, the ``observe.run_query`` record (construct, execute and
+release wall, ``wall_s``, ``persisted_n``), and the query's jobs,
+stages, spill and shuffle read/write (MiB) from the Spark status
+store via ``perfbench.probes.StatusDelta`` (the numbers SCALE.md
 records). Exits non-zero on any query error.
 
 Usage: python tools/scale_probe.py [probe_dir] [query ...]
@@ -18,15 +20,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract  # noqa: E402
+from myasynstreamjoin_spark.observe import run_query  # noqa: E402
 from myasynstreamjoin_spark.session import (  # noqa: E402
     get_spark,
     prepare_streaming_scale,
 )
+from perfbench.probes import StatusDelta  # noqa: E402
 
 PROBE_DIR = sys.argv[1] if len(sys.argv) > 1 else ".scratch/sf1ish"
 DEFAULT = [
@@ -154,52 +157,6 @@ def materialize(df) -> int:
         "noop"
     ).mode("overwrite").save()
     return obs.get["n"]
-
-
-def stage_metrics(spark):
-    """Sum spill/shuffle bytes across all completed stages.
-
-    The AppStatusStore is fed by an ASYNC listener bus: reading it
-    right after an action returns undercounts the just-finished job
-    (round 8: a fresh-session q_asof_join probed 0 shuffle bytes while
-    its plan carries two exchanges — the task-end events were still in
-    the queue, and in multi-query runs the lag bleeds each query's
-    tail into the NEXT row). Drain the bus before reading so metrics
-    attribute to the query that produced them. Wall times were never
-    affected (measured synchronously around the action)."""
-    from py4j.protocol import Py4JError, Py4JNetworkError
-
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    try:
-        bus.waitUntilEmpty(30_000)
-    except Py4JNetworkError:
-        # dead gateway — surface it, never fall through to an
-        # unbounded no-arg wait (round-9 advice)
-        raise
-    except Py4JError:
-        # method-not-found: Spark variants lacking the timeout
-        # overload — ONLY this triggers the no-arg fallback
-        bus.waitUntilEmpty()
-    store = spark.sparkContext._jsc.sc().statusStore()
-    spill_mem = spill_disk = sh_read = sh_write = 0
-    jvm = spark.sparkContext._jvm
-    gw = spark.sparkContext._gateway
-    # Spark 4 signature: stageList(statuses, details, withSummaries,
-    # unsortedQuantiles, taskStatus) → scala Seq[StageData]
-    it = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        gw.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    ).iterator()
-    while it.hasNext():
-        s = it.next()
-        spill_mem += s.memoryBytesSpilled()
-        spill_disk += s.diskBytesSpilled()
-        sh_read += s.shuffleReadBytes()
-        sh_write += s.shuffleWriteBytes()
-    return spill_mem, spill_disk, sh_read, sh_write
 
 
 def _semantic_dedup_arrow(spark, sf_dir):
@@ -453,29 +410,15 @@ def main() -> int:
     queries["link_negatives_prebuilt"] = _link_negatives_prebuilt
     failures = 0
     records = []
-    base = stage_metrics(spark)
-    from myasynstreamjoin_spark.blocks import (
-        batch_lock,
-        persisted_ids,
-        release_blocks,
-    )
-
+    status = StatusDelta(spark)
     for name in NAMES:
-        t0 = time.perf_counter()
-        # Release every block the query persisted or checkpointed once
-        # the result is materialized — without this, corpus-grain
-        # checkpoint residue accumulates across the probe list until a
-        # later query heap-OOMs the shared JVM (measured round 8:
-        # remove_spans_hashed died under q_remove_spans' leftover
-        # blocks). Deliberately NOT batch_scope: holding the context
-        # lock across the whole query deadlocks the streaming twins,
-        # whose foreachBatch bodies take the same (per-thread
-        # re-entrant) lock from the micro-batch thread. The harness
-        # runs queries serially, so an unlocked snapshot + a brief
-        # locked diff-release after completion is race-free.
-        pre = persisted_ids(spark)
+        counted: list[int] = []
+        status.mark()
         try:
-            n = materialize(queries[name](spark, PROBE_DIR))
+            rec = run_query(
+                spark, queries[name], PROBE_DIR,
+                action=lambda df: counted.append(materialize(df)),
+            )
         except Exception as exc:  # noqa: BLE001
             print(f"{name}: FAIL {type(exc).__name__}: {exc}")
             records.append({"query": name, "error": f"{type(exc).__name__}: {exc}"})
@@ -488,8 +431,6 @@ def main() -> int:
             # the remaining rows measure THEIR query, not the corpse.
             try:
                 spark.range(1).count()
-                with batch_lock(spark):
-                    release_blocks(spark, pre)
             except Exception:
                 print(f"{name}: session unhealthy after failure — rebuilding")
                 try:
@@ -499,7 +440,7 @@ def main() -> int:
                 try:
                     spark = get_spark(app_name="scale-probe")
                     prepare_streaming_scale(spark)
-                    base = stage_metrics(spark)
+                    status = StatusDelta(spark)
                 except Exception as rexc:  # noqa: BLE001
                     # a hard executor OOM kills the shared local JVM;
                     # py4j launches ONE gateway per Python process, so
@@ -516,27 +457,28 @@ def main() -> int:
                     })
                     break
             continue
-        wall = time.perf_counter() - t0
-        with batch_lock(spark):
-            release_blocks(spark, pre)
-        cur = stage_metrics(spark)
-        delta = [c - b for c, b in zip(cur, base)]
-        base = cur
-        records.append(
-            {
-                "query": name,
-                "wall_sec": round(wall, 1),
-                "rows": n,
-                "spill_mem_mib": round(delta[0] / 2**20),
-                "spill_disk_mib": round(delta[1] / 2**20),
-                "shuffle_read_mib": round(delta[2] / 2**20),
-                "shuffle_write_mib": round(delta[3] / 2**20),
-            }
-        )
+        # Read the status store per job, not as a diff of cumulative
+        # stage sums: once it holds spark.ui.retainedStages stages,
+        # every new stage evicts an old one and such a diff shrinks
+        # toward 0.
+        m = status.collect()
+        row = {
+            "query": name,
+            "rows": counted[0],
+            **{k: round(v, 2) for k, v in rec.items()},
+            "jobs": int(m["jobs"]),
+            "stages": int(m["stages"]),
+            "spill_mib": round(m["spill_mb"]),
+            "shuffle_read_mib": round(m["shuffle_read_mb"]),
+            "shuffle_write_mib": round(m["shuffle_write_mb"]),
+        }
+        records.append(row)
         print(
-            f"{name}: {wall:.1f}s rows={n} "
-            f"spill_mem={delta[0]/2**20:.0f}MiB spill_disk={delta[1]/2**20:.0f}MiB "
-            f"shuffle_r={delta[2]/2**20:.0f}MiB shuffle_w={delta[3]/2**20:.0f}MiB"
+            f"{name}: {rec['wall_s']:.1f}s rows={row['rows']} "
+            f"construct={rec['construct_s']:.1f}s "
+            f"jobs={row['jobs']} spill={row['spill_mib']}MiB "
+            f"shuffle_r={row['shuffle_read_mib']}MiB "
+            f"shuffle_w={row['shuffle_write_mib']}MiB"
         )
     out = os.environ.get("SPARK_GRAFT_PROBE_JSON")
     if out:
