@@ -5,10 +5,10 @@ LAST stdout line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, ...}
 
-plus writes the FULL artifact (artifact_version 6: all three
+plus writes the FULL artifact (artifact_version 7: all three
 per-query passes with each query's ``run_query`` record, both ANN
-recall profiles) to ``BENCH_full.json`` at the repo root, which the
-round snapshot commits. The split exists because the driver records
+recall profiles, the warmup epoch) to ``BENCH_full.json`` at the repo
+root, which the round snapshot commits. The split exists because the driver records
 only a 2000-char tail of stdout: round 10's single fat line (3 runs x
 34 queries at 3 decimals) overflowed it and the driver artifact came
 back ``parsed: null`` — the compact line carries the headline value,
@@ -84,6 +84,13 @@ HEADLINE = [
     "q_tpch_q13",
     "q_tpch_q18",
 ]
+
+# Epoch of the untimed warmup before pass 1, recorded in the artifact so
+# that cold-pass comparisons across artifacts can branch on it: 1 warmed
+# q_word_count and q_minhash_pairs; 2 (round 12 on) also warms
+# q_remove_spans, q_semantic_dedup_arrow and a grammar stream. Bump it
+# whenever the warmup set below changes.
+WARMUP_VERSION = 2
 
 
 def grammar_warmup(spark, _sf_dir: str):
@@ -167,7 +174,7 @@ def main() -> int:
     # MEASUREMENT CHANGE, disclosed in OPTIMIZATION_r12.md: the run-1
     # "cold" total is lower from r12 on because this JIT/worker
     # startup now happens in the untimed warmup — same policy, wider
-    # coverage; pre-r12 cold anchors include it.
+    # coverage; pre-r12 cold anchors include it (WARMUP_VERSION 2).
     smoke = "/root/testdata/sf0.001"
     for wq in ("q_word_count", "q_minhash_pairs"):
         run_query(spark, queries[wq], smoke, action=lambda df: df.count())
@@ -240,7 +247,11 @@ def main() -> int:
     # (BENCH_r10.json parsed=null). v6 keeps v5 timing semantics and
     # adds `records`: per pass, each query's `run_query` record
     # (construct/execute/release wall, their sum `wall_s` — the
-    # query's time — and `persisted_n`). Cross-round per-query tooling
+    # query's time — and `persisted_n`). v7 keeps v6 timing semantics,
+    # adds each record's `codegen_compiles` (classes compiled during
+    # the query; 0 on a warm pass whose classes all come from the
+    # session's codegen cache) and `warmup_version` (the cold anchor's
+    # warmup epoch, WARMUP_VERSION). Cross-round per-query tooling
     # must branch on this field instead of silently comparing
     # semantics.
     # Scaling legibility (round-11 verdict #2): the effective master
@@ -263,7 +274,8 @@ def main() -> int:
         "queries_cold": runs[0],
         "queries_warm_runs": runs[1:],
         "records": passes,
-        "artifact_version": 6,
+        "artifact_version": 7,
+        "warmup_version": WARMUP_VERSION,
         "queries_semantics": "warm_min_noop_sink",
         "ann_recall": ann_recall,
     }
@@ -284,7 +296,8 @@ def main() -> int:
         "sf": sf,
         "runs": run_totals,
         "warm_min_total": round(sum(warm.values()), 2),
-        "artifact_version": 6,
+        "artifact_version": 7,
+        "warmup_version": WARMUP_VERSION,
         "queries_semantics": "warm_min_noop_sink",
         "master": eff_master,
         "parallelism": eff_par,

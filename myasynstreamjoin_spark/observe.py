@@ -27,8 +27,11 @@ def run_query(
 ) -> dict:
     """Build ``fn(spark, sf_dir)``, run ``action`` on it and release
     every block persisted since the call began. Returns ``{construct_s, execute_s, release_s, wall_s,
-    persisted_n}``: the wall of each phase, their sum, and how many
-    RDDs the query left persisted. An exception from ``fn`` or
+    persisted_n, codegen_compiles}``: the wall of each phase, their
+    sum, how many RDDs the query left persisted, and how many classes
+    Spark's code generator compiled while the query was built, run and
+    released (0 when every class came from the session's codegen cache;
+    ``session.get_spark`` sizes it). An exception from ``fn`` or
     ``action`` propagates after the release.
 
     The default action writes to the ``noop`` sink: every row and
@@ -44,6 +47,7 @@ def run_query(
     run one at a time here, so an unlocked snapshot plus a locked
     release after completion is race-free."""
     rec = {}
+    compiles = codegen_compiles(spark)
     before = persisted_ids(spark)
     t = time.perf_counter()
     try:
@@ -61,5 +65,14 @@ def run_query(
         with batch_lock(spark):
             release_blocks(spark, before)
         rec["release_s"] = time.perf_counter() - t
+    rec["codegen_compiles"] = codegen_compiles(spark) - compiles
     rec["wall_s"] = rec["construct_s"] + rec["execute_s"] + rec["release_s"]
     return rec
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """How many classes Spark's code generator has compiled in this JVM
+    so far: the count of its compile-time histogram. A class served
+    from the codegen cache is not counted."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

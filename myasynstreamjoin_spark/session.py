@@ -29,6 +29,17 @@ Design notes for scale (local[32] here, 1000-executor cluster target):
   (the reference's BigInt epoch timestamps,
   state/cluster/naive/HashJoin.scala:50) at the load boundary.
 - Arrow enabled for the Pandas-UDF slow paths (similarity, multimodal).
+- A codegen cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark's whole-stage code generator keeps
+  its compiled classes in one LRU per JVM, 100 entries by default. One
+  pass of perfbench's 10 headline queries cycles through 135 distinct
+  classes, so an LRU of 100 hardly ever hit: every warm pass compiled
+  (and the JIT re-compiled) 127-129 classes again. bench.py's 34
+  headliners cycle through ~490. The cap is a static conf, read once
+  per JVM, so only ``get_spark`` can set it: a session the harness
+  builds itself keeps Spark's 100, and ``prepare_session`` does not try
+  to set it (the warning would fire on every such session and change
+  nothing).
 """
 
 from __future__ import annotations
@@ -207,6 +218,16 @@ SHUFFLE_WIDTH = "spark.sql.shuffle.partitions"
 BATCH_WIDTH = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 STATE_WIDTH = "spark.sql.streaming.internal.stateStore.partitions"
 
+# Entries of Spark's codegen cache (module docstring). Measured working
+# sets on local[4]: 135 classes for perfbench's 10 headline queries at
+# sf0.01, ~490 for bench.py's 34 at sf0.1; 1000 holds the larger twice
+# over. An entry costs ~20 KB of retained heap (the generated source,
+# its bytecode stats and the loaded class) plus ~10 KB of metaspace,
+# measured as the drop after invalidating 490 entries, so the cap
+# bounds the cache at ~30 MB per JVM. A class whose source embeds a
+# per-run value (a stream's watermark literal) misses at any size.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def replay_state_partitions(
     spark: SparkSession, input_bytes: int, floor: int = 1
@@ -338,6 +359,9 @@ def get_spark(
         .config(SHUFFLE_WIDTH, str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # static: CodeGenerator reads it once per JVM, so it goes on the
+        # builder, not in SESSION_CONFS
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in SESSION_CONFS.items():
         builder = builder.config(k, v)

@@ -4,6 +4,7 @@ and the guard that keeps the harnesses from copying it."""
 from __future__ import annotations
 
 import ast
+import uuid
 from pathlib import Path
 
 import pytest
@@ -27,6 +28,7 @@ def test_run_query_counts_and_releases_a_checkpoint(spark):
     rec = run_query(spark, _checkpointed, "unused")
     assert set(rec) == {
         "construct_s", "execute_s", "release_s", "wall_s", "persisted_n",
+        "codegen_compiles",
     }
     assert rec["persisted_n"] == 1
     assert rec["wall_s"] == pytest.approx(
@@ -42,6 +44,21 @@ def test_run_query_passes_the_frame_to_the_action(spark):
     )
     assert seen == [100]
     assert rec["persisted_n"] == 1
+
+
+def test_run_query_counts_compiles_once_per_plan(spark):
+    """A plan the session has never built compiles its generated
+    classes; the same query run again takes them from the codegen
+    cache and compiles nothing."""
+    salt = uuid.uuid4().int % 1_000_003  # a plan no other test built
+
+    def fresh(spark, _sf_dir):
+        return spark.range(50).selectExpr(f"id * {salt} + 1 AS y")
+
+    first = run_query(spark, fresh, "unused")
+    again = run_query(spark, fresh, "unused")
+    assert first["codegen_compiles"] > 0
+    assert again["codegen_compiles"] == 0
 
 
 def _fail(df):

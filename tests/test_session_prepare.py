@@ -5,6 +5,8 @@ deliberate mid-session override is respected until ``force=True``. A
 conf the session refuses is warned about, never dropped silently.
 The two widths: a batch exchange starts at the core count, a stream's
 state at the rule's width, and only session.py names the width confs.
+A get_spark session's codegen cache holds a working set larger than
+Spark's default 100 classes.
 """
 
 from __future__ import annotations
@@ -251,3 +253,30 @@ def test_only_session_module_names_the_width_confs():
         and any(k in node.value for k in (SHUFFLE_WIDTH, BATCH_WIDTH, STATE_WIDTH))
     ]
     assert not found, "width conf named outside session.py:\n" + "\n".join(found)
+
+
+def test_codegen_cache_holds_a_repeated_working_set(spark):
+    """More distinct plans than Spark's default 100-entry codegen LRU,
+    built and executed twice on the get_spark session: the second round
+    compiles nothing. With Spark's cap of 100, most plans of the second
+    round had been evicted before they came back and were compiled
+    again."""
+    from myasynstreamjoin_spark.observe import codegen_compiles
+    from myasynstreamjoin_spark.session import CODEGEN_CACHE_ENTRIES
+
+    n = 110
+    assert n < CODEGEN_CACHE_ENTRIES
+    # one whole-stage class per literal; a salt no other test uses
+    salt = 7_000_003
+    exprs = [f"id * {salt + i} AS y" for i in range(n)]
+
+    def run_all() -> int:
+        start = codegen_compiles(spark)
+        for expr in exprs:
+            df = spark.range(1, numPartitions=1).selectExpr(expr)
+            # plan and compile on the driver, without a job per plan
+            df._jdf.queryExecution().executedPlan().execute()
+        return codegen_compiles(spark) - start
+
+    assert run_all() >= n
+    assert run_all() == 0

@@ -14,7 +14,10 @@ a COMPACT line (warm-min at 2 decimals) naming a committed
 merges the full artifact in when the headline values match; v6 keeps
 v5 timing semantics (a query's time is its ``observe.run_query``
 construct + execute + release wall) and adds those per-pass records
-to the full artifact, so v5↔v6 diffs compare the same statistic.
+to the full artifact, so v5↔v6 diffs compare the same statistic; v7
+keeps v6 timing semantics, adds each record's ``codegen_compiles`` and
+a ``warmup_version`` epoch for the untimed warmup, and ``--cold``
+warns when the two sides' warmup epochs differ (absent = unknown).
 Comparing across versions silently reads as a regression
 (or an improvement) that is really a measurement-semantics change —
 BASELINE.md's v3 anchor section and the round-8 verdict both require
@@ -136,6 +139,12 @@ def main() -> int:
             print(f"note: {name} is a v5 COMPACT line (warm-min at 2 "
                   "decimals; full artifact not found) — sub-10ms "
                   "deltas are rounding.")
+    if cold and old.get("warmup_version") != new.get("warmup_version"):
+        print(
+            f"note: warmup epochs differ ({old.get('warmup_version')} vs "
+            f"{new.get('warmup_version')}) — the cold pass measures the "
+            "warmup change as well as the code."
+        )
     qo, qn = pick(old, cold), pick(new, cold)
     common = sorted(set(qo) & set(qn))
     only_old = sorted(set(qo) - set(qn))

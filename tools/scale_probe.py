@@ -3,9 +3,9 @@
 Runs the shuffle- and explode-heavy queries against the 10×-sf0.1
 corpus built by tools/make_scale_probe.py and reports, per query:
 output rows, the ``observe.run_query`` record (construct, execute and
-release wall, ``wall_s``, ``persisted_n``), and the query's jobs,
-stages, spill and shuffle read/write (MiB) from the Spark status
-store via ``perfbench.probes.StatusDelta`` (the numbers SCALE.md
+release wall, ``wall_s``, ``persisted_n``, ``codegen_compiles``), and
+the query's jobs, stages, spill and shuffle read/write (MiB) from the
+Spark status store via ``perfbench.probes.StatusDelta`` (the numbers SCALE.md
 records). Exits non-zero on any query error.
 
 Usage: python tools/scale_probe.py [probe_dir] [query ...]
