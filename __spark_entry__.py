@@ -3560,31 +3560,37 @@ def _q_stream_min_count_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_stream_min_count_zero(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState) with the
-    reference's zero-if-incomplete emission, run to completion."""
-    from myasynstreamjoin_spark.streaming.stateful import stateful_min_count
+    """The flagship windowed min-count with the reference's
+    zero-if-incomplete emission (a window some source missed emits 0),
+    run to completion."""
     from myasynstreamjoin_spark.streaming.windowed import (
         run_stream_to_table,
         stream_events,
+        stream_min_count_per_window,
     )
 
     _prep(spark)
-    return run_stream_to_table(stateful_min_count(stream_events(spark, sf_dir), CFG), spark)
+    return run_stream_to_table(
+        stream_min_count_per_window(
+            stream_events(spark, sf_dir), CFG, emit_zero_if_incomplete=True
+        ),
+        spark,
+    )
 
 
 def _q_stream_max_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference A4 (grouped max via state) as the generalized custom
-    stateful operator: per (key, window) max of value, watermark-
-    triggered emission, run to completion."""
-    from myasynstreamjoin_spark.streaming.stateful import stateful_window_value
+    """Reference A4 (grouped max via state) as a watermarked windowed
+    aggregation: per (key, window) max of value, emitted when the
+    watermark passes the window end, run to completion."""
     from myasynstreamjoin_spark.streaming.windowed import (
         run_stream_to_table,
         stream_events,
+        stream_max_per_window,
     )
 
     _prep(spark)
     out = run_stream_to_table(
-        stateful_window_value(stream_events(spark, sf_dir), CFG, fold="max"), spark
+        stream_max_per_window(stream_events(spark, sf_dir), CFG), spark
     )
     return out.select("key", "ltw", F.round("val", 6).alias("max_val"))
 
@@ -4601,7 +4607,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_semantic_decontaminate": _q_semantic_decontaminate,  # embedding-space decon (re-shaped r9, REAL green r9)
         "q_stream_min_count_join": _q_stream_min_count_join,   # J1 via stream-stream join
         "q_stream_min_count_zero": _q_stream_min_count_zero,
-        "q_stream_max_window": _q_stream_max_window,      # A4 via generalized stateful op
+        "q_stream_max_window": _q_stream_max_window,      # A4 via windowed max
         "q_stream_update": _q_stream_update,              # update-output-mode windowed counts
         "q_stream_sliding": _q_stream_sliding,            # streaming sliding windows
         "q_stream_enrich": _q_stream_enrich,              # stream-static broadcast join

@@ -1,6 +1,6 @@
 """Python UDTF surface (U1): one row in → many rows out through a
 user-defined TABLE function, completing the UDF/UDAF/UDTF triad next
-to the engine's Arrow paths (`mapInPandas`, `applyInPandasWithState`).
+to the engine's Arrow paths (`mapInPandas`, `applyInPandas`).
 
 The reference's only row-expanding user code is its record un-batcher
 (P1, reproduced JVM-side in ``sources/fixtures.py``); a UDTF is the

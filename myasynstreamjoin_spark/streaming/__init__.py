@@ -1,10 +1,5 @@
 from myasynstreamjoin_spark.streaming.dedup import stream_distinct_user_counts
 from myasynstreamjoin_spark.streaming.feedback import adaptive_count_stream
-from myasynstreamjoin_spark.streaming.stateful import (
-    stateful_min_count,
-    stateful_window_value,
-)
-from myasynstreamjoin_spark.streaming.tws import tws_available, tws_min_count
 from myasynstreamjoin_spark.streaming.windowed import (
     run_stream_to_parquet,
     run_stream_to_table,
@@ -32,9 +27,5 @@ __all__ = [
     "stream_distinct_user_counts",
     "run_stream_to_table",
     "run_stream_to_parquet",
-    "stateful_min_count",
-    "stateful_window_value",
-    "tws_min_count",
-    "tws_available",
     "adaptive_count_stream",
 ]

@@ -23,7 +23,6 @@ import tempfile
 from collections import deque
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +46,8 @@ def adaptive_count_stream(
     input, and decisions is one record per micro-batch (most recent
     ``max_decisions`` retained): {batch_id, strategy, p1, m_total}.
     """
+    import pandas as pd
+
     from myasynstreamjoin_spark.operators.cost_model import batch_strategy
     from myasynstreamjoin_spark.operators.skew import split_skew_agg
     from myasynstreamjoin_spark.streaming.windowed import stream_events

@@ -18,6 +18,15 @@ The aggregation is keyed by (key, window) — the reference's "optimized
 state layout" (state/cluster/optimized/HashJoin.scala:70-108) is how
 Structured Streaming keys window state natively.
 
+Zero emission (the else-branch of the reference's completeness check,
+state/cluster/naive/HashJoin.scala:91-119) needs no custom state
+either: the window's state row holds one conditional count per source,
+so ``least`` of them is 0 exactly when some source never reported.
+``stream_min_count_per_window(..., emit_zero_if_incomplete=True)``
+emits every window some source touched, with that 0; the default keeps
+only complete windows. Either way a window is emitted once, when the
+watermark passes its end, and its state is evicted with it.
+
 Emission timing differs (micro-batch watermark vs per-partition
 punctuation), but the *final* table is identical; tests assert
 streaming/batch equivalence on the converged result (SURVEY.md §7
@@ -89,28 +98,42 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_epoch_ns(raw, ("ts",))
 
 
+def _event_columns(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The events stream as the min-count operators read it:
+    (etime TIMESTAMP, source INT, key STRING), source = user_id mod
+    the port count."""
+    return events.select(
+        F.expr("timestamp_micros(ts DIV 1000)").alias("etime"),
+        (F.col("user_id") % cfg.n_sources).cast("int").alias("source"),
+        F.col("event_type").alias("key"),
+    )
+
+
 def stream_min_count_per_window(
-    events: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
+    events: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    emit_zero_if_incomplete: bool = False,
 ) -> DataFrame:
     """Streaming flagship: per (key, tumbling event-time window), min
-    across sources of per-source counts, emitted only for complete
-    windows, in append mode (emission on watermark passage + state
-    eviction — the reference's T4/T5 semantics).
+    across sources of per-source counts, in append mode (emission on
+    watermark passage + state eviction — the reference's T4/T5
+    semantics). ``emit_zero_if_incomplete`` has the meaning of the
+    batch ``operators.asyn_join.min_count_per_window``: False emits
+    only complete windows, True also emits the others with min 0.
 
     Single stateful aggregation: per-source counts are pivoted into one
     conditional-count row per (key, window) — `least` of the source
     counts is the min, zero means incomplete. Output schema matches the
     batch operator: (key, ltw, min_cnt).
     """
-    with_time = events.select(
-        F.expr("timestamp_micros(ts DIV 1000)").alias("etime"),
-        (F.col("user_id") % cfg.n_sources).cast("int").alias("source"),
-        F.col("event_type").alias("key"),
+    return _windowed_min_count(
+        _event_columns(events, cfg), cfg, emit_zero_if_incomplete
     )
-    return _windowed_min_count(with_time, cfg)
 
 
-def _windowed_min_count(with_time: DataFrame, cfg: EngineConfig) -> DataFrame:
+def _windowed_min_count(
+    with_time: DataFrame, cfg: EngineConfig, emit_zero_if_incomplete: bool = False
+) -> DataFrame:
     """The flagship windowed-min-count aggregation over any
     (etime TIMESTAMP, source INT, key STRING) stream — shared by the
     events file stream and the grammar DataSource stream.
@@ -135,6 +158,7 @@ def _windowed_min_count(with_time: DataFrame, cfg: EngineConfig) -> DataFrame:
         for r in range(cfg.n_sources)
     )
     complete = " AND ".join(f"c{r} > 0" for r in range(cfg.n_sources))
+    where = "" if emit_zero_if_incomplete else f"WHERE {complete}"
     least = ", ".join(f"c{r}" for r in range(cfg.n_sources))
     return spark.sql(f"""
       SELECT key,
@@ -145,7 +169,7 @@ def _windowed_min_count(with_time: DataFrame, cfg: EngineConfig) -> DataFrame:
         FROM {{src}}
         GROUP BY key, window(etime, '{cfg.lgw_ms} milliseconds')
       )
-      WHERE {complete}
+      {where}
     """, src=src)
 
 
@@ -201,11 +225,7 @@ def stream_min_count_join(
 
     Output schema matches the batch/agg formulations: (key, ltw, min_cnt).
     """
-    with_time = events.select(
-        F.expr("timestamp_micros(ts DIV 1000)").alias("etime"),
-        (F.col("user_id") % cfg.n_sources).cast("int").alias("source"),
-        F.col("event_type").alias("key"),
-    )
+    with_time = _event_columns(events, cfg)
 
     def per_source(r: int) -> DataFrame:
         return (
@@ -222,6 +242,36 @@ def stream_min_count_join(
         "key",
         F.floor(F.unix_millis(F.col("w.start")) / cfg.lgw_ms).cast("long").alias("ltw"),
         F.least(*[F.col(f"c{r}") for r in range(cfg.n_sources)]).cast("long").alias("min_cnt"),
+    )
+
+
+def stream_max_per_window(
+    events: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """Reference A4 (grouped max via state, one-group-state/cluster/
+    RRGrouping.scala:88-96) as a watermarked windowed aggregation: per
+    (key, tumbling window) the max of ``value``, emitted and evicted in
+    append mode once the watermark passes the window end.
+
+    Output: (key, ltw, val).
+    """
+    parsed = events.select(
+        F.expr("timestamp_micros(ts DIV 1000)").alias("etime"),
+        F.col("event_type").alias("key"),
+        "value",
+    ).withWatermark("etime", cfg.watermark_delay)
+    return (
+        parsed.groupBy(
+            "key", F.window("etime", f"{cfg.lgw_ms} milliseconds").alias("w")
+        )
+        .agg(F.max("value").alias("val"))
+        .select(
+            "key",
+            F.floor(F.unix_millis(F.col("w.start")) / cfg.lgw_ms)
+            .cast("long")
+            .alias("ltw"),
+            "val",
+        )
     )
 
 
@@ -295,7 +345,9 @@ def run_stream_to_table(
 ) -> DataFrame:
     """Run a streaming DataFrame to completion over its (finite) file
     source and return the materialized result as a batch DataFrame
-    (memory sink + processAllAvailable).
+    (memory sink + processAllAvailable). The memory sink's temp view
+    is dropped before returning: the returned frame's plan already holds
+    the sink's rows, so the view would only outlive the query.
 
     The state width is ``session.replay_state_partitions`` of
     ``input_bytes`` (the replayed volume when the caller knows it, e.g.
@@ -315,22 +367,25 @@ def run_stream_to_table(
     width it was started with.
     """
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
-        with override_widths(
-            spark, state=replay_state_partitions(spark, input_bytes or 0)
-        ):
-            q = (
-                streaming_df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    try:
+        with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
+            with override_widths(
+                spark, state=replay_state_partitions(spark, input_bytes or 0)
+            ):
+                q = (
+                    streaming_df.writeStream.outputMode(output_mode)
+                    .format("memory")
+                    .queryName(name)
+                    .option("checkpointLocation", checkpoint)
+                    .start()
+                )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def stream_sessions(

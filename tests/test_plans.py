@@ -733,3 +733,30 @@ def test_q16_fact_side_never_shuffles_at_pair_grain(spark, sf_dir, duck):
     from tests.conftest import assert_matches_oracle
 
     assert_matches_oracle(df, duck, contract.oracle_sql()["q_tpch_q16"])
+
+
+@pytest.mark.parametrize("name", ["q_stream_min_count_zero", "q_stream_max_window"])
+def test_window_streams_use_native_state_store(spark, sf_dir, name, monkeypatch):
+    """The zero-emission and per-window max streams run on Spark's
+    windowed aggregation: a StateStoreSave in the streaming plan and no
+    Python-worker state node. The query's stream is taken from the
+    runner before it starts; explain plans it incrementally."""
+    from myasynstreamjoin_spark.streaming import windowed
+
+    streams = []
+
+    def capture(streaming_df, spark, **kwargs):
+        streams.append(streaming_df)
+        return streaming_df
+
+    monkeypatch.setattr(windowed, "run_stream_to_table", capture)
+    contract.queries()[name](spark, sf_dir)
+    (df,) = streams
+    # a spark.sql frame's parsed plan is not marked streaming, so explain
+    # a projection over its analyzed plan
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df.select("*")._jdf.queryExecution(), "simple"
+    )
+    assert "StateStoreSave" in plan, plan
+    for node in ("FlatMapGroupsInPandasWithState", "TransformWithStateInPandas"):
+        assert node not in plan, plan

@@ -19,7 +19,6 @@ import pytest
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG as CFG
 from myasynstreamjoin_spark.operators.asyn_join import min_count_per_window
 from myasynstreamjoin_spark.sources import fixtures
-from myasynstreamjoin_spark.streaming.stateful import stateful_min_count
 from myasynstreamjoin_spark.streaming.windowed import (
     run_stream_to_table,
     stream_events,
@@ -80,10 +79,16 @@ def test_stream_join_formulation_equals_batch(spark, sf_dir, ripe_filter):
 
 
 def test_stateful_zero_semantics_stream_equals_batch(spark, sf_dir, ripe_filter):
+    """Zero emission on the native windowed aggregation: every window
+    some source touched is emitted once ripe, with 0 when a source is
+    missing — the batch operator's emit_zero_if_incomplete answer."""
     got = {
         tuple(r)
         for r in run_stream_to_table(
-            stateful_min_count(stream_events(spark, sf_dir), CFG), spark
+            stream_min_count_per_window(
+                stream_events(spark, sf_dir), CFG, emit_zero_if_incomplete=True
+            ),
+            spark,
         ).collect()
     }
     batch = {
@@ -117,14 +122,10 @@ def test_parquet_file_sink_matches_memory_sink(spark, sf_dir, tmp_path):
 
 
 def test_generalized_stateful_folds_equal_batch(spark, sf_dir):
-    """The scalar generalization of the stateful op (A4 grouped max /
-    sum via state) converges to the batch answer on ripe windows; sum
-    compared with a float tolerance (accumulation order differs)."""
-    import math
-
-    from myasynstreamjoin_spark.streaming.stateful import stateful_window_value
-
+    """The per-window max stream (A4 grouped max via state) converges to
+    the batch answer on ripe windows."""
     from myasynstreamjoin_spark.sources import tables
+    from myasynstreamjoin_spark.streaming.windowed import stream_max_per_window
 
     ev = tables.load_table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
@@ -134,23 +135,31 @@ def test_generalized_stateful_folds_equal_batch(spark, sf_dir):
         F.floor((F.col("ts") / 1_000_000) / CFG.lgw_ms).cast("long").alias("ltw"),
         "value",
     )
-    for fold, agg in (("max", F.max("value")), ("sum", F.sum("value"))):
-        got = {
-            (r["key"], r["ltw"]): r["val"]
-            for r in run_stream_to_table(
-                stateful_window_value(stream_events(spark, sf_dir), CFG, fold=fold),
-                spark,
-            ).collect()
-        }
-        batch = {
-            (r["key"], r["ltw"]): r["v"]
-            for r in parsed.groupBy("key", "ltw").agg(agg.alias("v")).collect()
-            if (r["ltw"] + 1) * CFG.lgw_ms <= wm_ms
-        }
-        assert set(got) == set(batch), fold
-        assert got, fold
-        for k, v in batch.items():
-            assert math.isclose(got[k], v, rel_tol=1e-9), (fold, k)
+    got = {
+        (r["key"], r["ltw"]): r["val"]
+        for r in run_stream_to_table(
+            stream_max_per_window(stream_events(spark, sf_dir), CFG), spark
+        ).collect()
+    }
+    batch = {
+        (r["key"], r["ltw"]): r["v"]
+        for r in parsed.groupBy("key", "ltw").agg(F.max("value").alias("v")).collect()
+        if (r["ltw"] + 1) * CFG.lgw_ms <= wm_ms
+    }
+    assert got == batch
+    assert got
+
+
+def test_run_stream_to_table_leaves_no_temp_view(spark, sf_dir):
+    """The memory sink registers its query name as a temp view; the
+    runner drops it, and the returned frame still holds the rows."""
+    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    out = run_stream_to_table(
+        stream_min_count_per_window(stream_events(spark, sf_dir), CFG), spark
+    )
+    after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert after - before == set()
+    assert out.count() > 0
 
 
 def test_rocksdb_state_store_equivalence(spark, sf_dir, ripe_filter):
