@@ -22,6 +22,7 @@ Conventions keeping the two engines hash-identical:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,37 +56,72 @@ def _sql_views(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, str]:
 # entry: flagship query (stateful async join, SURVEY.md §7 phase 1)
 # --------------------------------------------------------------------
 
-def _stage_parquet_feed(frames, name: str) -> tuple[DataFrame, str]:
-    """Stage DataFrames as single-file parquet micro-batches under
-    ``{tmp}/feed`` (``tmp`` a new ``stream_{name}_`` temp dir) with
-    strictly increasing mtimes, and open a maxFilesPerTrigger=1 file
-    stream over them with the first frame's schema, which replays them
-    as ordered micro-batches — the shared fixture recipe of every
-    streaming twin. Returns ``(stream, tmp)``."""
+@functools.cache
+def _twin_root() -> str:
+    """The one dir of this process that every streaming twin stages
+    under, removed at interpreter exit: a twin's frame reads lazily
+    from its dir, so no twin dir can go before the process does. A
+    forked child inherits the root but leaves its removal to the
+    owner."""
+    import atexit
     import os
     import shutil
     import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="stream_" + name + "_")
+    root = tempfile.mkdtemp(prefix="stream_twins_")
+    owner = os.getpid()
+
+    def remove() -> None:
+        if os.getpid() == owner:
+            shutil.rmtree(root, ignore_errors=True)
+
+    atexit.register(remove)
+    return root
+
+
+def _by_parity(df: DataFrame, col: str) -> tuple[DataFrame, DataFrame]:
+    """Even then odd ``col``: an unordered two-batch split."""
+    return df.where(F.col(col) % 2 == 0), df.where(F.col(col) % 2 == 1)
+
+
+def _at_median(df: DataFrame, col: str) -> tuple[DataFrame, DataFrame]:
+    """``col`` up to its median, then above it: an ascending split."""
+    mid = df.agg(F.expr(f"percentile({col}, 0.5)")).collect()[0][0]
+    return df.where(F.col(col) <= mid), df.where(F.col(col) > mid)
+
+
+def _stream_twin(
+    name: str,
+    frames,
+    run: Callable[[DataFrame, str], object],
+    read: Callable[[str], DataFrame],
+) -> DataFrame:
+    """The recipe of every foreachBatch streaming twin: stage
+    ``frames`` as single-file parquet micro-batches with strictly
+    increasing mtimes in a new ``stream_{name}_`` dir of the twin root,
+    open a maxFilesPerTrigger=1 file stream over them with the first
+    frame's schema (which replays them as ordered micro-batches), drain
+    it with ``run(stream, work_dir)``, and return ``read(work_dir)``."""
+    import os
+    import tempfile
+
+    from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
+
+    tmp = tempfile.mkdtemp(prefix=f"stream_{name}_", dir=_twin_root())
     feed = os.path.join(tmp, "feed")
     os.makedirs(feed)
     for i, frame in enumerate(frames):
-        staging = os.path.join(tmp, f"stage{i}")
-        frame.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(
-            f for f in os.listdir(staging)
-            if f.startswith("part-") and f.endswith(".parquet")
+        stage_stream_file(
+            frame, feed, f"f{i}.parquet", 1_700_000_000 + 100 * i
         )
-        dst = os.path.join(feed, f"f{i}.parquet")
-        shutil.move(os.path.join(staging, part), dst)
-        shutil.rmtree(staging)
-        os.utime(dst, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
     stream = (
         frames[0].sparkSession.readStream.schema(frames[0].schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    return stream, tmp
+    work = os.path.join(tmp, "work")
+    run(stream, work)
+    return read(work)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -787,8 +823,6 @@ def _q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks union to EXACTLY the batch operator's pair set — so the
     stream satisfies the same replayable oracle
     (streaming/neardup.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.neardup import (
         read_neardup_pairs,
         run_stream_neardup,
@@ -798,25 +832,15 @@ def _q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    stream, tmp = _stage_parquet_feed(
-        (
-            docs.where(F.col("doc_id") % 2 == 0),
-            docs.where(F.col("doc_id") % 2 == 1),
-        ),
+    return _stream_twin(
         "neardup",
+        _by_parity(docs, "doc_id"),
+        lambda stream, work: run_stream_neardup(
+            stream, spark, work,
+            n_hashes=32, bands=8, k=3, threshold=0.2, replayable=True,
+        ),
+        lambda work: read_neardup_pairs(spark, work),
     )
-    run_stream_neardup(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "nd"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        n_hashes=32,
-        bands=8,
-        k=3,
-        threshold=0.2,
-        replayable=True,
-    )
-    return read_neardup_pairs(spark, os.path.join(tmp, "nd"))
 
 
 def _q_stream_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -825,8 +849,6 @@ def _q_stream_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch operator's (doc_id, pos) order and the per-batch cleaned
     sinks union to EXACTLY the batch answer — shared DuckDB oracle
     (streaming/spanremove.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.spanremove import (
         read_clean_docs,
         run_stream_remove_spans,
@@ -836,22 +858,12 @@ def _q_stream_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    stream, tmp = _stage_parquet_feed(
-        (
-            docs.where(F.col("doc_id") <= mid),
-            docs.where(F.col("doc_id") > mid),
-        ),
+    return _stream_twin(
         "spans",
+        _at_median(docs, "doc_id"),
+        lambda stream, work: run_stream_remove_spans(stream, spark, work, k=8),
+        lambda work: read_clean_docs(spark, work),
     )
-    run_stream_remove_spans(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "rs"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        k=8,
-    )
-    return read_clean_docs(spark, os.path.join(tmp, "rs"))
 
 
 def _q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,8 +871,6 @@ def _q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     two micro-batches and are filtered against the static src0/src1
     benchmark gram set at ingest; the per-batch clean sinks union to
     EXACTLY the batch operator's clean set (shared oracle)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.decontaminate import (
         read_clean_ids,
         run_stream_decontaminate,
@@ -875,22 +885,14 @@ def _q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.where(F.col("source").isin(*bench_sources)).select(
         "doc_id", "text"
     )
-    stream, tmp = _stage_parquet_feed(
-        (
-            train.where(F.col("doc_id") % 2 == 0),
-            train.where(F.col("doc_id") % 2 == 1),
-        ),
+    return _stream_twin(
         "decon",
+        _by_parity(train, "doc_id"),
+        lambda stream, work: run_stream_decontaminate(
+            stream, spark, bench, work, k=8
+        ),
+        lambda work: read_clean_ids(spark, work),
     )
-    run_stream_decontaminate(
-        stream,
-        spark,
-        bench,
-        work_dir=os.path.join(tmp, "dc"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        k=8,
-    )
-    return read_clean_ids(spark, os.path.join(tmp, "dc"))
 
 
 def _q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2295,8 +2297,6 @@ def _q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/drift.py). Bucket bounds are pinned up front from the
     corpus min/max, the fixed-reference-range shape a production
     monitor deploys with."""
-    import os
-
     from myasynstreamjoin_spark.streaming.drift import (
         read_drift,
         run_streaming_drift,
@@ -2322,19 +2322,15 @@ def _q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("w")
         .collect()
     ]
-    stream, tmp = _stage_parquet_feed(
-        [events.where(F.expr(f"ts DIV {week}L") == w) for w in wins], "drift"
+    return _stream_twin(
+        "drift",
+        [events.where(F.expr(f"ts DIV {week}L") == w) for w in wins],
+        lambda stream, work: run_streaming_drift(
+            stream, spark, work,
+            bounds=(int(b["mn"]), int(b["mx"])), window_ns=week,
+        ),
+        lambda work: read_drift(spark, work),
     )
-    out_dir = os.path.join(tmp, "drift")
-    run_streaming_drift(
-        stream,
-        spark,
-        out_dir=out_dir,
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        bounds=(int(b["mn"]), int(b["mx"])),
-        window_ns=week,
-    )
-    return read_drift(spark, out_dir)
 
 
 def _q_pipeline_e2e(
@@ -2434,8 +2430,6 @@ def _q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the latest version equals the batch manifest of the whole corpus —
     the statistics are order-free integer sums, so ANY batch split
     satisfies the same oracle (streaming/export.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.export import (
         read_export_manifest,
         run_stream_export_shards,
@@ -2443,21 +2437,14 @@ def _q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
-    stream, tmp = _stage_parquet_feed(
-        (
-            docs.where(F.col("doc_id") % 2 == 0),
-            docs.where(F.col("doc_id") % 2 == 1),
-        ),
+    return _stream_twin(
         "export",
+        _by_parity(docs, "doc_id"),
+        lambda stream, work: run_stream_export_shards(
+            stream, spark, work, n_shards=16
+        ),
+        lambda work: read_export_manifest(spark, work),
     )
-    run_stream_export_shards(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "ex"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        n_shards=16,
-    )
-    return read_export_manifest(spark, os.path.join(tmp, "ex"))
 
 
 def _q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2470,8 +2457,6 @@ def _q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shard rows, so this query shares q_pipeline_e2e's oracle
     (streaming/pipeline_e2e.py documents the stage-by-stage
     stream ≡ batch argument)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.pipeline_e2e import (
         read_pipeline_manifest,
         run_stream_pipeline_e2e,
@@ -2488,22 +2473,17 @@ def _q_stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     half = docs.count() // 2  # ascending doc_id ranges (stream ≡ batch)
-    stream, tmp = _stage_parquet_feed(
+    return _stream_twin(
+        "pipeline",
         (
             train.where(F.col("doc_id") < half),
             train.where(F.col("doc_id") >= half),
         ),
-        "pipeline",
+        lambda stream, work: run_stream_pipeline_e2e(
+            stream, spark, bench, work
+        ),
+        lambda work: read_pipeline_manifest(spark, work),
     )
-    work = os.path.join(tmp, "work")
-    run_stream_pipeline_e2e(
-        stream,
-        spark,
-        bench,
-        work_dir=work,
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
-    return read_pipeline_manifest(spark, work)
 
 
 def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3189,8 +3169,6 @@ def _q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch merges every batch into a versioned parquet snapshot
     (streaming/cdc.py). The final snapshot satisfies the SAME oracle as
     the batch MERGE — stream ≡ batch for the CDC path."""
-    import os
-
     from myasynstreamjoin_spark.streaming.cdc import (
         read_snapshot,
         run_cdc_stream,
@@ -3216,15 +3194,14 @@ def _q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2).cast("long").alias("gen"),
     ).select(*data, "op", "gen")
 
-    changes, tmp = _stage_parquet_feed((seed, g1, g2), "cdc")
-    run_cdc_stream(
-        changes,
-        snapshot_dir=os.path.join(tmp, "snap"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        keys=("o_orderkey",),
-        order_cols=("gen",),
+    return _stream_twin(
+        "cdc",
+        (seed, g1, g2),
+        lambda stream, work: run_cdc_stream(
+            stream, work, keys=("o_orderkey",), order_cols=("gen",)
+        ),
+        lambda work: read_snapshot(spark, work).select(*data),
     )
-    return read_snapshot(spark, os.path.join(tmp, "snap")).select(*data)
 
 
 def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3925,8 +3902,6 @@ def _q_stream_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ascending requirement, unlike the line/span twins) and the twin
     shares q_cdc_chunks's DuckDB oracle verbatim
     (streaming/cdcchunks.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.cdcchunks import (
         read_chunk_stats,
         run_stream_cdc_chunks,
@@ -3936,21 +3911,12 @@ def _q_stream_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    stream, tmp = _stage_parquet_feed(
-        (
-            docs.where(F.col("doc_id") <= mid),
-            docs.where(F.col("doc_id") > mid),
-        ),
+    return _stream_twin(
         "cdc_chunks",
+        _at_median(docs, "doc_id"),
+        lambda stream, work: run_stream_cdc_chunks(stream, spark, work),
+        lambda work: read_chunk_stats(spark, work),
     )
-    run_stream_cdc_chunks(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "cc"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
-    return read_chunk_stats(spark, os.path.join(tmp, "cc"))
 
 
 def _q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3959,8 +3925,6 @@ def _q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator's (doc_id, line_no) election order and the per-batch
     cleaned sinks union to EXACTLY the batch answer — shared DuckDB
     oracle (streaming/linededup.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.linededup import (
         read_clean_docs,
         run_stream_line_dedup,
@@ -3970,22 +3934,14 @@ def _q_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    mid = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
-    stream, tmp = _stage_parquet_feed(
-        (
-            docs.where(F.col("doc_id") <= mid),
-            docs.where(F.col("doc_id") > mid),
-        ),
+    return _stream_twin(
         "lines",
+        _at_median(docs, "doc_id"),
+        lambda stream, work: run_stream_line_dedup(
+            stream, spark, work, width=12
+        ),
+        lambda work: read_clean_docs(spark, work),
     )
-    run_stream_line_dedup(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "ld"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        width=12,
-    )
-    return read_clean_docs(spark, os.path.join(tmp, "ld"))
 
 
 def _q_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3995,8 +3951,6 @@ def _q_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     are order-free and the reservoir equals the batch sampler under
     ANY batch arrangement, a stronger equality than the ascending-feed
     twins (streaming/sample.py)."""
-    import os
-
     from myasynstreamjoin_spark.functions.text import quality_score
     from myasynstreamjoin_spark.streaming.sample import (
         read_sample,
@@ -4005,22 +3959,14 @@ def _q_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     scored = quality_score(tables.load_table(spark, sf_dir, "documents"))
-    stream, tmp = _stage_parquet_feed(
-        (
-            scored.where(F.col("doc_id") % 2 == 0),
-            scored.where(F.col("doc_id") % 2 == 1),
-        ),
+    return _stream_twin(
         "wrs",
+        _by_parity(scored, "doc_id"),
+        lambda stream, work: run_stream_weighted_sample(
+            stream, spark, work, weight_col="quality", k=50
+        ),
+        lambda work: read_sample(spark, work).orderBy("doc_id"),
     )
-    run_stream_weighted_sample(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "wrs"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        weight_col="quality",
-        k=50,
-    )
-    return read_sample(spark, os.path.join(tmp, "wrs")).orderBy("doc_id")
 
 
 def _q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4202,8 +4148,6 @@ def _q_stream_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_theta_audience's batch answer integer-for-integer (pinned in
     tests/test_stream_sketches.py) — and therefore shares its exact
     set-algebra oracle (streaming/sketches.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.sketches import (
         read_theta_algebra,
         run_stream_theta_sketches,
@@ -4213,21 +4157,13 @@ def _q_stream_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "value"
     )
-    stream, tmp = _stage_parquet_feed(
-        (
-            ev.where(F.col("user_id") % 2 == 0),
-            ev.where(F.col("user_id") % 2 == 1),
-        ),
-        "theta",
-    )
-    run_stream_theta_sketches(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "wt"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
     pairs = [("click", "purchase"), ("view", "error"), ("signup", "click")]
-    return read_theta_algebra(spark, os.path.join(tmp, "wt"), pairs)
+    return _stream_twin(
+        "theta",
+        _by_parity(ev, "user_id"),
+        lambda stream, work: run_stream_theta_sketches(stream, spark, work),
+        lambda work: read_theta_algebra(spark, work, pairs),
+    )
 
 
 def _q_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4259,8 +4195,6 @@ def _q_stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel as a non-emittable pseudo-event), so the per-batch survivor
     sinks union to EXACTLY the batch answer — shared oracle
     (streaming/debounce.py)."""
-    import os
-
     from myasynstreamjoin_spark.streaming.debounce import (
         read_kept_events,
         run_stream_debounce,
@@ -4270,17 +4204,12 @@ def _q_stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.load_table(spark, sf_dir, "events").select(
         "ts", "user_id", "event_type", "event_id"
     )
-    mid = ev.agg(F.expr("percentile(ts, 0.5)")).collect()[0][0]
-    stream, tmp = _stage_parquet_feed(
-        (ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)), "deb"
+    return _stream_twin(
+        "deb",
+        _at_median(ev, "ts"),
+        lambda stream, work: run_stream_debounce(stream, spark, work),
+        lambda work: read_kept_events(spark, work),
     )
-    run_stream_debounce(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "deb"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
-    return read_kept_events(spark, os.path.join(tmp, "deb"))
 
 
 def _q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4288,9 +4217,7 @@ def _q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (key, last_bucket) state row drops the later half of any
     bucket spanning the boundary, so the per-batch survivor sinks
     union to EXACTLY the batch answer — shared oracle
-    (streaming/debounce.py::throttle_batch_with_state)."""
-    import os
-
+    (streaming/debounce.py::run_stream_throttle)."""
     from myasynstreamjoin_spark.streaming.debounce import (
         read_kept_events,
         run_stream_throttle,
@@ -4300,17 +4227,12 @@ def _q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.load_table(spark, sf_dir, "events").select(
         "ts", "user_id", "event_type", "event_id"
     )
-    mid = ev.agg(F.expr("percentile(ts, 0.5)")).collect()[0][0]
-    stream, tmp = _stage_parquet_feed(
-        (ev.where(F.col("ts") <= mid), ev.where(F.col("ts") > mid)), "thr"
+    return _stream_twin(
+        "thr",
+        _at_median(ev, "ts"),
+        lambda stream, work: run_stream_throttle(stream, spark, work),
+        lambda work: read_kept_events(spark, work),
     )
-    run_stream_throttle(
-        stream,
-        spark,
-        work_dir=os.path.join(tmp, "thr"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
-    return read_kept_events(spark, os.path.join(tmp, "thr"))
 
 
 def _q_observed_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

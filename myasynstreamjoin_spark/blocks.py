@@ -49,8 +49,12 @@ Direct callers outside ``batch_scope`` get no such protection.
 
 Releasing a locally-checkpointed RDD's blocks truncates its lineage
 irrecoverably — only call ``release_blocks`` at a point where the
-batch's every sink has already materialized (the kernels' documented
-commit-runs-LAST contract).
+batch's every sink has already materialized (``drain_foreach_batch``
+writes a batch's commit inside its scope, before the release).
+
+``static_checkpoint(df)`` covers the one frame a stream checkpoints
+OUTSIDE any batch scope — a static side every micro-batch reads — and
+releases exactly its blocks when the drain returns or raises.
 """
 
 from __future__ import annotations
@@ -153,6 +157,23 @@ def batch_scope(
             release_blocks(spark, before, blocking)
     finally:
         lock.release()
+
+
+@contextmanager
+def static_checkpoint(df: DataFrame) -> Iterator[DataFrame]:
+    """Eager localCheckpoint of ``df`` for a frame that outlives every
+    batch scope (the static side each micro-batch of a stream reads),
+    released when the block exits or raises. The checkpoint runs under
+    the batch lock, so the ids it releases are its own."""
+    spark = df.sparkSession
+    with _batch_lock(spark):
+        before = persisted_ids(spark)
+        out = df.localCheckpoint(eager=True)
+        mine = persisted_ids(spark) - before
+    try:
+        yield out
+    finally:
+        release_ids(spark, mine)
 
 
 def scoped_batch(fn: Callable) -> Callable:

@@ -26,16 +26,14 @@ the sink, never in the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     load_snapshot_below,
     read_committed_batches,
-    save_snapshot,
 )
 
 
@@ -49,7 +47,7 @@ def run_streaming_anomalies(
     events: DataFrame,
     spark: SparkSession,
     out_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     state_dir: str | None = None,
     group_col: str = "event_type",
     value_col: str = "value",
@@ -66,8 +64,7 @@ def run_streaming_anomalies(
     totals: dict[str, tuple[int, int, int]] = {}
     last_applied: list[int] = [-1]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
+    def process(batch_df: DataFrame, bid: int) -> Commit:
         if last_applied[0] != bid - 1:
             # first batch of this incarnation, or a replay: resume the
             # baselines from the newest snapshot BELOW this batch
@@ -83,6 +80,7 @@ def run_streaming_anomalies(
             for g, (n, s, ss) in totals.items()
             if n >= min_count
         ]
+        outputs = {}
         if prior:
             st = bspark.createDataFrame(
                 prior, f"{group_col} string, n string, s string, ss string"
@@ -94,7 +92,8 @@ def run_streaming_anomalies(
             )
             nx_s = F.col("__n") * F.col("__x") - F.col("__s")
             var_n2 = F.col("__n") * F.col("__ss") - F.col("__s") * F.col("__s")
-            flagged = (
+            # per-batch overwrite → replays replace, never duplicate
+            outputs[out_dir] = (
                 batch.join(F.broadcast(st), group_col)
                 .where(
                     nx_s * nx_s > F.lit(k * k).cast("decimal(38,0)") * var_n2
@@ -105,10 +104,6 @@ def run_streaming_anomalies(
                     value_col,
                     F.lit(bid).alias("batch_id"),
                 )
-            )
-            # per-batch overwrite → replays replace, never duplicate
-            flagged.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"b{bid}")
             )
         # 2) fold this batch into the running totals (|groups| rows)
         rows = (
@@ -125,8 +120,8 @@ def run_streaming_anomalies(
             totals[r[group_col]] = (
                 n0 + int(r["n"]), s0 + int(r["s"]), ss0 + int(r["ss"])
             )
-        save_snapshot(sdir, bid, totals)
         last_applied[0] = bid
+        return Commit(outputs=outputs, snapshot=(sdir, dict(totals)))
 
-    drain_foreach_batch(events, checkpoint_dir, process)
+    drain_foreach_batch(events, process, checkpoint_dir)
     return totals

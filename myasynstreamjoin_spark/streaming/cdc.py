@@ -26,17 +26,14 @@ is orthogonal to the merge semantics tested here).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from myasynstreamjoin_spark.operators.cdc import cdc_apply
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
-    is_committed,
     read_latest_version,
     read_replay_base,
-    version_dirs,
 )
 
 
@@ -48,7 +45,8 @@ def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
 def run_cdc_stream(
     changes: DataFrame,
     snapshot_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
+    *,
     keys: tuple[str, ...],
     order_cols: tuple[str, ...],
     op_col: str = "op",
@@ -57,56 +55,21 @@ def run_cdc_stream(
 
     ``changes`` is a streaming DataFrame carrying the snapshot's data
     columns plus ``op_col`` and ``order_cols``. Each micro-batch is
-    merged with ``cdc_apply`` and written as the next version.
+    merged with ``cdc_apply`` and committed as the next version; keep
+    at most two with ``commits.vacuum_versions``.
     """
     data_cols = [
         c for c in changes.columns if c != op_col and c not in order_cols
     ]
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def apply_batch(batch_df: DataFrame, bid: int) -> Commit:
         base = read_replay_base(
-            batch_df.sparkSession, snapshot_dir, batch_id,
+            batch_df.sparkSession, snapshot_dir, bid,
             batch_df.select(*data_cols).schema,
         )
         merged = cdc_apply(
             base, batch_df, keys=keys, order_cols=order_cols, op_col=op_col
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(snapshot_dir, f"v{int(batch_id)}")
-        )
+        return Commit(state={snapshot_dir: merged})
 
-    drain_foreach_batch(changes, checkpoint_dir, apply_batch)
-
-
-def vacuum_snapshots(snapshot_dir: str, keep: int = 2) -> list[int]:
-    """Delete all but the newest ``keep`` committed snapshot versions
-    (the VACUUM every versioned table needs, or storage grows one full
-    copy per micro-batch). Never touches the live version; uncommitted
-    directories (no ``_SUCCESS``) are removed too — they are failed
-    writes a later replay has superseded.
-
-    ``keep`` must be ≥ 2 while the stream can still replay: the
-    replay-idempotency contract re-merges a redelivered batch against
-    the version BELOW it — vacuuming that base away would make the
-    replay rebuild from an empty table and silently drop the rest of
-    the snapshot. Only a cleanly-stopped table (checkpoint committed
-    past the last batch) could safely keep 1; this API refuses the
-    footgun outright.
-
-    Returns the version numbers removed.
-    """
-    import shutil
-
-    if keep < 2:
-        raise ValueError(
-            "keep must be >= 2: the newest version's replay base must "
-            "survive vacuum (see run_cdc_stream's idempotency contract)"
-        )
-    dirs = version_dirs(snapshot_dir)
-    live = [d for d in dirs if is_committed(d[1])][-keep:]
-    removed = []
-    for v, path in dirs:
-        if (v, path) not in live:
-            shutil.rmtree(path)
-            removed.append(v)
-    return removed
+    drain_foreach_batch(changes, apply_batch, checkpoint_dir)

@@ -38,104 +38,74 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
-    latest_version,
-    mark_committed,
-    replay_base_version,
+    read_latest_version,
+    read_replay_base,
 )
-
-
-def fold_batch_chunks(
-    batch_df: DataFrame,
-    index_dir: str,
-    batch_id: int,
-    w: int = 8,
-    mask_bits: int = 6,
-    text_col: str = "text",
-):
-    """The micro-batch kernel: fold ``batch_df``'s chunk counts into
-    the accumulated index at ``{index_dir}/v{N}``. Returns
-    ``commit()``, which writes index version v{batch_id} (chunk rows
-    AND per-source doc counts); call it after any other sinks."""
-    from myasynstreamjoin_spark.functions.dedup import cdc_chunks
-
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-    new_counts = (
-        cdc_chunks(batch_df, w, mask_bits, text_col)
-        .groupBy("source", "chunk_hash")
-        .agg(F.count("*").alias("cnt"), F.min("chunk_len").alias("len"))
-    )
-    new_docs = (
-        batch_df.where(F.length(text_col) >= 1)
-        .groupBy("source")
-        .agg(F.count("*").alias("n_docs"))
-    )
-    base_v = replay_base_version(index_dir, bid)
-    if base_v is not None:
-        old_counts = bspark.read.parquet(
-            os.path.join(index_dir, f"v{base_v}", "chunks")
-        )
-        old_docs = bspark.read.parquet(
-            os.path.join(index_dir, f"v{base_v}", "docs")
-        )
-    else:
-        old_counts = bspark.createDataFrame([], new_counts.schema)
-        old_docs = bspark.createDataFrame([], new_docs.schema)
-
-    o = old_counts.select(
-        "source", "chunk_hash",
-        F.col("cnt").alias("ocnt"), F.col("len").alias("olen"),
-    )
-    merged = (
-        new_counts.join(o, ["source", "chunk_hash"], "full_outer")
-        .select(
-            "source",
-            "chunk_hash",
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("ocnt"), F.lit(0))
-            ).alias("cnt"),
-            F.coalesce(F.col("len"), F.col("olen")).alias("len"),
-        )
-    )
-    merged_docs = (
-        new_docs.select("source", F.col("n_docs").alias("n"))
-        .unionByName(old_docs.select("source", F.col("n_docs").alias("n")))
-        .groupBy("source")
-        .agg(F.sum("n").cast("long").alias("n_docs"))
-    )
-
-    def commit() -> None:
-        vdir = os.path.join(index_dir, f"v{bid}")
-        merged.write.mode("overwrite").parquet(os.path.join(vdir, "chunks"))
-        merged_docs.write.mode("overwrite").parquet(os.path.join(vdir, "docs"))
-        # a crash between the two writes must leave the version
-        # invisible to replay_base_version
-        mark_committed(vdir)
-
-    return commit
 
 
 def run_stream_cdc_chunks(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     w: int = 8,
     mask_bits: int = 6,
     text_col: str = "text",
 ) -> None:
     """Drain a (bounded, for tests) document stream; index versions
-    accumulate under ``{work_dir}/chunks/v{N}``."""
+    (chunk rows AND per-source doc counts, one two-part version per
+    batch) accumulate under ``{work_dir}/chunks/v{N}``."""
+    from myasynstreamjoin_spark.functions.dedup import cdc_chunks
+
     index_dir = os.path.join(work_dir, "chunks")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch_chunks(
-            batch_df, index_dir, int(batch_id), w, mask_bits, text_col
-        )()
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        new_counts = (
+            cdc_chunks(batch_df, w, mask_bits, text_col)
+            .groupBy("source", "chunk_hash")
+            .agg(F.count("*").alias("cnt"), F.min("chunk_len").alias("len"))
+        )
+        new_docs = (
+            batch_df.where(F.length(text_col) >= 1)
+            .groupBy("source")
+            .agg(F.count("*").alias("n_docs"))
+        )
+        old = read_replay_base(
+            batch_df.sparkSession, index_dir, bid,
+            {"chunks": new_counts.schema, "docs": new_docs.schema},
+        )
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+        o = old["chunks"].select(
+            "source", "chunk_hash",
+            F.col("cnt").alias("ocnt"), F.col("len").alias("olen"),
+        )
+        merged = (
+            new_counts.join(o, ["source", "chunk_hash"], "full_outer")
+            .select(
+                "source",
+                "chunk_hash",
+                (
+                    F.coalesce(F.col("cnt"), F.lit(0))
+                    + F.coalesce(F.col("ocnt"), F.lit(0))
+                ).alias("cnt"),
+                F.coalesce(F.col("len"), F.col("olen")).alias("len"),
+            )
+        )
+        merged_docs = (
+            new_docs.select("source", F.col("n_docs").alias("n"))
+            .unionByName(
+                old["docs"].select("source", F.col("n_docs").alias("n"))
+            )
+            .groupBy("source")
+            .agg(F.sum("n").cast("long").alias("n_docs"))
+        )
+        return Commit(
+            state={index_dir: {"chunks": merged, "docs": merged_docs}}
+        )
+
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_chunk_stats(spark: SparkSession, work_dir: str) -> DataFrame | None:
@@ -143,13 +113,12 @@ def read_chunk_stats(spark: SparkSession, work_dir: str) -> DataFrame | None:
     column-for-column the batch ``cdc_dedup_stats`` schema, and (by
     commutativity of count folding) value-identical to running the
     batch operator over everything the stream has ingested."""
-    index_dir = os.path.join(work_dir, "chunks")
-    v = latest_version(index_dir)
-    if v is None:
+    index = read_latest_version(
+        spark, os.path.join(work_dir, "chunks"), ("chunks", "docs")
+    )
+    if index is None:
         return None
-    vdir = os.path.join(index_dir, f"v{v}")
-    counts = spark.read.parquet(os.path.join(vdir, "chunks"))
-    n_docs = spark.read.parquet(os.path.join(vdir, "docs"))
+    counts, n_docs = index["chunks"], index["docs"]
     stats = counts.groupBy("source").agg(
         F.sum("cnt").cast("long").alias("n_chunks"),
         F.count("*").cast("long").alias("n_unique_chunks"),

@@ -37,98 +37,69 @@ from pyspark.sql import functions as F
 from myasynstreamjoin_spark.blocks import ckpt_disk
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_committed_batches,
     read_replay_base,
 )
 
 
-def debounce_batch_with_state(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    min_gap_us: int = 3_600_000_000,
-):
-    """Returns ``(kept, commit_state)``: kept = the batch's surviving
-    events (batch-operator schema), commit_state() advances the
-    per-key last-raw-ts state to v{batch_id}.
-
-    The kernel releases none of its checkpoint blocks: call it inside
-    a ``blocks.batch_scope``, as every ``drain_foreach_batch`` body
-    runs, which releases them when the batch ends."""
-    from myasynstreamjoin_spark.operators.sessions import debounce_events
-
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-
-    state = read_replay_base(
-        bspark, state_dir, bid,
-        "user_id long, event_type string, last_ts_us long",
-    )
-
-    # seed rows: pseudo-events at the key's last raw arrival, with an
-    # event_id below every real id so ties at the same ts order the
-    # seed first; ts column carries epoch-ns like the real feed
-    seeds = state.select(
-        (F.col("last_ts_us") * 1000).alias("ts"),
-        "user_id",
-        "event_type",
-        F.lit(-1).cast("long").alias("event_id"),
-    )
-    real = batch_df.select("ts", "user_id", "event_type", "event_id")
-    kept = (
-        debounce_events(seeds.unionByName(real), min_gap_us)
-        .where(F.col("event_id") >= 0)
-        .transform(ckpt_disk)
-    )
-
-    new_state = (
-        real.select(
-            "user_id", "event_type", F.expr("ts DIV 1000").alias("ts_us")
-        )
-        .groupBy("user_id", "event_type")
-        .agg(F.max("ts_us").alias("last_ts_us"))
-    )
-    merged_state = (
-        state.unionByName(
-            new_state.select("user_id", "event_type", "last_ts_us")
-        )
-        .groupBy("user_id", "event_type")
-        .agg(F.max("last_ts_us").alias("last_ts_us"))
-    )
-
-    def commit_state() -> None:
-        merged_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{bid}")
-        )
-
-    return kept, commit_state
-
-
 def run_stream_debounce(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     min_gap_us: int = 3_600_000_000,
 ) -> None:
     """Drain a (bounded, for tests) event stream; surviving events
-    appear under ``{work_dir}/kept/b{N}``, state under
-    ``{work_dir}/state/v{N}``."""
+    (batch-operator schema) appear under ``{work_dir}/kept/b{N}``, the
+    per-key last-raw-ts state under ``{work_dir}/state/v{N}``."""
+    from myasynstreamjoin_spark.operators.sessions import debounce_events
+
     kept_dir = os.path.join(work_dir, "kept")
     state_dir = os.path.join(work_dir, "state")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        kept, commit_state = debounce_batch_with_state(
-            batch_df, state_dir, bid, min_gap_us
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        state = read_replay_base(
+            batch_df.sparkSession, state_dir, bid,
+            "user_id long, event_type string, last_ts_us long",
         )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(kept_dir, f"b{bid}")
-        )
-        commit_state()
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+        # seed rows: pseudo-events at the key's last raw arrival, with
+        # an event_id below every real id so ties at the same ts order
+        # the seed first; ts column carries epoch-ns like the real feed
+        seeds = state.select(
+            (F.col("last_ts_us") * 1000).alias("ts"),
+            "user_id",
+            "event_type",
+            F.lit(-1).cast("long").alias("event_id"),
+        )
+        real = batch_df.select("ts", "user_id", "event_type", "event_id")
+        kept = (
+            debounce_events(seeds.unionByName(real), min_gap_us)
+            .where(F.col("event_id") >= 0)
+            .transform(ckpt_disk)
+        )
+
+        new_state = (
+            real.select(
+                "user_id", "event_type", F.expr("ts DIV 1000").alias("ts_us")
+            )
+            .groupBy("user_id", "event_type")
+            .agg(F.max("ts_us").alias("last_ts_us"))
+        )
+        merged_state = (
+            state.unionByName(
+                new_state.select("user_id", "event_type", "last_ts_us")
+            )
+            .groupBy("user_id", "event_type")
+            .agg(F.max("last_ts_us").alias("last_ts_us"))
+        )
+        return Commit(
+            outputs={kept_dir: kept}, state={state_dir: merged_state}
+        )
+
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_kept_events(spark: SparkSession, work_dir: str) -> DataFrame | None:
@@ -136,84 +107,62 @@ def read_kept_events(spark: SparkSession, work_dir: str) -> DataFrame | None:
     return read_committed_batches(spark, os.path.join(work_dir, "kept"))
 
 
-def throttle_batch_with_state(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    window_us: int = 3_600_000_000,
-):
-    """Streaming fixed-clock throttle: state is one (user, event_type,
-    last_bucket) row per key — under ascending event-time feeds only
-    the LATEST bucket can span a batch boundary, so dropping batch
-    survivors whose bucket equals the state bucket makes the streamed
-    survivors exactly the batch `throttle_events` answer. Returns
-    ``(kept, commit_state)``. Like ``debounce_batch_with_state``, it
-    leaves its checkpoint blocks to the enclosing batch scope."""
-    from myasynstreamjoin_spark.operators.sessions import throttle_events
-
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-
-    state = read_replay_base(
-        bspark, state_dir, bid,
-        "user_id long, event_type string, last_bucket long",
-    )
-
-    survivors = throttle_events(batch_df, window_us)
-    kept = (
-        survivors.join(
-            state.withColumnRenamed("last_bucket", "bucket"),
-            ["user_id", "event_type", "bucket"],
-            "left_anti",
-        )
-        # the list-form join moves its keys to the front; re-project
-        # the batch operator's column order so the per-batch sinks
-        # union schema-identically with it
-        .select(*survivors.columns)
-        .transform(ckpt_disk)
-    )
-
-    new_state = (
-        batch_df.select(
-            "user_id",
-            "event_type",
-            F.expr(f"(ts DIV 1000) DIV {int(window_us)}").alias("last_bucket"),
-        )
-        .groupBy("user_id", "event_type")
-        .agg(F.max("last_bucket").alias("last_bucket"))
-    )
-    merged_state = (
-        state.unionByName(new_state)
-        .groupBy("user_id", "event_type")
-        .agg(F.max("last_bucket").alias("last_bucket"))
-    )
-
-    def commit_state() -> None:
-        merged_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{bid}")
-        )
-
-    return kept, commit_state
-
-
 def run_stream_throttle(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     window_us: int = 3_600_000_000,
 ) -> None:
+    """Streaming fixed-clock throttle: state is one (user, event_type,
+    last_bucket) row per key — under ascending event-time feeds only
+    the LATEST bucket can span a batch boundary, so dropping batch
+    survivors whose bucket equals the state bucket makes the streamed
+    survivors exactly the batch `throttle_events` answer. Same layout
+    as ``run_stream_debounce``."""
+    from myasynstreamjoin_spark.operators.sessions import throttle_events
+
     kept_dir = os.path.join(work_dir, "kept")
     state_dir = os.path.join(work_dir, "state")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        kept, commit_state = throttle_batch_with_state(
-            batch_df, state_dir, bid, window_us
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        state = read_replay_base(
+            batch_df.sparkSession, state_dir, bid,
+            "user_id long, event_type string, last_bucket long",
         )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(kept_dir, f"b{bid}")
-        )
-        commit_state()
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+        survivors = throttle_events(batch_df, window_us)
+        kept = (
+            survivors.join(
+                state.withColumnRenamed("last_bucket", "bucket"),
+                ["user_id", "event_type", "bucket"],
+                "left_anti",
+            )
+            # the list-form join moves its keys to the front; re-project
+            # the batch operator's column order so the per-batch sinks
+            # union schema-identically with it
+            .select(*survivors.columns)
+            .transform(ckpt_disk)
+        )
+
+        new_state = (
+            batch_df.select(
+                "user_id",
+                "event_type",
+                F.expr(f"(ts DIV 1000) DIV {int(window_us)}").alias(
+                    "last_bucket"
+                ),
+            )
+            .groupBy("user_id", "event_type")
+            .agg(F.max("last_bucket").alias("last_bucket"))
+        )
+        merged_state = (
+            state.unionByName(new_state)
+            .groupBy("user_id", "event_type")
+            .agg(F.max("last_bucket").alias("last_bucket"))
+        )
+        return Commit(
+            outputs={kept_dir: kept}, state={state_dir: merged_state}
+        )
+
+    drain_foreach_batch(docs, process, checkpoint_dir)

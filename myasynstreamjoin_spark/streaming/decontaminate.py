@@ -29,7 +29,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myasynstreamjoin_spark.blocks import static_checkpoint
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_committed_batches,
 )
@@ -40,7 +42,7 @@ def run_stream_decontaminate(
     spark: SparkSession,
     bench_docs: DataFrame,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     k: int = 8,
 ) -> None:
     """Drain a (bounded, for tests) training-document stream; clean doc
@@ -48,14 +50,8 @@ def run_stream_decontaminate(
     from myasynstreamjoin_spark.functions.dedup import shingle_docs
 
     clean_dir = os.path.join(work_dir, "clean")
-    bench_grams = (
-        shingle_docs(bench_docs, k)
-        .select(F.explode_outer("sh").alias("g"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, bid: int) -> Commit:
         # batch_scope (blocks.py): the batch's checkpoint blocks are
         # released at scope exit, serialized against any concurrent
         # scope on this context; the static bench_grams checkpoint
@@ -70,11 +66,14 @@ def run_stream_decontaminate(
             .distinct()
         )
         clean = batch.select("doc_id").join(dirty, "doc_id", "left_anti")
-        clean.write.mode("overwrite").parquet(
-            os.path.join(clean_dir, f"b{int(batch_id)}")
-        )
+        return Commit(outputs={clean_dir: clean})
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    with static_checkpoint(
+        shingle_docs(bench_docs, k)
+        .select(F.explode_outer("sh").alias("g"))
+        .distinct()
+    ) as bench_grams:
+        drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_clean_ids(spark: SparkSession, work_dir: str) -> DataFrame | None:
@@ -86,7 +85,7 @@ def run_stream_semantic_decontaminate(
     spark: SparkSession,
     bench_vecs: DataFrame,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     threshold: float = 0.4,
 ) -> None:
     """Ingest-time SEMANTIC decontamination: the streaming twin of
@@ -112,20 +111,18 @@ def run_stream_semantic_decontaminate(
     )
 
     scored_dir = os.path.join(work_dir, "scored")
-    bench = bench_vecs.localCheckpoint(eager=True)
-    bench_matrix = collect_benchmark_matrix(bench)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, bid: int) -> Commit:
         batch = batch_df.localCheckpoint(eager=True)
         out = semantic_decontaminate(
             batch, bench, threshold=threshold,
             kernel="arrow", bench_matrix=bench_matrix,
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(scored_dir, f"b{int(batch_id)}")
-        )
+        return Commit(outputs={scored_dir: out})
 
-    drain_foreach_batch(vecs, checkpoint_dir, process)
+    with static_checkpoint(bench_vecs) as bench:
+        bench_matrix = collect_benchmark_matrix(bench)
+        drain_foreach_batch(vecs, process, checkpoint_dir)
 
 
 def read_scored_vecs(spark: SparkSession, work_dir: str) -> DataFrame | None:

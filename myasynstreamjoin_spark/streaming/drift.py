@@ -29,8 +29,6 @@ Python float arithmetic, so no libm-vs-JVM ulp risk.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,10 +37,10 @@ from myasynstreamjoin_spark.operators.stats import (
     psi_nano_term,
 )
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     load_snapshot_below,
     read_committed_batches,
-    save_snapshot,
 )
 
 
@@ -56,7 +54,8 @@ def run_streaming_drift(
     events: DataFrame,
     spark: SparkSession,
     out_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
+    *,
     bounds: tuple[int, int],
     state_dir: str | None = None,
     value_col: str = "value",
@@ -83,8 +82,7 @@ def run_streaming_drift(
     prev_state: list = [None]  # (win, counts) of the predecessor batch
     last_applied: list[int] = [-1]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
+    def process(batch_df: DataFrame, bid: int) -> Commit | None:
         if last_applied[0] != bid - 1:
             # first batch of this incarnation, or a replay: resume the
             # predecessor histogram from the newest snapshot BELOW bid
@@ -120,7 +118,7 @@ def run_streaming_drift(
         )
         if not rows:
             last_applied[0] = bid
-            return
+            return None
         cur_counts = [0] * n_buckets
         for r in rows:
             cur_counts[int(r["bucket"])] = int(r["c"])
@@ -167,10 +165,12 @@ def run_streaming_drift(
                 [],
                 "win_start_ns long, n_prev long, n_cur long, psi double",
             )
-        # per-batch overwrite → replays replace, never duplicate
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"b{bid}"))
-        save_snapshot(sdir, bid, {"win": cur_win, "counts": cur_counts})
         prev_state[0] = (cur_win, cur_counts)
         last_applied[0] = bid
+        # per-batch overwrite → replays replace, never duplicate
+        return Commit(
+            outputs={out_dir: out},
+            snapshot=(sdir, {"win": cur_win, "counts": cur_counts}),
+        )
 
-    drain_foreach_batch(events, checkpoint_dir, process)
+    drain_foreach_batch(events, process, checkpoint_dir)

@@ -33,10 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     committed_batch_dirs,
     drain_foreach_batch,
     read_latest_version,
-    replay_base_version,
+    read_replay_base,
 )
 
 
@@ -44,7 +45,7 @@ def run_stream_export_shards(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     n_shards: int = 16,
 ) -> None:
     """Drain a (bounded, for tests) document stream; data lands under
@@ -56,36 +57,32 @@ def run_stream_export_shards(
     data_dir = os.path.join(work_dir, "data")
     man_dir = os.path.join(work_dir, "manifest")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        bspark = batch_df.sparkSession
+    def process(batch_df: DataFrame, bid: int) -> Commit:
         # batch_scope at batch grain (blocks.py rule)
         batch = batch_df.localCheckpoint(eager=True)
-        batch.withColumn(
+        sharded = batch.withColumn(
             "shard", hash_bucket(F.col("doc_id").cast("string"), n_shards)
-        ).write.mode("overwrite").partitionBy("shard").parquet(
-            os.path.join(data_dir, f"b{bid}")
         )
         delta = shard_manifest(batch, n_shards=n_shards)
-        base_v = replay_base_version(man_dir, bid)
-        if base_v is not None:
-            base = bspark.read.parquet(os.path.join(man_dir, f"v{base_v}"))
-            merged = (
-                base.unionByName(delta)
-                .groupBy("shard")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_tokens").alias("n_tokens"),
-                    F.sum("checksum").alias("checksum"),
-                )
+        base = read_replay_base(
+            batch_df.sparkSession, man_dir, bid, delta.schema
+        )
+        merged = (
+            base.unionByName(delta)
+            .groupBy("shard")
+            .agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("n_tokens").alias("n_tokens"),
+                F.sum("checksum").alias("checksum"),
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(man_dir, f"v{bid}")
+        )
+        return Commit(
+            outputs={data_dir: sharded},
+            state={man_dir: merged},
+            partition_by={data_dir: ("shard",)},
         )
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_export_manifest(

@@ -19,7 +19,6 @@ structure past its cap.
 
 from __future__ import annotations
 
-import tempfile
 from collections import deque
 from typing import Any
 
@@ -81,10 +80,7 @@ def adaptive_count_stream(
         )
 
     # The replay never resumes: its checkpoint goes when the query stops.
-    with tempfile.TemporaryDirectory(
-        prefix="masj_fb_", ignore_cleanup_errors=True
-    ) as checkpoint:
-        drain_foreach_batch(kv, checkpoint, process)
+    drain_foreach_batch(kv, process)
 
     if not running:
         merged = spark.createDataFrame([], "key string, cnt long")

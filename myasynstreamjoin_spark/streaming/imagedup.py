@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_committed_batches,
     read_replay_base,
@@ -45,7 +46,7 @@ def run_stream_image_neardup(
     media: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     max_dist: int = 3,
     n_bands: int | None = None,
 ) -> None:
@@ -62,8 +63,7 @@ def run_stream_image_neardup(
     hash_dir = os.path.join(work_dir, "hashes")
     pairs_dir = os.path.join(work_dir, "pairs")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
+    def process(batch_df: DataFrame, bid: int) -> Commit:
         bspark = batch_df.sparkSession
         # batch_scope at batch grain (blocks.py rule)
         new_hashed = image_ahash(
@@ -112,14 +112,12 @@ def run_stream_image_neardup(
             .where(F.col("hamming") <= max_dist)
             .distinct()
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"b{bid}")
-        )
-        old_hashed.unionByName(new_hashed).write.mode("overwrite").parquet(
-            os.path.join(hash_dir, f"v{bid}")
+        return Commit(
+            outputs={pairs_dir: pairs},
+            state={hash_dir: old_hashed.unionByName(new_hashed)},
         )
 
-    drain_foreach_batch(media, checkpoint_dir, process)
+    drain_foreach_batch(media, process, checkpoint_dir)
 
 
 def read_image_neardup_pairs(

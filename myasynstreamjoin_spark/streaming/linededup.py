@@ -40,106 +40,76 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_committed_batches,
     read_replay_base,
 )
 
 
-def dedup_batch_against_lines(
-    batch_df: DataFrame,
-    index_dir: str,
-    batch_id: int,
-    width: int | None = 12,
-    delim: str = "\n",
-    min_chars: int = 1,
-):
-    """The micro-batch kernel: clean ``batch_df`` against the
-    accumulated line index at ``{index_dir}/v{N}``. Returns
-    ``(cleaned, commit_index)`` where ``cleaned`` is (doc_id, n_lines,
-    n_removed, text_clean) — the batch operator's exact schema — and
-    ``commit_index()`` advances the versioned index to v{batch_id};
-    call it LAST, after every other sink commits.
-
-    The kernel releases none of its checkpoint blocks: call it inside
-    a ``blocks.batch_scope``, as every ``drain_foreach_batch`` body
-    runs, which releases them when the batch ends."""
-    from myasynstreamjoin_spark.functions.lines import (
-        _line_reassemble,
-        doc_lines,
-    )
-
-    from myasynstreamjoin_spark.blocks import ckpt_disk
-
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-    sep = " " if width is not None else delim
-    # corpus-grain rule — see myasynstreamjoin_spark/blocks.py
-    # (round-7 streaming-e2e finding)
-    lines = ckpt_disk(doc_lines(batch_df, width, delim))
-    cand = lines.where(F.length("line") >= min_chars).select(
-        "line", "doc_id", "line_no"
-    )
-
-    new_index = cand.select("line").distinct()
-    old_index = read_replay_base(bspark, index_dir, bid, new_index.schema)
-
-    cross_drops = cand.join(old_index, "line", "left_semi").select(
-        "doc_id", "line_no"
-    )
-    fresh = cand.join(old_index, "line", "left_anti")
-    first = fresh.groupBy("line").agg(
-        F.min(F.struct("doc_id", "line_no")).alias("first"),
-        F.count("*").alias("__c"),
-    )
-    within_drops = (
-        fresh.join(first.where(F.col("__c") >= 2), "line")
-        .where(
-            ~(
-                (F.col("doc_id") == F.col("first.doc_id"))
-                & (F.col("line_no") == F.col("first.line_no"))
-            )
-        )
-        .select("doc_id", "line_no")
-    )
-    cleaned = _line_reassemble(
-        lines, cross_drops.unionByName(within_drops), sep
-    )
-
-    def commit_index() -> None:
-        old_index.unionByName(new_index).distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(index_dir, f"v{bid}"))
-
-    return cleaned, commit_index
-
-
 def run_stream_line_dedup(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     width: int | None = 12,
     delim: str = "\n",
     min_chars: int = 1,
 ) -> None:
     """Drain a (bounded, for tests) document stream; cleaned docs
-    appear under ``{work_dir}/clean/b{N}``, the line-index versions
-    under ``{work_dir}/lines/v{N}``."""
+    appear under ``{work_dir}/clean/b{N}`` (doc_id, n_lines, n_removed,
+    text_clean: the batch operator's exact schema), the line-index
+    versions under ``{work_dir}/lines/v{N}``."""
+    from myasynstreamjoin_spark.blocks import ckpt_disk
+    from myasynstreamjoin_spark.functions.lines import (
+        _line_reassemble,
+        doc_lines,
+    )
+
     clean_dir = os.path.join(work_dir, "clean")
     index_dir = os.path.join(work_dir, "lines")
+    sep = " " if width is not None else delim
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        cleaned, commit_index = dedup_batch_against_lines(
-            batch_df, index_dir, bid, width, delim, min_chars
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        # corpus-grain rule — see myasynstreamjoin_spark/blocks.py
+        # (round-7 streaming-e2e finding)
+        lines = ckpt_disk(doc_lines(batch_df, width, delim))
+        cand = lines.where(F.length("line") >= min_chars).select(
+            "line", "doc_id", "line_no"
         )
-        cleaned.write.mode("overwrite").parquet(
-            os.path.join(clean_dir, f"b{bid}")
-        )
-        commit_index()
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+        new_index = cand.select("line").distinct()
+        old_index = read_replay_base(
+            batch_df.sparkSession, index_dir, bid, new_index.schema
+        )
+
+        cross_drops = cand.join(old_index, "line", "left_semi").select(
+            "doc_id", "line_no"
+        )
+        fresh = cand.join(old_index, "line", "left_anti")
+        first = fresh.groupBy("line").agg(
+            F.min(F.struct("doc_id", "line_no")).alias("first"),
+            F.count("*").alias("__c"),
+        )
+        within_drops = (
+            fresh.join(first.where(F.col("__c") >= 2), "line")
+            .where(
+                ~(
+                    (F.col("doc_id") == F.col("first.doc_id"))
+                    & (F.col("line_no") == F.col("first.line_no"))
+                )
+            )
+            .select("doc_id", "line_no")
+        )
+        cleaned = _line_reassemble(
+            lines, cross_drops.unionByName(within_drops), sep
+        )
+        return Commit(
+            outputs={clean_dir: cleaned},
+            state={index_dir: old_index.unionByName(new_index).distinct()},
+        )
+
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_clean_docs(spark: SparkSession, work_dir: str) -> DataFrame | None:

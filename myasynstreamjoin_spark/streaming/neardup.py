@@ -34,9 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_committed_batches,
-    replay_base_version,
+    read_replay_base,
 )
 
 
@@ -70,7 +71,7 @@ def run_stream_neardup(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     n_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
@@ -87,12 +88,11 @@ def run_stream_neardup(
     sh_dir = os.path.join(work_dir, "shingles")
     pairs_dir = os.path.join(work_dir, "pairs")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
+    def process(batch_df: DataFrame, bid: int) -> Commit:
         bspark = batch_df.sparkSession
-        # batch_scope at batch grain (blocks.py rule): the index
-        # versions written below are the cross-batch state; blocks die
-        # with the batch at scope exit
+        # batch_scope at batch grain (blocks.py rule): the committed
+        # index versions are the cross-batch state; blocks die with the
+        # batch at scope exit
         batch = batch_df.localCheckpoint(eager=True)
         new_sh = shingle_docs(
             batch, k, hashed="md5" if replayable else True
@@ -101,15 +101,8 @@ def run_stream_neardup(
             batch, new_sh, n_hashes, bands, k, replayable
         ).localCheckpoint(eager=True)
 
-        base_v = replay_base_version(bands_dir, bid)
-        if base_v is not None:
-            old_bands = bspark.read.parquet(
-                os.path.join(bands_dir, f"v{base_v}")
-            )
-            old_sh = bspark.read.parquet(os.path.join(sh_dir, f"v{base_v}"))
-        else:
-            old_bands = bspark.createDataFrame([], new_bands.schema)
-            old_sh = bspark.createDataFrame([], new_sh.schema)
+        old_bands = read_replay_base(bspark, bands_dir, bid, new_bands.schema)
+        old_sh = read_replay_base(bspark, sh_dir, bid, new_sh.schema)
 
         # candidates: new-vs-index plus within-batch (a < b)
         nb = new_bands.select(
@@ -146,17 +139,15 @@ def run_stream_neardup(
             .where(jac >= threshold)
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"b{bid}")
-        )
-        old_bands.unionByName(new_bands).write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"v{bid}")
-        )
-        old_sh.unionByName(new_sh).write.mode("overwrite").parquet(
-            os.path.join(sh_dir, f"v{bid}")
+        return Commit(
+            outputs={pairs_dir: pairs},
+            state={
+                bands_dir: old_bands.unionByName(new_bands),
+                sh_dir: old_sh.unionByName(new_sh),
+            },
         )
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_neardup_pairs(spark: SparkSession, work_dir: str) -> DataFrame | None:

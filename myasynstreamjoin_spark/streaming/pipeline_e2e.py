@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_latest_version,
     read_replay_base,
@@ -63,7 +64,7 @@ def run_stream_pipeline_e2e(
     spark: SparkSession,
     bench: DataFrame,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     k: int = 8,
     n_shards: int = 8,
     quality_min: float = 0.2,
@@ -98,9 +99,7 @@ def run_stream_pipeline_e2e(
     grams_dir = os.path.join(work_dir, "grams")
     man_dir = os.path.join(work_dir, "manifest")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        bspark = batch_df.sparkSession
+    def process(batch_df: DataFrame, bid: int) -> Commit:
 
         # 1. WARC codec ingest (stateless; drops NULL texts)
         ingested = warc_documents(
@@ -108,8 +107,8 @@ def run_stream_pipeline_e2e(
         )
 
         # 2. span removal vs the accumulated gram index (the shared
-        # streaming/spanremove.py kernel; its commit_index runs LAST)
-        cleaned, commit_index = clean_batch_against_index(
+        # streaming/spanremove.py kernel)
+        cleaned, grams = clean_batch_against_index(
             ingested, grams_dir, bid, k
         )
         clean = cleaned.where(
@@ -149,7 +148,9 @@ def run_stream_pipeline_e2e(
             F.sum("h").alias("checksum"),
             F.max_by("nt", "doc_id").alias("last_n"),
         )
-        base = read_replay_base(bspark, man_dir, bid, _STATE_SCHEMA)
+        base = read_replay_base(
+            batch_df.sparkSession, man_dir, bid, _STATE_SCHEMA
+        )
         b, d = base.alias("b"), delta.alias("d")
         z = F.lit(0).cast("long")
         merged = b.join(d, "shard", "full").select(
@@ -165,16 +166,12 @@ def run_stream_pipeline_e2e(
             ).alias("checksum"),
             F.coalesce("d.last_n", "b.last_n").alias("last_n"),
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(man_dir, f"v{bid}")
-        )
-        # index advances LAST: a crash before this point replays the
-        # batch against the exact state it originally saw. Every
-        # checkpoint block this batch created, `gated` above included,
-        # is released by drain_foreach_batch's batch scope on return.
-        commit_index()
+        # every checkpoint block this batch created, `gated` above
+        # included, is released by drain_foreach_batch's batch scope
+        # once the commit is written
+        return Commit(state={man_dir: merged, grams_dir: grams})
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_pipeline_manifest(

@@ -27,70 +27,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_latest_version,
     read_replay_base,
 )
 
 
-def sample_batch_with_reservoir(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    weight_col: str,
-    k: int,
-    id_col: str = "doc_id",
-):
-    """The micro-batch kernel: merge ``batch_df`` into the reservoir
-    at ``{state_dir}/v{N}``. Returns ``commit_state()`` which writes
-    v{batch_id} = top-k of (old reservoir ∪ batch candidates) by the
-    shared `wrs_key` — the same filter and tie-break as the batch
-    sampler, so the final reservoir IS `weighted_sample_k`'s answer."""
-    from myasynstreamjoin_spark.functions.pipeline import wrs_key
-
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-    w = F.col(weight_col)
-    cand = batch_df.where(
-        (w > 0) & ~F.isnan(w.cast("double"))
-    ).withColumn("__wkey", wrs_key(weight_col, id_col))
-
-    old = read_replay_base(bspark, state_dir, bid, cand.schema)
-
-    merged = (
-        old.unionByName(cand)
-        .orderBy(F.desc("__wkey"), F.asc(id_col))
-        .limit(k)
-    )
-
-    def commit_state() -> None:
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{bid}")
-        )
-
-    return commit_state
-
-
 def run_stream_weighted_sample(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
+    *,
     weight_col: str,
     k: int,
     id_col: str = "doc_id",
 ) -> None:
     """Drain a (bounded, for tests) document stream; reservoir
-    versions appear under ``{work_dir}/reservoir/v{N}``."""
+    versions appear under ``{work_dir}/reservoir/v{N}``: version N =
+    top-k of (old reservoir ∪ batch candidates) by the shared
+    `wrs_key` — the same filter and tie-break as the batch sampler, so
+    the final reservoir IS `weighted_sample_k`'s answer."""
+    from myasynstreamjoin_spark.functions.pipeline import wrs_key
+
     state_dir = os.path.join(work_dir, "reservoir")
+    w = F.col(weight_col)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        commit_state = sample_batch_with_reservoir(
-            batch_df, state_dir, int(batch_id), weight_col, k, id_col
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        cand = batch_df.where(
+            (w > 0) & ~F.isnan(w.cast("double"))
+        ).withColumn("__wkey", wrs_key(weight_col, id_col))
+        old = read_replay_base(
+            batch_df.sparkSession, state_dir, bid, cand.schema
         )
-        commit_state()
+        merged = (
+            old.unionByName(cand)
+            .orderBy(F.desc("__wkey"), F.asc(id_col))
+            .limit(k)
+        )
+        return Commit(state={state_dir: merged})
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_sample(spark: SparkSession, work_dir: str) -> DataFrame | None:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_latest_version,
     read_replay_base,
@@ -40,67 +41,46 @@ def _merge_kll(sketches_col):
     )
 
 
-def update_batch_quantile_sketches(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    k: int = 200,
-):
-    """Merge one micro-batch into the per-group KLL state at
-    ``{state_dir}/v{N}``. Returns ``commit_state()``; call it after
-    every other sink commits."""
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-    fresh = (
-        batch_df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"))
-        .agg(
-            F.kll_sketch_agg_double(
-                F.col(value_col).cast("double"), F.lit(k)
-            ).alias("sketch"),
-            F.count("*").cast("long").alias("n"),
-        )
-    )
-    old = read_replay_base(bspark, state_dir, bid, fresh.schema)
-    merged = (
-        old.unionByName(fresh)
-        .groupBy("grp")
-        .agg(
-            F.collect_list("sketch").alias("__arr"),
-            F.sum("n").cast("long").alias("n"),
-        )
-        .select("grp", _merge_kll(F.col("__arr")).alias("sketch"), "n")
-    )
-
-    def commit_state() -> None:
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{bid}")
-        )
-
-    return commit_state
-
-
 def run_stream_quantile_sketches(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     group_col: str = "event_type",
     value_col: str = "value",
     k: int = 200,
 ) -> None:
-    """Drain a (bounded, for tests) stream; KLL state versions appear
-    under ``{work_dir}/kll/v{N}``."""
+    """Drain a (bounded, for tests) stream, merging each micro-batch
+    into the per-group KLL state; versions appear under
+    ``{work_dir}/kll/v{N}``."""
     state_dir = os.path.join(work_dir, "kll")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        update_batch_quantile_sketches(
-            batch_df, state_dir, int(batch_id), group_col, value_col, k
-        )()
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        fresh = (
+            batch_df.where(F.col(value_col).isNotNull())
+            .groupBy(F.col(group_col).alias("grp"))
+            .agg(
+                F.kll_sketch_agg_double(
+                    F.col(value_col).cast("double"), F.lit(k)
+                ).alias("sketch"),
+                F.count("*").cast("long").alias("n"),
+            )
+        )
+        old = read_replay_base(
+            batch_df.sparkSession, state_dir, bid, fresh.schema
+        )
+        merged = (
+            old.unionByName(fresh)
+            .groupBy("grp")
+            .agg(
+                F.collect_list("sketch").alias("__arr"),
+                F.sum("n").cast("long").alias("n"),
+            )
+            .select("grp", _merge_kll(F.col("__arr")).alias("sketch"), "n")
+        )
+        return Commit(state={state_dir: merged})
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_quantile_estimates(
@@ -122,59 +102,52 @@ def read_quantile_estimates(
     return st.select("grp", F.col("n").alias("n_total"), *cols)
 
 
-def update_batch_theta_sketches(
-    batch_df: DataFrame,
+def _run_union_sketches(
+    docs: DataFrame,
     state_dir: str,
-    batch_id: int,
-    group_col: str = "event_type",
-    value_col: str = "user_id",
-    lg_k: int = 12,
-):
-    """Merge one micro-batch into the per-group Theta state (Theta has
-    a real union aggregate, so the merge is one groupBy)."""
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-    fresh = (
-        batch_df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"))
-        .agg(
-            F.theta_sketch_agg(
-                F.col(value_col).cast("string"), F.lit(lg_k)
-            ).alias("sketch")
-        )
-    )
-    old = read_replay_base(bspark, state_dir, bid, fresh.schema)
-    merged = (
-        old.unionByName(fresh)
-        .groupBy("grp")
-        .agg(F.theta_union_agg("sketch").alias("sketch"))
-    )
+    checkpoint_dir: str | None,
+    group_col: str,
+    value_col: str,
+    agg,
+    union_agg,
+) -> None:
+    """Drain a stream, merging each micro-batch into per-group state
+    of a sketch with a union aggregate (Theta, HLL): one groupBy."""
 
-    def commit_state() -> None:
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{bid}")
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        fresh = (
+            batch_df.where(F.col(value_col).isNotNull())
+            .groupBy(F.col(group_col).alias("grp"))
+            .agg(agg(F.col(value_col).cast("string")).alias("sketch"))
         )
+        old = read_replay_base(
+            batch_df.sparkSession, state_dir, bid, fresh.schema
+        )
+        merged = (
+            old.unionByName(fresh)
+            .groupBy("grp")
+            .agg(union_agg("sketch").alias("sketch"))
+        )
+        return Commit(state={state_dir: merged})
 
-    return commit_state
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def run_stream_theta_sketches(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     group_col: str = "event_type",
     value_col: str = "user_id",
     lg_k: int = 12,
 ) -> None:
-    state_dir = os.path.join(work_dir, "theta")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        update_batch_theta_sketches(
-            batch_df, state_dir, int(batch_id), group_col, value_col, lg_k
-        )()
-
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    """Per-group Theta distinct-set state under ``{work_dir}/theta/v{N}``."""
+    _run_union_sketches(
+        docs, os.path.join(work_dir, "theta"), checkpoint_dir,
+        group_col, value_col,
+        lambda c: F.theta_sketch_agg(c, F.lit(lg_k)), F.theta_union_agg,
+    )
 
 
 def read_theta_algebra(
@@ -211,61 +184,24 @@ def read_theta_algebra(
     )
 
 
-def update_batch_hll_sketches(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    group_col: str = "event_type",
-    value_col: str = "user_id",
-    lg_k: int = 12,
-):
-    """Merge one micro-batch into per-group HLL distinct-count state —
-    the third accumulator, completing the trio (quantiles, set
-    algebra, pure distinct counts; HLL is the cheapest when only
-    unions are ever needed)."""
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
-    fresh = (
-        batch_df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"))
-        .agg(
-            F.hll_sketch_agg(
-                F.col(value_col).cast("string"), F.lit(lg_k)
-            ).alias("sketch")
-        )
-    )
-    old = read_replay_base(bspark, state_dir, bid, fresh.schema)
-    merged = (
-        old.unionByName(fresh)
-        .groupBy("grp")
-        .agg(F.hll_union_agg("sketch").alias("sketch"))
-    )
-
-    def commit_state() -> None:
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{bid}")
-        )
-
-    return commit_state
-
-
 def run_stream_hll_sketches(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     group_col: str = "event_type",
     value_col: str = "user_id",
     lg_k: int = 12,
 ) -> None:
-    state_dir = os.path.join(work_dir, "hll")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        update_batch_hll_sketches(
-            batch_df, state_dir, int(batch_id), group_col, value_col, lg_k
-        )()
-
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    """Per-group HLL distinct-count state under ``{work_dir}/hll/v{N}``
+    — the third accumulator, completing the trio (quantiles, set
+    algebra, pure distinct counts; HLL is the cheapest when only
+    unions are ever needed)."""
+    _run_union_sketches(
+        docs, os.path.join(work_dir, "hll"), checkpoint_dir,
+        group_col, value_col,
+        lambda c: F.hll_sketch_agg(c, F.lit(lg_k)), F.hll_union_agg,
+    )
 
 
 def read_distinct_estimates(

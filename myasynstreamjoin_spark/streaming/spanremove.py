@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     drain_foreach_batch,
     read_committed_batches,
     read_replay_base,
@@ -56,16 +57,13 @@ def clean_batch_against_index(
     batch_id: int,
     k: int = 8,
     hashed: bool | str = False,
-):
+) -> tuple[DataFrame, DataFrame]:
     """The shared micro-batch kernel of the streaming span-removal
     family (used here and by `streaming/pipeline_e2e.py`): clean
-    ``batch_df`` against the accumulated gram index at
-    ``{grams_dir}/v{N}``. Returns ``(cleaned, commit_index)`` where
-    ``cleaned`` is (doc_id, n_tokens, n_removed, text_clean) and
-    ``commit_index()`` advances the versioned index to v{batch_id} —
-    call it LAST in the batch, after every other sink commits, so a
-    crash replays the batch against the exact state it originally
-    saw (`replay_base_version` is strictly-below).
+    ``batch_df`` against the accumulated gram index under
+    ``grams_dir``. Returns ``(cleaned, index)``: ``cleaned`` is
+    (doc_id, n_tokens, n_removed, text_clean) and ``index`` the index's
+    next version, for the caller's ``Commit`` state.
 
     The kernel releases none of its checkpoint blocks: call it inside
     a ``blocks.batch_scope``, as every ``drain_foreach_batch`` body
@@ -79,13 +77,13 @@ def clean_batch_against_index(
 
     from myasynstreamjoin_spark.blocks import ckpt_disk
 
-    bid = int(batch_id)
-    bspark = batch_df.sparkSession
     toked = _span_toked(batch_df)
     grams = ckpt_disk(_span_grams(toked, k, hashed))
 
     new_index = grams.select("gram").distinct()
-    old_index = read_replay_base(bspark, grams_dir, bid, new_index.schema)
+    old_index = read_replay_base(
+        batch_df.sparkSession, grams_dir, batch_id, new_index.schema
+    )
 
     cross_dels = grams.join(old_index, "gram", "left_semi").select(
         "doc_id",
@@ -96,20 +94,14 @@ def clean_batch_against_index(
     fresh = grams.join(old_index, "gram", "left_anti")
     dels = _span_election_dels(fresh, k, disk=True).unionByName(cross_dels)
     cleaned = _span_reassemble(toked, dels)
-
-    def commit_index() -> None:
-        old_index.unionByName(new_index).distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(grams_dir, f"v{bid}"))
-
-    return cleaned, commit_index
+    return cleaned, old_index.unionByName(new_index).distinct()
 
 
 def run_stream_remove_spans(
     docs: DataFrame,
     spark: SparkSession,
     work_dir: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     k: int = 8,
     hashed: bool | str = False,
 ) -> None:
@@ -119,17 +111,13 @@ def run_stream_remove_spans(
     clean_dir = os.path.join(work_dir, "clean")
     grams_dir = os.path.join(work_dir, "grams")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        cleaned, commit_index = clean_batch_against_index(
+    def process(batch_df: DataFrame, bid: int) -> Commit:
+        cleaned, index = clean_batch_against_index(
             batch_df, grams_dir, bid, k, hashed
         )
-        cleaned.write.mode("overwrite").parquet(
-            os.path.join(clean_dir, f"b{bid}")
-        )
-        commit_index()
+        return Commit(outputs={clean_dir: cleaned}, state={grams_dir: index})
 
-    drain_foreach_batch(docs, checkpoint_dir, process)
+    drain_foreach_batch(docs, process, checkpoint_dir)
 
 
 def read_clean_docs(spark: SparkSession, work_dir: str) -> DataFrame | None:

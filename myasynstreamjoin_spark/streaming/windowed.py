@@ -35,9 +35,8 @@ phase 3 risk note).
 
 from __future__ import annotations
 
-import contextlib
 import os
-import tempfile
+import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -47,6 +46,7 @@ from pyspark.sql import types as T
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
 from myasynstreamjoin_spark.session import override_widths, replay_state_partitions
 from myasynstreamjoin_spark.sources.tables import normalize_epoch_ns
+from myasynstreamjoin_spark.streaming.commits import drain
 
 # The ENGINE's logical events schema: ts is BIGINT epoch-ns (the
 # reference's BigInt time model, state/cluster/naive/HashJoin.scala:50).
@@ -96,6 +96,24 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir}/events.parquet*")
     )
     return normalize_epoch_ns(raw, ("ts",))
+
+
+def stage_stream_file(df: DataFrame, feed, name: str, mtime: int) -> None:
+    """Stage ``df`` as ONE parquet file ``{feed}/{name}`` with a pinned
+    mtime: the feed recipe of every maxFilesPerTrigger=1 file-stream
+    replay (the streaming twins and their tests). A file stream lists
+    its files in mtime order, so the mtimes ARE the micro-batch order."""
+    feed = str(feed)
+    tmp = feed + f".{name}.tmp"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(
+        f for f in os.listdir(tmp)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+    dst = os.path.join(feed, name)
+    shutil.move(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp)
+    os.utime(dst, (mtime, mtime))
 
 
 def _event_columns(events: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -275,24 +293,11 @@ def stream_max_per_window(
     )
 
 
-def _replay_checkpoint_dir(checkpoint_dir: str | None = None):
-    """Context manager yielding the checkpoint dir of a FINITE replay.
-
-    A caller's ``checkpoint_dir`` is yielded as is and never deleted —
-    a durable deployment passes one on real storage, because recovery
-    (tests/test_checkpoint_recovery.py) needs the checkpoint to outlive
-    the query. Otherwise a fresh dir on tmpfs (/dev/shm, when present)
-    is yielded and removed on exit: a replayed query never resumes, so
-    its checkpoint is dead once the query stops, and left behind it
-    piles up in shared memory. tmpfs because the offset/commit logs and
-    state-store commits are fsync-bound; memory-backed checkpoints
-    shaved ~15-20% off a replayed stateful query (4.9 s → 4.2 s at
-    sf0.1)."""
-    if checkpoint_dir:
-        return contextlib.nullcontext(checkpoint_dir)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.TemporaryDirectory(
-        prefix="masj_ckpt_", dir=base, ignore_cleanup_errors=True
+def _replay_widths(spark: SparkSession, input_bytes: int | None):
+    """The state width a finite replay of ``input_bytes`` starts under
+    (see ``run_stream_to_table``)."""
+    return override_widths(
+        spark, state=replay_state_partitions(spark, input_bytes or 0)
     )
 
 
@@ -316,23 +321,14 @@ def run_stream_to_parquet(
     The state width comes from ``input_bytes`` as in
     ``run_stream_to_table``.
     """
-    with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
-        w = (
-            streaming_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint)
-        )
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        with override_widths(
-            spark, state=replay_state_partitions(spark, input_bytes or 0)
-        ):
-            q = w.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    w = (
+        streaming_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_path)
+    )
+    if partition_cols:
+        w = w.partitionBy(*partition_cols)
+    drain(w, checkpoint_dir, _replay_widths(spark, input_bytes))
     return spark.read.parquet(out_path)
 
 
@@ -368,21 +364,13 @@ def run_stream_to_table(
     """
     name = f"sink_{uuid.uuid4().hex[:12]}"
     try:
-        with _replay_checkpoint_dir(checkpoint_dir) as checkpoint:
-            with override_widths(
-                spark, state=replay_state_partitions(spark, input_bytes or 0)
-            ):
-                q = (
-                    streaming_df.writeStream.outputMode(output_mode)
-                    .format("memory")
-                    .queryName(name)
-                    .option("checkpointLocation", checkpoint)
-                    .start()
-                )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            streaming_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name),
+            checkpoint_dir,
+            _replay_widths(spark, input_bytes),
+        )
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)

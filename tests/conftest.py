@@ -111,27 +111,6 @@ def assert_matches_oracle(spark_df, duck_con, sql: str):
     assert not mism, f"value mismatch ({len(mism)} rows), first: {mism[:3]}"
 
 
-def stage_stream_file(df, feed, name: str, mtime: int) -> None:
-    """Stage ``df`` as ONE parquet file ``{feed}/{name}`` with a pinned
-    mtime — the staging recipe every maxFilesPerTrigger=1 file-stream
-    fixture shares (the staging half of
-    __spark_entry__._stage_parquet_feed, which also opens the stream).
-    The mtime scheme IS the micro-batch order; keep it in one place."""
-    import shutil
-
-    feed = str(feed)
-    tmp = feed + f".{name}.tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(
-        f for f in os.listdir(tmp)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    dst = os.path.join(feed, name)
-    shutil.move(os.path.join(tmp, part), dst)
-    shutil.rmtree(tmp)
-    os.utime(dst, (mtime, mtime))
-
-
 def code_nodes(tree):
     """Every AST node except docstrings (comments never reach the AST)."""
     docstrings = {

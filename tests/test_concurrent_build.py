@@ -18,7 +18,7 @@ from myasynstreamjoin_spark.streaming.windowed import (
     run_stream_to_table,
     stream_min_count_per_window,
 )
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 ROUNDS = 12
 SEC_NS = 1_000_000_000

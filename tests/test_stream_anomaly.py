@@ -10,14 +10,9 @@ from myasynstreamjoin_spark.streaming.anomaly import (
     read_flagged,
     run_streaming_anomalies,
 )
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "event_id long, event_type string, value double"
-
-
-def _write_batch(spark, feed, name, rows, mtime):
-    from tests.conftest import stage_stream_file
-
-    stage_stream_file(spark.createDataFrame(rows, SCHEMA), feed, name, mtime)
 
 
 def _run(spark, tmp_path, k=3, min_count=10):
@@ -45,8 +40,12 @@ B1 = [(100, "a", 10.1), (101, "a", 500.0), (102, "a", 9.9)]
 def test_spike_flagged_against_prior_batches_only(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(spark, feed, "f0.parquet", BASE, 1_700_000_000)
-    _write_batch(spark, feed, "f1.parquet", B1, 1_700_000_100)
+    stage_stream_file(
+        spark.createDataFrame(BASE, SCHEMA), feed, "f0.parquet", 1_700_000_000
+    )
+    stage_stream_file(
+        spark.createDataFrame(B1, SCHEMA), feed, "f1.parquet", 1_700_000_100
+    )
     out, totals = _run(spark, tmp_path)
 
     flagged = read_flagged(spark, out).collect()
@@ -59,9 +58,9 @@ def test_spike_flagged_against_prior_batches_only(spark, tmp_path):
 def test_cold_start_never_flags(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(
-        spark, feed, "f0.parquet",
-        [(0, "a", 1.0), (1, "a", 1000.0)], 1_700_000_000,
+    stage_stream_file(
+        spark.createDataFrame([(0, "a", 1.0), (1, "a", 1000.0)], SCHEMA),
+        feed, "f0.parquet", 1_700_000_000,
     )
     out, totals = _run(spark, tmp_path)
     assert read_flagged(spark, out) is None
@@ -71,12 +70,13 @@ def test_cold_start_never_flags(spark, tmp_path):
 def test_groups_below_min_count_not_judged(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(
-        spark, feed, "f0.parquet",
-        [(i, "rare", 1.0) for i in range(5)], 1_700_000_000,
+    stage_stream_file(
+        spark.createDataFrame([(i, "rare", 1.0) for i in range(5)], SCHEMA),
+        feed, "f0.parquet", 1_700_000_000,
     )
-    _write_batch(
-        spark, feed, "f1.parquet", [(99, "rare", 999.0)], 1_700_000_100,
+    stage_stream_file(
+        spark.createDataFrame([(99, "rare", 999.0)], SCHEMA),
+        feed, "f1.parquet", 1_700_000_100,
     )
     out, _ = _run(spark, tmp_path)
     assert read_flagged(spark, out) is None
@@ -88,10 +88,14 @@ def test_restart_resumes_baselines(spark, tmp_path):
     the thing an in-memory-only baseline gets wrong."""
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(spark, feed, "f0.parquet", BASE, 1_700_000_000)
+    stage_stream_file(
+        spark.createDataFrame(BASE, SCHEMA), feed, "f0.parquet", 1_700_000_000
+    )
     _run(spark, tmp_path)
 
-    _write_batch(spark, feed, "f1.parquet", B1, 1_700_000_100)
+    stage_stream_file(
+        spark.createDataFrame(B1, SCHEMA), feed, "f1.parquet", 1_700_000_100
+    )
     out, totals = _run(spark, tmp_path)
     flagged = read_flagged(spark, out).collect()
     assert {r.event_id for r in flagged} == {101}
@@ -104,8 +108,12 @@ def test_replayed_batches_do_not_duplicate_flags(spark, tmp_path):
     and the totals identical."""
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(spark, feed, "f0.parquet", BASE, 1_700_000_000)
-    _write_batch(spark, feed, "f1.parquet", B1, 1_700_000_100)
+    stage_stream_file(
+        spark.createDataFrame(BASE, SCHEMA), feed, "f0.parquet", 1_700_000_000
+    )
+    stage_stream_file(
+        spark.createDataFrame(B1, SCHEMA), feed, "f1.parquet", 1_700_000_100
+    )
     out, _ = _run(spark, tmp_path)
     before = sorted(tuple(r) for r in read_flagged(spark, out).collect())
 
@@ -121,8 +129,12 @@ def test_uncommitted_flag_dir_is_ignored(spark, tmp_path):
     marker; read_flagged must return none of its rows."""
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(spark, feed, "f0.parquet", BASE, 1_700_000_000)
-    _write_batch(spark, feed, "f1.parquet", B1, 1_700_000_100)
+    stage_stream_file(
+        spark.createDataFrame(BASE, SCHEMA), feed, "f0.parquet", 1_700_000_000
+    )
+    stage_stream_file(
+        spark.createDataFrame(B1, SCHEMA), feed, "f1.parquet", 1_700_000_100
+    )
     out, _ = _run(spark, tmp_path)
     committed = read_flagged(spark, out)
 

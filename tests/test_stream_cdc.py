@@ -121,7 +121,9 @@ def test_vacuum_keeps_live_versions_and_replay_base(spark, tmp_path):
 
     import pytest
 
-    from myasynstreamjoin_spark.streaming.cdc import vacuum_snapshots
+    from myasynstreamjoin_spark.streaming.commits import (
+        vacuum_versions as vacuum_snapshots,
+    )
 
     feed = tmp_path / "feed"
     feed.mkdir()

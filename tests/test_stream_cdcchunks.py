@@ -17,7 +17,7 @@ from myasynstreamjoin_spark.streaming.cdcchunks import (
     run_stream_cdc_chunks,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "doc_id long, text string, source string"
 

@@ -19,7 +19,8 @@ from myasynstreamjoin_spark.streaming.commits import (
     mark_committed,
     save_snapshot,
 )
-from tests.conftest import code_nodes, stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
+from tests.conftest import code_nodes
 
 STREAMING = Path(__file__).resolve().parent.parent / (
     "myasynstreamjoin_spark/streaming"
@@ -46,29 +47,53 @@ def test_snapshot_loader_takes_newest_strictly_below(tmp_path):
     assert load_snapshot_below(root, 6) == {"n": 5}
 
 
+ENGINE = [
+    *sorted(STREAMING.glob("*.py")),
+    STREAMING.parents[1] / "__spark_entry__.py",
+]
+# the on-disk version layout's own names
+LAYOUT_NAMES = {
+    "replay_base_version", "latest_version", "version_dirs", "mark_committed",
+}
+
+
+def _protocol_code(node) -> str | None:
+    """What ``node`` knows of the commit protocol: the commit marker,
+    the drain (``foreachBatch``, ``processAllAvailable``), a layout
+    name import, or a ``v{…}``/``b{…}`` dir name built by f-string."""
+    if (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "_SUCCESS" in node.value
+    ):
+        return "_SUCCESS"
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("foreachBatch", "processAllAvailable")
+    ):
+        return node.func.attr
+    if isinstance(node, ast.alias) and node.name in LAYOUT_NAMES:
+        return f"import {node.name}"
+    if (
+        isinstance(node, ast.JoinedStr)
+        and len(node.values) == 2
+        and isinstance(node.values[0], ast.Constant)
+        and node.values[0].value in ("v", "b")
+        and isinstance(node.values[1], ast.FormattedValue)
+    ):
+        return f'f"{node.values[0].value}{{…}}"'
+    return None
+
+
 def test_only_commits_module_knows_the_protocol():
-    allowed = {
-        "_SUCCESS": {"commits.py"},
-        "foreachBatch": {"commits.py"},
-        "processAllAvailable": {"commits.py", "windowed.py"},
-    }
-    found = []
-    for path in sorted(STREAMING.glob("*.py")):
-        for node in code_nodes(ast.parse(path.read_text())):
-            if (
-                isinstance(node, ast.Constant)
-                and isinstance(node.value, str)
-                and "_SUCCESS" in node.value
-            ):
-                key = "_SUCCESS"
-            elif isinstance(node, ast.Call) and isinstance(
-                node.func, ast.Attribute
-            ):
-                key = node.func.attr
-            else:
-                continue
-            if key in allowed and path.name not in allowed[key]:
-                found.append(f"{path.name}:{node.lineno} {key}")
+    found = [
+        f"{path.name}:{node.lineno} {code}"
+        for path in ENGINE
+        if path.name != "commits.py"
+        for node in code_nodes(ast.parse(path.read_text()))
+        if (code := _protocol_code(node))
+    ]
     assert not found, "protocol code outside commits.py:\n" + "\n".join(found)
 
 
@@ -87,7 +112,7 @@ def _drain(spark, tmp_path, process) -> None:
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed))
     )
-    drain_foreach_batch(stream, str(tmp_path / "ckpt"), process)
+    drain_foreach_batch(stream, process, str(tmp_path / "ckpt"))
 
 
 def _other_thread_gets_batch_lock(spark) -> bool:

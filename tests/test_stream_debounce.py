@@ -17,7 +17,7 @@ from myasynstreamjoin_spark.streaming.debounce import (
     run_stream_debounce,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "ts long, user_id long, event_type string, event_id long"
 

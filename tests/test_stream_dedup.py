@@ -13,6 +13,7 @@ from myasynstreamjoin_spark.streaming.dedup import stream_distinct_user_counts
 from myasynstreamjoin_spark.streaming.windowed import (
     EVENTS_SCHEMA,
     run_stream_to_table,
+    stage_stream_file,
     stream_events,
 )
 
@@ -120,7 +121,6 @@ def test_stream_decontaminate_replay_idempotent(spark, sf_dir, tmp_path):
     """Re-running the drained stream over the same checkpoint/work dirs
     rewrites, not duplicates, the per-batch clean sinks."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -139,13 +139,7 @@ def test_stream_decontaminate_replay_idempotent(spark, sf_dir, tmp_path):
     )
     feed = os.path.join(str(tmp_path), "feed")
     os.makedirs(feed)
-    staging = os.path.join(str(tmp_path), "stage")
-    train.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(
-        f for f in os.listdir(staging)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    shutil.move(os.path.join(staging, part), os.path.join(feed, "f0.parquet"))
+    stage_stream_file(train, feed, "f0.parquet", 1_700_000_000)
     stream = spark.readStream.schema(train.schema).parquet(feed)
     work = os.path.join(str(tmp_path), "dc")
     ckpt = os.path.join(str(tmp_path), "ckpt")
@@ -164,7 +158,6 @@ def test_stream_semantic_decontaminate_equals_batch(spark, sf_dir, tmp_path):
     batches equal the batch semantic_decontaminate answer, and a
     replay rewrites rather than duplicates."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -186,14 +179,7 @@ def test_stream_semantic_decontaminate_equals_batch(spark, sf_dir, tmp_path):
         (corpus.where(F.col("vec_id") % 2 == 0),
          corpus.where(F.col("vec_id") % 2 == 1))
     ):
-        staging = os.path.join(str(tmp_path), f"stage{i}")
-        half.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(
-            f for f in os.listdir(staging)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        shutil.move(os.path.join(staging, part),
-                    os.path.join(feed, f"f{i}.parquet"))
+        stage_stream_file(half, feed, f"f{i}.parquet", 1_700_000_000 + i)
     work = os.path.join(str(tmp_path), "sdc")
     ckpt = os.path.join(str(tmp_path), "ckpt")
     stream = spark.readStream.schema(corpus.schema).option(
@@ -217,3 +203,39 @@ def test_stream_semantic_decontaminate_equals_batch(spark, sf_dir, tmp_path):
         for r in read_scored_vecs(spark, work).collect()
     }
     assert again == got
+
+
+@pytest.mark.parametrize("semantic", [False, True], ids=["grams", "vectors"])
+def test_decontaminate_runner_releases_its_static_checkpoint(
+    spark, tmp_path, semantic
+):
+    """Each decontamination runner checkpoints its static benchmark
+    side once, outside every batch scope; the drain's return releases
+    it, so no persisted RDD outlives the runner."""
+    from myasynstreamjoin_spark.blocks import persisted_ids
+    from myasynstreamjoin_spark.streaming.decontaminate import (
+        run_stream_decontaminate,
+        run_stream_semantic_decontaminate,
+    )
+
+    if semantic:
+        schema = "vec_id long, embedding array<float>"
+        train = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])], schema
+        )
+        bench = spark.createDataFrame([(9, [1.0, 0.1])], schema)
+        run = run_stream_semantic_decontaminate
+    else:
+        schema = "doc_id long, text string"
+        text = "a b c d e f g h i j"
+        train = spark.createDataFrame(
+            [(0, text), (1, "k l m n o p q r s")], schema
+        )
+        bench = spark.createDataFrame([(9, text)], schema)
+        run = run_stream_decontaminate
+    (tmp_path / "feed").mkdir()
+    stage_stream_file(train, tmp_path / "feed", "f0.parquet", 1_700_000_000)
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "feed"))
+    before = persisted_ids(spark)
+    run(stream, spark, bench, str(tmp_path / "work"), str(tmp_path / "ckpt"))
+    assert persisted_ids(spark) == before

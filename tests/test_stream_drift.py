@@ -38,7 +38,7 @@ def _bounds(events):
 def _stage_windows(spark, events, feed, limit=None):
     """One staged file per event-time hour window, ascending — the
     batch-equals-window feed shape the equivalence statement needs."""
-    from tests.conftest import stage_stream_file
+    from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
     feed.mkdir(exist_ok=True)
     wins = [

@@ -18,7 +18,7 @@ from myasynstreamjoin_spark.streaming.export import (
     read_exported_docs,
     run_stream_export_shards,
 )
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "doc_id long, text string"
 

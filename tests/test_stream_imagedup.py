@@ -20,7 +20,7 @@ from myasynstreamjoin_spark.streaming.imagedup import (
     read_image_neardup_pairs,
     run_stream_image_neardup,
 )
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = (
     "media_id long, media_type string, content binary, "

@@ -16,7 +16,7 @@ from myasynstreamjoin_spark.streaming.linededup import (
     run_stream_line_dedup,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "doc_id long, text string"
 W = 3

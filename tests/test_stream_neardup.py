@@ -16,13 +16,9 @@ from myasynstreamjoin_spark.streaming.neardup import (
     run_stream_neardup,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "doc_id long, text string"
-
-
-def _write_batch(spark, feed, name, df, mtime):
-    stage_stream_file(df, feed, name, mtime)
 
 
 def _run(spark, tmp_path):
@@ -51,13 +47,13 @@ def test_stream_pairs_equal_batch_operator(spark, sf_dir, tmp_path):
     docs = _docs(spark, sf_dir)
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(
-        spark, feed, "f0.parquet",
-        docs.where(F.col("doc_id") % 2 == 0), 1_700_000_000,
+    stage_stream_file(
+        docs.where(F.col("doc_id") % 2 == 0), feed, "f0.parquet",
+        1_700_000_000,
     )
-    _write_batch(
-        spark, feed, "f1.parquet",
-        docs.where(F.col("doc_id") % 2 == 1), 1_700_000_100,
+    stage_stream_file(
+        docs.where(F.col("doc_id") % 2 == 1), feed, "f1.parquet",
+        1_700_000_100,
     )
     wd = _run(spark, tmp_path)
 
@@ -85,13 +81,13 @@ def test_replay_does_not_duplicate_pairs(spark, sf_dir, tmp_path):
     docs = _docs(spark, sf_dir)
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_batch(
-        spark, feed, "f0.parquet",
-        docs.where(F.col("doc_id") % 2 == 0), 1_700_000_000,
+    stage_stream_file(
+        docs.where(F.col("doc_id") % 2 == 0), feed, "f0.parquet",
+        1_700_000_000,
     )
-    _write_batch(
-        spark, feed, "f1.parquet",
-        docs.where(F.col("doc_id") % 2 == 1), 1_700_000_100,
+    stage_stream_file(
+        docs.where(F.col("doc_id") % 2 == 1), feed, "f1.parquet",
+        1_700_000_100,
     )
     wd = _run(spark, tmp_path)
     before = sorted(

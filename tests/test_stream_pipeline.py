@@ -46,7 +46,7 @@ def test_any_ascending_split_matches_single_batch(spark, tmp_path):
         read_pipeline_manifest,
         run_stream_pipeline_e2e,
     )
-    from tests.conftest import stage_stream_file
+    from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
     words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
              "theta", "iota", "kappa"]

@@ -18,7 +18,7 @@ from myasynstreamjoin_spark.streaming.sample import (
     run_stream_weighted_sample,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 K = 20
 

@@ -19,7 +19,7 @@ from myasynstreamjoin_spark.streaming.sketches import (
     run_stream_theta_sketches,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 PAIRS = [("click", "purchase"), ("view", "error")]
 

@@ -16,13 +16,9 @@ from myasynstreamjoin_spark.streaming.spanremove import (
     run_stream_remove_spans,
 )
 
-from tests.conftest import stage_stream_file
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 SCHEMA = "doc_id long, text string"
-
-
-def _write_batch(spark, feed, name, df, mtime):
-    stage_stream_file(df, feed, name, mtime)
 
 
 def _run(spark, tmp_path, k=8):
@@ -47,13 +43,13 @@ def test_stream_equals_batch_on_ascending_feed(spark, sf_dir, tmp_path):
     )
     os.makedirs(tmp_path / "feed")
     n = docs.count()
-    _write_batch(
-        spark, tmp_path / "feed", "b0.parquet",
-        docs.where(docs.doc_id < n // 2), 1_700_000_000,
+    stage_stream_file(
+        docs.where(docs.doc_id < n // 2),
+        tmp_path / "feed", "b0.parquet", 1_700_000_000,
     )
-    _write_batch(
-        spark, tmp_path / "feed", "b1.parquet",
-        docs.where(docs.doc_id >= n // 2), 1_700_000_100,
+    stage_stream_file(
+        docs.where(docs.doc_id >= n // 2),
+        tmp_path / "feed", "b1.parquet", 1_700_000_100,
     )
     work = _run(spark, tmp_path)
     streamed = sorted(
@@ -80,8 +76,8 @@ def test_cross_batch_suppression_and_within_batch_election(spark, tmp_path):
         ],
         SCHEMA,
     )
-    _write_batch(spark, tmp_path / "feed", "b0.parquet", b0, 1_700_000_000)
-    _write_batch(spark, tmp_path / "feed", "b1.parquet", b1, 1_700_000_100)
+    stage_stream_file(b0, tmp_path / "feed", "b0.parquet", 1_700_000_000)
+    stage_stream_file(b1, tmp_path / "feed", "b1.parquet", 1_700_000_100)
     work = _run(spark, tmp_path)
     out = {
         r["doc_id"]: (r["n_removed"], r["text_clean"])
@@ -100,8 +96,8 @@ def test_replay_is_idempotent(spark, tmp_path):
     os.makedirs(tmp_path / "feed")
     b0 = spark.createDataFrame([(0, "a b c d e f g h i j")], SCHEMA)
     b1 = spark.createDataFrame([(5, "x y a b c d e f g h")], SCHEMA)
-    _write_batch(spark, tmp_path / "feed", "b0.parquet", b0, 1_700_000_000)
-    _write_batch(spark, tmp_path / "feed", "b1.parquet", b1, 1_700_000_100)
+    stage_stream_file(b0, tmp_path / "feed", "b0.parquet", 1_700_000_000)
+    stage_stream_file(b1, tmp_path / "feed", "b1.parquet", 1_700_000_100)
     work = _run(spark, tmp_path)
     first = sorted(tuple(r) for r in read_clean_docs(spark, work).collect())
     shutil.rmtree(tmp_path / "ckpt")
@@ -119,7 +115,7 @@ def test_uncommitted_batch_dir_is_ignored(spark, tmp_path):
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
     )
-    _write_batch(spark, tmp_path / "feed", "b0.parquet", b0, 1_700_000_000)
+    stage_stream_file(b0, tmp_path / "feed", "b0.parquet", 1_700_000_000)
     work = _run(spark, tmp_path)
     committed = sorted(
         tuple(r) for r in read_clean_docs(spark, work).collect()
