@@ -57,18 +57,18 @@ def _sql_views(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, str]:
 # --------------------------------------------------------------------
 
 @functools.cache
-def _twin_root() -> str:
-    """The one dir of this process that every streaming twin stages
-    under, removed at interpreter exit: a twin's frame reads lazily
-    from its dir, so no twin dir can go before the process does. A
-    forked child inherits the root but leaves its removal to the
-    owner."""
+def _scratch_root() -> str:
+    """The one dir of this process that every query writing files
+    stages under (streaming twins, indexes, round-trip copies), removed
+    at interpreter exit: a query's frame reads lazily from its dir, so
+    no dir can go before the process does. A forked child inherits the
+    root but leaves its removal to the owner."""
     import atexit
     import os
     import shutil
     import tempfile
 
-    root = tempfile.mkdtemp(prefix="stream_twins_")
+    root = tempfile.mkdtemp(prefix="spark_graft_")
     owner = os.getpid()
 
     def remove() -> None:
@@ -77,6 +77,13 @@ def _twin_root() -> str:
 
     atexit.register(remove)
     return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new dir under the process's scratch root."""
+    import tempfile
+
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def _by_parity(df: DataFrame, col: str) -> tuple[DataFrame, DataFrame]:
@@ -103,11 +110,10 @@ def _stream_twin(
     frame's schema (which replays them as ordered micro-batches), drain
     it with ``run(stream, work_dir)``, and return ``read(work_dir)``."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
-    tmp = tempfile.mkdtemp(prefix=f"stream_{name}_", dir=_twin_root())
+    tmp = _scratch_dir(f"stream_{name}_")
     feed = os.path.join(tmp, "feed")
     os.makedirs(feed)
     for i, frame in enumerate(frames):
@@ -1355,7 +1361,6 @@ def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     query."""
     import hashlib
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.operators.graph import (
         read_copurchase_edges,
@@ -1368,7 +1373,7 @@ def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     if table is None:
         table = "copurchase_edges_" + hashlib.md5(sf_abs.encode()).hexdigest()[:8]
         if not spark.catalog.tableExists(table):
-            tmp = tempfile.mkdtemp(prefix="graph_edges_")
+            tmp = _scratch_dir("graph_edges_")
             write_copurchase_edges(
                 tables.load_table(spark, sf_dir, "lineitem"),
                 table,
@@ -1398,7 +1403,6 @@ def _q_edge_table_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree aggregation runs exchange-free on the bucket key
     (plan-locked in tests/test_graph_edges.py)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.operators.graph import (
         read_copurchase_edges,
@@ -1407,7 +1411,7 @@ def _q_edge_table_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     table = "q_edge_degrees_tmp"
-    tmp = tempfile.mkdtemp(prefix="edge_degrees_")
+    tmp = _scratch_dir("edge_degrees_")
     write_copurchase_edges(
         tables.load_table(spark, sf_dir, "lineitem"),
         table,
@@ -2016,7 +2020,6 @@ def _q_epoch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordered files, rank corruption) is a driver mismatch
     (functions/pipeline.py::export_epoch/read_epoch)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.pipeline import (
         _EPOCH_CHECKSUM_MOD,
@@ -2026,7 +2029,7 @@ def _q_epoch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="epoch_rt_"), "epoch2")
+    tmp = os.path.join(_scratch_dir("epoch_rt_"), "epoch2")
     export_epoch(docs, tmp, seed=2, n_shards=16)
     back = read_epoch(spark, tmp)
     return back.groupBy("shard").agg(
@@ -2050,7 +2053,6 @@ def _q_compact_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite drops or duplicates flips a count or the order-free
     checksum (functions/pipeline.py::compact_shards)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.pipeline import (
         compact_shards,
@@ -2060,7 +2062,7 @@ def _q_compact_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="compact_")
+    root = _scratch_dir("compact_")
     src = os.path.join(root, "shards")
     dst = os.path.join(root, "compacted")
     export_shards(docs, src, n_shards=32)
@@ -2181,8 +2183,6 @@ def _q_sorted_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the oracle is simply row_number over the full
     order. Any boundary overlap, dropped row, or mis-sorted shard
     flips a rank (functions/pipeline.py::export_sorted)."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from myasynstreamjoin_spark.functions.pipeline import export_sorted
@@ -2191,7 +2191,7 @@ def _q_sorted_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
     )
-    out = tempfile.mkdtemp(prefix="sorted_")
+    out = _scratch_dir("sorted_")
     export_sorted(docs, out, F.col("n_chars"), n_shards=8)
     tree = spark.read.parquet(out)
     counts = tree.groupBy("shard").agg(F.count("*").alias("c"))
@@ -2239,8 +2239,6 @@ def _q_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity by construction, so any member the sink drops, duplicates
     or mis-frames flips the oracle
     (sources/webdataset.py::export_webdataset/read_webdataset)."""
-    import tempfile
-
     from myasynstreamjoin_spark.sources.webdataset import (
         export_webdataset,
         read_webdataset,
@@ -2250,7 +2248,7 @@ def _q_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    out = tempfile.mkdtemp(prefix="wds_")
+    out = _scratch_dir("wds_")
     # auto shard count (~32 MiB tars): the read path holds one whole
     # tar per binary row, so shard BYTES are the scale invariant — a
     # fixed n_shards heap-OOM'd the 30× probe at >100 MiB tars. The
@@ -3610,7 +3608,6 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source admission summary with an exact kept-doc_id checksum
     (functions/dedup.py::write_fingerprint_index/incremental_dedup)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.dedup import (
         incremental_dedup,
@@ -3621,7 +3618,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
     table = "q_dedup_incr_tmp"
-    tmp = tempfile.mkdtemp(prefix="fp_index_")
+    tmp = _scratch_dir("fp_index_")
     write_fingerprint_index(
         docs.filter(F.col("doc_id") % 2 == 0),
         table,
@@ -3663,7 +3660,6 @@ def _q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     set and verified pairs
     (functions/dedup.py::write_minhash_index/neardup_against_index)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.dedup import (
         neardup_against_index,
@@ -3673,7 +3669,7 @@ def _q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
     table = "q_neardup_incr_tmp"
-    tmp = tempfile.mkdtemp(prefix="mh_index_")
+    tmp = _scratch_dir("mh_index_")
     write_minhash_index(
         docs.filter(F.col("doc_id") % 2 == 0),
         table,
@@ -3696,8 +3692,6 @@ def _q_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     files open — plan-locked via inputFiles in tests/test_ivf_index.py,
     with pinned equality to the inline ivf_topk_multi)
     (functions/similarity.py::write_ivf_index/ivf_search_index)."""
-    import tempfile
-
     from myasynstreamjoin_spark.functions.similarity import (
         ivf_search_index,
         write_ivf_index,
@@ -3706,7 +3700,7 @@ def _q_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     emb = tables.load_table(spark, sf_dir, "embeddings")
     table = "q_ivf_index_tmp"
-    write_ivf_index(emb, table, n_lists=16, path=tempfile.mkdtemp())
+    write_ivf_index(emb, table, n_lists=16, path=_scratch_dir("ivf_index_"))
     qv = emb.where(F.col("vec_id").isin([0, 1, 2, 3])).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__q")
     )
@@ -3725,7 +3719,6 @@ def _q_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reaches the near-dup probe) and the oracle replays the whole
     cascade per document (functions/ingest.py::ingest_gate)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.dedup import (
         write_fingerprint_index,
@@ -3753,7 +3746,7 @@ def _q_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp_t, mh_t = "q_ingest_fp_tmp", "q_ingest_mh_tmp"
-    tmp = tempfile.mkdtemp(prefix="ingest_e2e_")
+    tmp = _scratch_dir("ingest_e2e_")
     write_fingerprint_index(
         even, fp_t, n_buckets=16, path=os.path.join(tmp, "fp")
     )
@@ -3811,7 +3804,6 @@ def _q_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe plan-locked in tests/test_lines.py)
     (functions/lines.py::write_line_index/line_dedup_against_index)."""
     import os
-    import tempfile
 
     from myasynstreamjoin_spark.functions.lines import (
         line_dedup_against_index,
@@ -3821,7 +3813,7 @@ def _q_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
     table = "q_line_idx_tmp"
-    tmp = tempfile.mkdtemp(prefix="line_index_")
+    tmp = _scratch_dir("line_index_")
     write_line_index(
         docs.filter(F.col("doc_id") % 2 == 0),
         table,
@@ -4068,8 +4060,6 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_textfile_sources.py) — and the surviving rows must equal the
     parquet truth for that source, column for column
     (sources/textfiles.py::write_documents_orc/read_documents_orc)."""
-    import tempfile
-
     from myasynstreamjoin_spark.sources.textfiles import (
         read_documents_orc,
         write_documents_orc,
@@ -4077,7 +4067,7 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     docs = tables.load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="orc_rt_") + "/docs"
+    path = _scratch_dir("orc_rt_") + "/docs"
     write_documents_orc(docs, path)
     src = docs.select("source").orderBy("source").first()["source"]
     return read_documents_orc(spark, path, source=src).select(

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
+from myasynstreamjoin_spark.operators.skew import _phases, split_skew_agg
+from myasynstreamjoin_spark.operators.stats import _count_stats
 
 
 def _decision_cols(
@@ -71,18 +73,7 @@ def batch_strategy(
     Output: (m_total, k_keys, max_cnt, n_heavy, n_singletons, p1,
     cost_hh, cost_apk, strategy, rr_switch).
     """
-    counts = df.groupBy(key).agg(F.count("*").alias("cnt"))
-    total = counts.agg(F.sum("cnt").cast("long").alias("total"))
-    hh_thresh = F.lit(cfg.hh_threshold) * F.col("total") / F.lit(cfg.n_mappers)
-    stats = counts.crossJoin(F.broadcast(total)).agg(
-        F.first("total").alias("m_total"),
-        F.count("*").alias("k_keys"),
-        F.max("cnt").alias("max_cnt"),
-        F.sum(F.when(F.col("cnt") > hh_thresh, 1).otherwise(0)).cast("long").alias("n_heavy"),
-        F.sum(F.when(F.col("cnt") == 1, 1).otherwise(0)).cast("long").alias("n_singletons"),
-        (F.max("cnt") / F.first("total")).alias("__p1"),
-    )
-    return stats.select(
+    return _count_stats(df, key, cfg).select(
         "m_total", "k_keys", "max_cnt", "n_heavy", "n_singletons",
         F.round(F.col("__p1"), 9).alias("p1"),
         *_decision_cols(
@@ -107,17 +98,7 @@ def per_window_strategy(
     Output: (ltw, m_total, k_keys, max_cnt, n_heavy, p1, cost_hh,
     cost_apk, strategy, rr_switch).
     """
-    counts = df.groupBy(ltw_col, key).agg(F.count("*").alias("cnt"))
-    totals = counts.groupBy(ltw_col).agg(F.sum("cnt").cast("long").alias("total"))
-    hh_thresh = F.lit(cfg.hh_threshold) * F.col("total") / F.lit(cfg.n_mappers)
-    stats = counts.join(totals, ltw_col).groupBy(ltw_col).agg(
-        F.first("total").alias("m_total"),
-        F.count("*").alias("k_keys"),
-        F.max("cnt").alias("max_cnt"),
-        F.sum(F.when(F.col("cnt") > hh_thresh, 1).otherwise(0)).cast("long").alias("n_heavy"),
-        (F.max("cnt") / F.first("total")).alias("__p1"),
-    )
-    return stats.select(
+    return _count_stats(df, key, cfg, by=(ltw_col,)).select(
         ltw_col, "m_total", "k_keys", "max_cnt", "n_heavy",
         F.round(F.col("__p1"), 9).alias("p1"),
         *_decision_cols(
@@ -144,15 +125,11 @@ def adaptive_agg(
     (like AQE's runtime re-plan), never row data. Results are identical
     either way; only the physical shuffle shape differs.
     """
-    from myasynstreamjoin_spark.operators.skew import split_skew_agg
-
     choice = batch_strategy(df, keys[0], cfg, lam).select("strategy").collect()[0][0]
     if choice == 0:
-        finals = []
-        from myasynstreamjoin_spark.operators.skew import _MERGEABLE
-
-        for out_name, (fn, col) in aggs.items():
-            partial, _ = _MERGEABLE[fn]
-            finals.append(partial(col).cast("long").alias(out_name))
-        return df.groupBy(*keys).agg(*finals)
+        # hash: the partials of one plain groupBy are the result
+        partials, _ = _phases(aggs)
+        return df.groupBy(*keys).agg(
+            *(p.cast("long").alias(name) for p, name in zip(partials, aggs))
+        )
     return split_skew_agg(df, keys, aggs, fanout=fanout, cfg=cfg)

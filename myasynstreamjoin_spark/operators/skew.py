@@ -15,9 +15,11 @@ dominance. These helpers provide that residual path:
   keys (freq > 0.2·total/m, APKGrouping.scala:97) are salted, the tail
   takes the plain single-shuffle path.
 
-Each takes re-mergeable (partial, final) aggregate pairs so the
-transform is semantics-preserving — tests assert equality with the
-plain groupBy for count/sum/max/min.
+Both run one two-phase body (`_two_phase`) and differ only in the salt
+column they pass; `star_join.star_cardinality_hypercube` is
+`split_skew_agg` over (key, rel). Each takes re-mergeable (partial,
+final) aggregate pairs so the transform is semantics-preserving —
+tests assert equality with the plain groupBy for count/sum/max/min.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
+from myasynstreamjoin_spark.operators.stats import heavy_hitters
 
 # (partial_agg, final_merge) pairs keyed by logical aggregate name.
 # partial runs per (key, salt); final re-merges partials per key.
@@ -51,31 +54,50 @@ def _phases(aggs: dict[str, tuple[str, str]]) -> tuple[list[Column], list[Column
     return partials, finals
 
 
+def _two_phase(
+    df: DataFrame,
+    keys: Sequence[str],
+    aggs: dict[str, tuple[str, str]],
+    salt: Column,
+) -> DataFrame:
+    """The one salted aggregation body: partials per (keys, salt),
+    then the final merge per keys. A row whose salt is constant takes
+    what is in effect the plain single-shuffle path (its final merge
+    folds one partial)."""
+    partials, finals = _phases(aggs)
+    return (
+        df.withColumn("__salt", salt)
+        .groupBy(*keys, "__salt")
+        .agg(*partials)
+        .groupBy(*keys)
+        .agg(*finals)
+    )
+
+
+def _spread(fanout: int) -> Column:
+    # monotonically_increasing_id keeps the salt cheap and uniform
+    # without touching data columns
+    return F.pmod(F.monotonically_increasing_id(), F.lit(fanout))
+
+
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
     fanout: int = 16,
 ) -> DataFrame:
-    """Two-phase salted aggregation: groupBy(keys + salt) partials, then
-    groupBy(keys) final merge.
+    """Two-phase salted aggregation: every key spreads over ``fanout``
+    salts, and the final merge re-combines them.
 
     ``aggs`` maps output column name → (agg_fn, input_col), e.g.
     ``{"cnt": ("count", "*"), "total": ("sum", "value")}``.
 
-    The salt is a deterministic hash of the whole row spread over
-    ``fanout`` buckets (monotonically_increasing_id keeps it cheap and
-    uniform without touching data columns), mirroring the reference's
-    d-choices placement (PartialKeyPartitioner.scala:17-29) — but where
-    the reference needed per-sender load tracking, uniform salting +
-    final merge achieves the same balance statelessly.
+    The uniform salt mirrors the reference's d-choices placement
+    (PartialKeyPartitioner.scala:17-29) — but where the reference
+    needed per-sender load tracking, uniform salting + final merge
+    achieves the same balance statelessly.
     """
-    partials, finals = _phases(aggs)
-    salted = df.withColumn(
-        "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(fanout))
-    )
-    partial = salted.groupBy(*keys, "__salt").agg(*partials)
-    return partial.groupBy(*keys).agg(*finals)
+    return _two_phase(df, keys, aggs, _spread(fanout))
 
 
 def split_skew_agg(
@@ -85,35 +107,23 @@ def split_skew_agg(
     fanout: int = 16,
     cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Head/tail skew aggregation (APK, X7): detect heavy keys with the
-    reference's threshold, salt ONLY those (head → d choices,
-    AdvancedPartialKeyPartitioner.scala:24-50), and run the light tail
-    through the ordinary single-shuffle aggregate; union the results.
+    """Head/tail skew aggregation (APK, X7): detect heavy ``keys[0]``
+    values with the reference's rule and salt ONLY those (head → d
+    choices, AdvancedPartialKeyPartitioner.scala:24-50); the light tail
+    keeps the constant salt 0.
 
     The heavy-key set is a small broadcast (bounded by m/θ keys by the
     threshold's pigeonhole), exactly like the reference's re-broadcast
     feedback loop (BroadcastWrapper.scala:15-37) minus the cross-batch
     state.
 
-    Since round 11 the head/tail split is expressed as a CONDITIONAL
-    SALT inside one aggregation pass — salt spreads over ``fanout``
-    values for detected-heavy rows and is the constant 0 for the tail
-    — rather than two filtered branches union'd back together. The
-    per-key results are identical (the tail's final merge folds one
-    partial; the head's folds ``fanout``), but the old union form made
-    every branch re-evaluate its whole input subtree: the r11 stage
-    profile showed the plan scanning the fact table SIX times (each
-    union arm re-ran the scan AND the heavy-hitter detection subtree,
-    itself two scans before the heavy_hitters single-scan fix). The
-    conditional form is 2 scans: one inside heavy_hitters, one for
-    the aggregate — the 100 TB floor for detect-then-aggregate.
-
-    Inherits ``heavy_hitters``' checkpoint lifetime contract (r11
-    advice): construct-then-execute within one batch scope; do not
-    cache the returned plan across a release_blocks boundary.
+    The head/tail split is a CONDITIONAL SALT inside one aggregation
+    pass, not two filtered branches union'd back together: the r11
+    stage profile showed the union form scanning the fact table SIX
+    times (each arm re-ran the scan and the detection subtree). The
+    conditional form is 2 scans: one inside the detection, one for the
+    aggregate — the floor for detect-then-aggregate.
     """
-    from myasynstreamjoin_spark.operators.stats import heavy_hitters
-
     key0 = keys[0]
     heavy = heavy_hitters(df, key0, cfg).select(
         F.col(key0).alias("__hk"), F.lit(True).alias("__heavy")
@@ -121,18 +131,7 @@ def split_skew_agg(
     tagged = df.join(
         F.broadcast(heavy), df[key0] == F.col("__hk"), "left"
     ).drop("__hk")
-
-    partials, finals = _phases(aggs)
-    return (
-        tagged.withColumn(
-            "__salt",
-            F.when(
-                F.col("__heavy").isNotNull(),
-                F.pmod(F.monotonically_increasing_id(), F.lit(fanout)),
-            ).otherwise(F.lit(0).cast("long")),
-        )
-        .groupBy(*keys, "__salt")
-        .agg(*partials)
-        .groupBy(*keys)
-        .agg(*finals)
+    salt = F.when(F.col("__heavy").isNotNull(), _spread(fanout)).otherwise(
+        F.lit(0).cast("long")
     )
+    return _two_phase(tagged, keys, aggs, salt)

@@ -17,12 +17,34 @@ real joins and let Catalyst/AQE pick broadcast + skew-split strategies.
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
+from myasynstreamjoin_spark.operators.skew import split_skew_agg
+from myasynstreamjoin_spark.operators.stats import heavy_hitters
+
+
+def _counts_product(per_rel: DataFrame, n_rels: int) -> DataFrame:
+    """Per-(key, rel) counts ``cnt`` → ``(key, c0..c{n-1}, card)`` with
+    card = Π_r c_r: one shuffle of at most |keys|·n_rels rows, pivot-free
+    conditional aggregation, inner-join semantics (a key absent from
+    any relation produces no row)."""
+    wide = per_rel.groupBy("key").agg(
+        *(
+            F.max(F.when(F.col("rel") == r, F.col("cnt"))).alias(f"c{r}")
+            for r in range(n_rels)
+        )
+    )
+    counts = [F.col(f"c{r}") for r in range(n_rels)]
+    present = functools.reduce(operator.and_, (c.isNotNull() for c in counts))
+    card = functools.reduce(operator.mul, counts, F.lit(1).cast("long"))
+    return wide.where(present).withColumn("card", card)
 
 
 def star_cardinality(star: DataFrame, n_rels: int = 3) -> DataFrame:
@@ -30,22 +52,11 @@ def star_cardinality(star: DataFrame, n_rels: int = 3) -> DataFrame:
     semantics: keys absent from any relation produce no row).
 
     Input F3 ``(rel, ts, key, value)``; output ``(key, card)`` with
-    card = Π_r count(rel=r, key). Implemented as
-    groupBy(key, rel).count → pivot-free conditional agg → product,
-    i.e. two shuffles of at-most-|keys|·n_rels rows.
+    card = Π_r count(rel=r, key): groupBy(key, rel).count, then the
+    counts-product — two shuffles of at-most-|keys|·n_rels rows.
     """
     per_rel = star.groupBy("key", "rel").agg(F.count("*").alias("cnt"))
-    cols = [
-        F.max(F.when(F.col("rel") == r, F.col("cnt"))).alias(f"c{r}")
-        for r in range(n_rels)
-    ]
-    wide = per_rel.groupBy("key").agg(*cols)
-    product = F.lit(1).cast("long")
-    cond = F.lit(True)
-    for r in range(n_rels):
-        product = product * F.col(f"c{r}")
-        cond = cond & F.col(f"c{r}").isNotNull()
-    return wide.where(cond).select("key", product.alias("card"))
+    return _counts_product(per_rel, n_rels).select("key", "card")
 
 
 def star_cardinality_hypercube(
@@ -58,37 +69,18 @@ def star_cardinality_hypercube(
     star-join-stateless/cluster/DuplicateHHJoin.scala re-expressed as
     DataFrame-level salting.
 
-    Heavy keys (freq > hh_threshold·total/m, the reference's rule) are
-    fragmented: each heavy (key, rel) row gets a salt cell so its
-    partial counts spread over `n_cells` reducers; light keys take the
-    plain path. The final merge sums the salted partials — equivalent
-    to the reference's replication-corrected merge
+    The per-(key, rel) counts are ``skew.split_skew_agg`` over
+    (key, rel) with ``fanout=n_cells``: heavy keys (the reference's
+    rule) spread their partial counts over ``n_cells`` salts, light
+    keys take the plain path. The final merge sums the salted partials
+    — equivalent to the reference's replication-corrected merge
     (DuplicateHHJoin.scala:158-208) but without row replication, since
     we aggregate counts rather than materialize join tuples.
     """
-    from myasynstreamjoin_spark.operators.stats import heavy_hitters
-
-    heavy = heavy_hitters(star, "key", cfg).select("key", F.lit(True).alias("is_heavy"))
-    tagged = star.join(F.broadcast(heavy), "key", "left").withColumn(
-        "salt",
-        F.when(
-            F.col("is_heavy").isNotNull(),
-            F.pmod(F.xxhash64("value", "ts"), F.lit(n_cells)),
-        ).otherwise(F.lit(0)),
+    per_rel = split_skew_agg(
+        star, ["key", "rel"], {"cnt": ("count", "*")}, fanout=n_cells, cfg=cfg
     )
-    partial = tagged.groupBy("key", "rel", "salt").agg(F.count("*").alias("pcnt"))
-    per_rel = partial.groupBy("key", "rel").agg(F.sum("pcnt").alias("cnt"))
-    cols = [
-        F.max(F.when(F.col("rel") == r, F.col("cnt"))).alias(f"c{r}")
-        for r in range(n_rels)
-    ]
-    wide = per_rel.groupBy("key").agg(*cols)
-    product = F.lit(1).cast("long")
-    cond = F.lit(True)
-    for r in range(n_rels):
-        product = product * F.col(f"c{r}")
-        cond = cond & F.col(f"c{r}").isNotNull()
-    return wide.where(cond).select("key", product.alias("card"))
+    return _counts_product(per_rel, n_rels).select("key", "card")
 
 
 def star_join_hypercube_rows(
@@ -102,7 +94,7 @@ def star_join_hypercube_rows(
     including the row replication its WIP left commented out (:111-115),
     finished and Spark-first.
 
-    Per heavy key z a (mx, my, mz) cube of cells exists. A tuple from
+    Per key z a (mx, my, mz) cube of cells exists. A tuple from
     relation r hashes its payload to ONE coordinate on dim r and is
     REPLICATED across every cell sharing that coordinate (rel 0 → the
     (c0, *, *) plane of my·mz cells, DuplicateHHJoin.scala:80-103). Any
@@ -112,7 +104,19 @@ def star_join_hypercube_rows(
     replication correction is needed (the reference needs :189-191's
     division only because it merges per-rel COUNTS, which the
     replication inflates; materialized rows dedup structurally).
-    Light keys take one cell (-1), unreplicated — the plain join path.
+
+    The cube dims come from a small plan table broadcast onto the data
+    (dims are columns, not Python ints). ``cube="auto"`` (the default)
+    sizes a cube PER heavy key with the reference's adaptive allocation
+    (``plan_cube_dims``, DuplicateHHJoin.scala:248-281): workers split
+    ∝ √(join size), dims shaped to each key's per-relation counts;
+    ``m`` is the worker budget (default cfg.n_mappers). A static tuple
+    gives every heavy key that one cube (the reference's :75-103
+    fixed-shares form). Keys without a plan — light keys and sub-1-worker
+    "fake" heavy hitters (DuplicateHHJoin.scala:254-257) — get a 1×1×1
+    cube: one cell, unreplicated, the plain join path. All three
+    relations read the SAME broadcast dims, so exactly-once holds per
+    key.
 
     Scale design: replication cost is the classic shares bound — a
     heavy rel-r tuple is copied (cube volume / m_r) times, paid in the
@@ -121,157 +125,52 @@ def star_join_hypercube_rows(
     AQE skew-join generalized to a multi-way join, where Spark's
     two-table skew splitting doesn't reach.
 
-    ``cube="auto"`` (the default) sizes a cube PER heavy key with the
-    reference's adaptive allocation (``plan_cube_dims``,
-    DuplicateHHJoin.scala:248-281): workers split ∝ √(join size), dims
-    shaped to each key's per-relation counts. ``m`` is the worker
-    budget (default cfg.n_mappers). A static tuple applies one uniform
-    cube to every heavy key (the reference's :75-103 fixed-shares
-    form).
-
     Output: (key, x0, x1, x2) — one row per joined triple.
     """
     if cube == "auto":
-        return _hypercube_rows_auto(star, cfg, m)
-    return _hypercube_rows_static(star, cube, cfg)
-
-
-def _hypercube_rows_static(
-    star: DataFrame,
-    cube: tuple[int, int, int],
-    cfg: EngineConfig,
-) -> DataFrame:
-    from myasynstreamjoin_spark.operators.stats import heavy_hitters
-
-    mx, my, mz = cube
-    heavy = heavy_hitters(star, "key", cfg).select(
-        "key", F.lit(True).alias("is_heavy")
-    )
+        schema = T.StructType(
+            [T.StructField("key", star.schema["key"].dataType)]
+            + [T.StructField(d, T.IntegerType()) for d in ("mx", "my", "mz")]
+        )
+        plans = star.sparkSession.createDataFrame(
+            [(p["key"], p["mx"], p["my"], p["mz"]) for p in plan_cube_dims(star, 3, cfg, m)],
+            schema,
+        )
+    else:
+        plans = heavy_hitters(star, "key", cfg).select(
+            "key", *(F.lit(d).alias(name) for d, name in zip(cube, ("mx", "my", "mz")))
+        )
     # NOT persisted: the three relation slices re-derive this branch,
-    # but each slice's scan prunes to its own rel and the heavy set is
-    # a broadcast — measured, caching the pre-explode corpus here costs
-    # more than the recomputation (and wouldn't be viable at 100 TB).
-    tagged = star.join(F.broadcast(heavy), "key", "left").select(
+    # but each slice's scan prunes to its own rel and the plan table is
+    # a broadcast — caching the pre-explode corpus costs more than the
+    # recomputation (and wouldn't be viable at 100 TB).
+    tagged = star.join(F.broadcast(plans), "key", "left").select(
         "key",
         "rel",
         F.floor("value").cast("int").alias("x"),
-        F.col("is_heavy").isNotNull().alias("hh"),
+        *(F.coalesce(d, F.lit(1)).alias(d) for d in ("mx", "my", "mz")),
     )
+    dims = [F.col("mx"), F.col("my"), F.col("mz")]
 
-    def cell_id(cx, cy, cz):
-        return (cx * my + cy) * mz + cz
+    def rel_slice(r: int) -> DataFrame:
+        # cell = (c0·my + c1)·mz + c2. The plane of rel r fixes digit r
+        # to the tuple's coordinate: its i-th cell keeps i's digits
+        # below dim r (lo), multiplies those above it past dim r, and
+        # puts the coordinate in between. O(1) arithmetic per cell.
+        stride = functools.reduce(operator.mul, dims[r + 1:], F.lit(1))
+        plane = functools.reduce(operator.mul, dims[:r] + dims[r + 1:], F.lit(1))
+        coord = F.pmod(F.xxhash64(F.col("x"), F.lit(11 + r)), dims[r])
 
-    def rel_slice(r: int, payload_alias: str) -> DataFrame:
-        dims = (mx, my, mz)
-        coord = F.pmod(F.xxhash64(F.col("x"), F.lit(11 + r)), F.lit(dims[r]))
-        # Unrolled cell enumeration (cube dims are small static ints):
-        # the plane of cells sharing this tuple's coordinate on dim r.
-        if r == 0:
-            cells = [cell_id(coord, j, k) for j in range(my) for k in range(mz)]
-        elif r == 1:
-            cells = [cell_id(i, coord, k) for i in range(mx) for k in range(mz)]
-        else:
-            cells = [cell_id(i, j, coord) for i in range(mx) for j in range(my)]
-        cell_arr = F.when(F.col("hh"), F.array(*cells)).otherwise(
-            F.array(F.lit(-1))
-        )
-        return (
-            tagged.where(F.col("rel") == r)
-            .select("key", F.col("x").alias(payload_alias), cell_arr.alias("cells"))
-            .withColumn("cell", F.explode("cells"))
-            .drop("cells")
-        )
+        def cell(i):
+            lo = F.pmod(i, stride)
+            return (i - lo) * dims[r] + coord * stride + lo
 
-    r0, r1, r2 = (rel_slice(r, f"x{r}") for r in range(3))
-    return r0.join(r1, ["key", "cell"], "inner").join(
-        r2, ["key", "cell"], "inner"
-    ).select("key", "x0", "x1", "x2")
-
-
-def _hypercube_rows_auto(
-    star: DataFrame, cfg: EngineConfig, m: int | None
-) -> DataFrame:
-    """Per-key adaptive cubes: ``plan_cube_dims`` (the reference's
-    driver-side foreachRDD allocation) chooses (mx, my, mz) per heavy
-    key; the tiny plan table broadcasts onto the data and the cell
-    planes are enumerated DYNAMICALLY with sequence/transform (dims are
-    columns now, not Python ints). Keys without a plan — light keys and
-    sub-1-worker "fake" heavy hitters (DuplicateHHJoin.scala:254-257) —
-    coalesce to a 1×1×1 cube, which is exactly the single-cell
-    unreplicated path.
-
-    Exactly-once still holds per key: all three relations read the SAME
-    broadcast dims, so a triple meets in the one cell
-    (h0(x0), h1(x1), h2(x2)) of ITS key's cube. The per-element lambda
-    work is O(1) arithmetic (the captured coord/dims re-evaluate per
-    cell, but each is a pmod/attribute — nothing amplifying; see
-    SCALE.md HOF rules)."""
-    from pyspark.sql import types as T
-
-    plans = plan_cube_dims(star, 3, cfg, m)
-    spark = star.sparkSession
-    schema = T.StructType(
-        [
-            T.StructField("key", star.schema["key"].dataType),
-            T.StructField("mx", T.IntegerType()),
-            T.StructField("my", T.IntegerType()),
-            T.StructField("mz", T.IntegerType()),
-        ]
-    )
-    plan_df = spark.createDataFrame(
-        [(p["key"], p["mx"], p["my"], p["mz"]) for p in plans], schema
-    )
-    tagged = star.join(F.broadcast(plan_df), "key", "left").select(
-        "key",
-        "rel",
-        F.floor("value").cast("int").alias("x"),
-        F.coalesce("mx", F.lit(1)).alias("mx"),
-        F.coalesce("my", F.lit(1)).alias("my"),
-        F.coalesce("mz", F.lit(1)).alias("mz"),
-    )
-
-    def rel_cells(r: int):
-        mx, my, mz = F.col("mx"), F.col("my"), F.col("mz")
-        coord = F.pmod(F.xxhash64(F.col("x"), F.lit(11 + r)), (mx, my, mz)[r])
-        one = F.lit(1)
-        if r == 0:
-            return F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), my - one),
-                    lambda j: F.transform(
-                        F.sequence(F.lit(0), mz - one),
-                        lambda k: (coord * my + j) * mz + k,
-                    ),
-                )
-            )
-        if r == 1:
-            return F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), mx - one),
-                    lambda i: F.transform(
-                        F.sequence(F.lit(0), mz - one),
-                        lambda k: (i * my + coord) * mz + k,
-                    ),
-                )
-            )
-        return F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), mx - one),
-                lambda i: F.transform(
-                    F.sequence(F.lit(0), my - one),
-                    lambda j: (i * my + j) * mz + coord,
-                ),
-            )
-        )
-
-    def rel_slice(r: int, payload_alias: str) -> DataFrame:
+        cells = F.transform(F.sequence(F.lit(0), plane - 1), cell)
         return tagged.where(F.col("rel") == r).select(
-            "key",
-            F.col("x").alias(payload_alias),
-            F.explode(rel_cells(r)).alias("cell"),
+            "key", F.col("x").alias(f"x{r}"), F.explode(cells).alias("cell")
         )
 
-    r0, r1, r2 = (rel_slice(r, f"x{r}") for r in range(3))
+    r0, r1, r2 = (rel_slice(r) for r in range(3))
     return r0.join(r1, ["key", "cell"], "inner").join(
         r2, ["key", "cell"], "inner"
     ).select("key", "x0", "x1", "x2")
@@ -306,8 +205,6 @@ def plan_cube_dims(
     Returns one dict per surviving heavy key:
     {key, mh, mx, my, mz} with Π dims ≤ mh and Σ mh ≤ m.
     """
-    from myasynstreamjoin_spark.operators.stats import heavy_hitters
-
     m = m or cfg.n_mappers
     heavy = heavy_hitters(star, "key", cfg).select("key")
     per_rel = (
@@ -315,20 +212,10 @@ def plan_cube_dims(
         .groupBy("key", "rel")
         .agg(F.count("*").alias("cnt"))
     )
-    cols = [
-        F.max(F.when(F.col("rel") == r, F.col("cnt"))).alias(f"c{r}")
-        for r in range(n_rels)
+    stats = [  # < m/θ rows
+        (r["key"], [r[f"c{i}"] for i in range(n_rels)], r["card"])
+        for r in _counts_product(per_rel, n_rels).collect()
     ]
-    rows = per_rel.groupBy("key").agg(*cols).collect()  # < m/θ rows
-
-    stats = []
-    for r in rows:
-        counts = [r[f"c{i}"] or 0 for i in range(n_rels)]
-        if all(c > 0 for c in counts):
-            prod = 1
-            for c in counts:
-                prod *= c
-            stats.append((r["key"], counts, prod))
     tmp1 = sum(p ** 0.5 for _, _, p in stats)
     if tmp1 == 0:
         return []

@@ -12,6 +12,8 @@ reaches the driver.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,55 +25,76 @@ def key_counts(df: DataFrame, key: str = "key") -> DataFrame:
     return df.groupBy(key).agg(F.count("*").alias("cnt"))
 
 
+def _heavy(cnt: str, total: str, cfg: EngineConfig) -> str:
+    """The reference's heavy-key rule, freq > hh_threshold · total /
+    n_mappers (A11; the 0.2·total/m of
+    one-group-stateless/cluster/APKGrouping.scala:94-100 and
+    stateless/cluster/AdvancedPartialKeyJoin.scala:37), over two SQL
+    expressions. The ``D`` suffix keeps the threshold a double (a bare
+    0.2 parses as DECIMAL)."""
+    return f"{cnt} > {cfg.hh_threshold!r}D * {total} / {cfg.n_mappers}"
+
+
+def _key_stats(
+    df: DataFrame, key: str, cfg: EngineConfig, by: Sequence[str] = ()
+) -> DataFrame:
+    """The count statistics every skew decision reads: per (by, key)
+    its count, its group's total and the heavy-key verdict, as
+    ``(*by, key, cnt, total, heavy)``. With ``by`` empty the group is
+    the whole batch.
+
+    One aggregate over ``df``: the total is a window sum of the per-key
+    counts over the group, so it comes from the counts themselves (sum
+    of cnt == count(*) of the group exactly) in the same pass, and the
+    input is scanned once. The older form joined the counts to their
+    own aggregated total, which read them down two branches that
+    Spark's exchange reuse did not merge (r11: the scan ran twice), and
+    needed a localCheckpoint of the counts, with a construct-then-execute
+    lifetime, to stay at one scan. A caller that reads neither
+    ``total`` nor ``heavy`` (``skew_p1``) has the window pruned away.
+    The whole-batch window gathers the key-grain rows into one task,
+    as the whole-batch aggregate does after it.
+
+    The columns are SQL expressions, which are cheaper to build: on
+    PySpark 4 one Column-API call took ~1 ms against ~0.3 ms for one
+    ``F.expr`` (local[4], 4-core x86), and with the Column API the
+    build was a third of skew_p1's wall at sf0.1.
+    """
+    part = ", ".join(f"`{c}`" for c in by)
+    total = f"sum(count(*)) OVER (PARTITION BY {part})" if by else "sum(count(*)) OVER ()"
+    return df.groupBy(*by, key).agg(
+        F.expr("count(*) AS cnt"),
+        F.expr(f"{total} AS total"),
+        F.expr(f"{_heavy('count(*)', total, cfg)} AS heavy"),
+    )
+
+
+_COUNT_STATS = (
+    "sum(cnt) AS m_total",
+    "count(*) AS k_keys",
+    "max(cnt) AS max_cnt",
+    "CAST(sum(CASE WHEN heavy THEN 1 ELSE 0 END) AS BIGINT) AS n_heavy",
+    "CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_singletons",
+    "max(cnt) / sum(cnt) AS __p1",
+)
+
+
+def _count_stats(
+    df: DataFrame, key: str, cfg: EngineConfig, by: Sequence[str] = ()
+) -> DataFrame:
+    """One row per group of ``_key_stats``: ``(*by, m_total, k_keys,
+    max_cnt, n_heavy, n_singletons, __p1)``. ``__p1`` is left
+    unrounded: the cost model's decision columns read it, and their
+    DuckDB oracles reproduce the unrounded double bit for bit."""
+    return _key_stats(df, key, cfg, by).groupBy(*by).agg(*map(F.expr, _COUNT_STATS))
+
+
 def heavy_hitters(
     df: DataFrame, key: str = "key", cfg: EngineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """Keys with freq > hh_threshold · total / n_mappers (A11; the
-    0.2·total/m rule of one-group-stateless/cluster/APKGrouping.scala:94-100
-    and stateless/cluster/AdvancedPartialKeyJoin.scala:37).
-
-    The total is a one-row aggregate broadcast into the comparison —
-    a scalar join, not a driver collect, so the plan is a single pass
-    over the per-key counts regardless of input size. The total is
-    derived from the per-key counts themselves (sum of cnt ==
-    count(*) of df, exactly), NOT a second aggregate over ``df``: the
-    re-aggregation runs over ≤|keys| tiny rows, where a df-side count
-    was a second full scan of the input (r11 stage profile: the
-    split_skew_agg plan carried SIX fact scans, two of them this
-    total).
-    Output ``(key, cnt)``.
-
-    The counts table is eagerly localCheckpoint-ed: the plan reads it
-    down TWO branches (the total aggregate and the threshold filter),
-    and Spark's exchange reuse verifiably does NOT fire for the pair
-    (r11: executed plans showed the scan + partial-agg subtree running
-    twice), so without the cut every heavy-hitter detection paid two
-    full input scans. The checkpoint is key-cardinality rows — node
-    grain, default storage per the blocks.py rule — and callers'
-    batch scopes release it. A lazy (eager=False) variant was measured
-    in r12 and rejected: under AQE, ``localCheckpoint`` calls
-    ``queryExecution.toRdd``, which materializes the aggregation's
-    shuffle stages (the full input scan) at CONSTRUCTION time
-    regardless of the eager flag — laziness only defers the final
-    key-grain result pass, so plan construction can never be
-    job-free here and eager keeps the blocks' lifetime obvious.
-
-    LIFETIME CONTRACT (r11 advice): the returned plan depends on
-    checkpoint blocks — construct-then-execute within ONE batch scope.
-    Re-executing it after the caller's batch_scope/release_blocks has
-    freed the blocks fails with missing-block errors, and the operator
-    cannot be applied to a streaming DataFrame outside foreachBatch
-    (checkpointing needs an executable plan). All engine callers are
-    batch-scoped; do not cache the result across release boundaries.
-    """
-    counts = key_counts(df, key).localCheckpoint(eager=True)
-    total = counts.agg(F.sum("cnt").cast("long").alias("total"))
-    thresh = F.lit(cfg.hh_threshold) * F.col("total") / F.lit(cfg.n_mappers)
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .where(F.col("cnt") > thresh)
-        .select(key, "cnt")
-    )
+    """Keys whose frequency clears the heavy-key rule (A11), as
+    ``(key, cnt)``."""
+    return _key_stats(df, key, cfg).where("heavy").select(key, "cnt")
 
 
 def skew_p1(df: DataFrame, key: str = "key") -> DataFrame:
@@ -81,10 +104,8 @@ def skew_p1(df: DataFrame, key: str = "key") -> DataFrame:
     Single-row output ``(max_cnt, total, p1)``; p1 rounded so the
     float is hash-stable across engines.
     """
-    return key_counts(df, key).agg(
-        F.max("cnt").alias("max_cnt"),
-        F.sum("cnt").cast("long").alias("total"),
-        F.round(F.max("cnt") / F.sum("cnt"), 9).alias("p1"),
+    return _count_stats(df, key, DEFAULT_CONFIG).selectExpr(
+        "max_cnt", "m_total AS total", "round(__p1, 9) AS p1"
     )
 
 
@@ -97,23 +118,12 @@ def batch_stats(df: DataFrame, key: str = "key", cfg: EngineConfig = DEFAULT_CON
     These feed the costHH/costAPK strategy choice (X8); in this engine
     the analogous runtime adaptivity is AQE, but the stats remain useful
     for plan selection (e.g. split_skew_agg fan-out) and monitoring.
-
-    Same branch-duplication fix as ``heavy_hitters`` (r11): the counts
-    table is checkpointed once instead of re-aggregated per branch,
-    under the same construct-then-execute single-batch-scope lifetime
-    contract (see ``heavy_hitters``).
     """
-    counts = key_counts(df, key).localCheckpoint(eager=True)
-    total = counts.agg(F.sum("cnt").cast("long").alias("total"))
-    hh_thresh = F.lit(cfg.hh_threshold) * F.col("total") / F.lit(cfg.n_mappers)
-    return counts.crossJoin(F.broadcast(total)).agg(
-        F.first("total").alias("m_total"),
-        F.count("*").alias("k_keys"),
-        F.max("cnt").alias("max_cnt"),
-        F.sum(F.when(F.col("cnt") > hh_thresh, 1).otherwise(0)).cast("long").alias("n_heavy"),
-        F.sum(F.when(F.col("cnt") == 1, 1).otherwise(0)).cast("long").alias("n_singletons"),
-        F.round(F.max("cnt") / F.first("total"), 9).alias("p1"),
+    return _count_stats(df, key, cfg).selectExpr(
+        "m_total", "k_keys", "max_cnt", "n_heavy", "n_singletons",
+        "round(__p1, 9) AS p1",
     )
+
 
 def approx_distinct_audit(
     df: DataFrame,
@@ -219,19 +229,18 @@ def cms_heavy_hitters_audit(
     # one-pass build + partition merge as the Scala API).
     jdf = df.select(F.col(key).cast("string").alias("__k"))._jdf
     sketch = jdf.stat().countMinSketch("__k", eps, confidence, seed)
-    exact = heavy_hitters(df, key, cfg)
-    total = df.count()
-    thresh = cfg.hh_threshold * total / cfg.n_mappers
-    rows = exact.collect()  # ≤ n_mappers/hh_threshold keys by the rule
-    spark = df.sparkSession
+    # ≤ n_mappers/hh_threshold keys by the rule
+    rows = _key_stats(df, key, cfg).where("heavy").collect()
     out = [
-        (r[key], r["cnt"], int(sketch.estimateCount(str(r[key]))))
+        (r[key], r["cnt"], int(sketch.estimateCount(str(r[key]))), r["total"])
         for r in rows
     ]
-    res = spark.createDataFrame(out, f"{key} string, cnt long, cms_est long")
+    res = df.sparkSession.createDataFrame(
+        out, f"{key} string, cnt long, cms_est long, total long"
+    )
     return res.select(
         key, "cnt", "cms_est",
-        (F.col("cms_est").cast("double") > F.lit(thresh)).alias("detected"),
+        F.expr(f"{_heavy('cms_est', 'total', cfg)} AS detected"),
     )
 
 

@@ -25,7 +25,8 @@ Rules:
 - a ``v{N}`` or ``b{N}`` dir counts only once its ``_SUCCESS`` marker
   exists. Spark writes it last, so a crash mid-write leaves the dir
   invisible and the replay overwrites it; a multi-part version gets one
-  marker of its own after its last part;
+  marker of its own after its last part, and a rewrite of a committed
+  one removes the old marker before its first part;
 - a (possibly replayed) batch N rebuilds from the newest committed
   version STRICTLY BELOW N. On first delivery that is simply the
   latest; on redelivery it skips the batch's own, possibly
@@ -141,9 +142,12 @@ def _write_commit(batch_id: int, commit: Commit) -> None:
         if isinstance(version, DataFrame):
             _overwrite(version, vdir)
             continue
+        # a crash between the parts must leave the version invisible,
+        # so a replay rewriting a committed version drops its marker first
+        if is_committed(vdir):
+            os.remove(os.path.join(vdir, _SUCCESS))
         for part, frame in version.items():
             _overwrite(frame, os.path.join(vdir, part))
-        # a crash between the parts must leave the version invisible
         mark_committed(vdir)
     if commit.snapshot is not None:
         save_snapshot(commit.snapshot[0], batch_id, commit.snapshot[1])

@@ -6,15 +6,17 @@ duplicates, no gaps)."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
 from myasynstreamjoin_spark.session import SESSION_CONFS, prepare_session
 from myasynstreamjoin_spark.sources import tables
-from myasynstreamjoin_spark.streaming.windowed import EVENTS_SCHEMA
+from myasynstreamjoin_spark.streaming.windowed import (
+    EVENTS_SCHEMA,
+    stage_stream_file,
+)
 
+T0 = 1_700_000_000  # input file mtimes: the batch order
 CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 FILE_CONTEXT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -29,16 +31,6 @@ def _event_halves(spark, sf_dir):
     half1 = ev.where(F.col("event_id") % 2 == 0)
     half2 = ev.where(F.col("event_id") % 2 == 1)
     return half1, half2, ev.count()
-
-
-def _add_file(df, src, name: str) -> None:
-    """Write ``df`` as one parquet file ``src/name.parquet`` —
-    FileStreamSource lists leaf files, so flatten the nested dir."""
-    tmp = src / f"_{name}"
-    df.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    for f in tmp.glob("part-*.parquet"):
-        shutil.move(str(f), str(src / f"{name}.parquet"))
-    shutil.rmtree(tmp)
 
 
 def _start(spark, src, out: str, ckpt: str):
@@ -74,13 +66,13 @@ def test_restart_from_checkpoint_is_exactly_once(spark, sf_dir, tmp_path):
     half1, half2, n_total = _event_halves(spark, sf_dir)
 
     # first life: only half the input exists
-    _add_file(half1, src, "a")
+    stage_stream_file(half1, src, "a.parquet", T0)
     _run_once(spark, src, out, ckpt)
     n_first = spark.read.parquet(out).count()
     assert 0 < n_first < n_total
 
     # second life: new file arrives, query restarts from the checkpoint
-    _add_file(half2, src, "b")
+    stage_stream_file(half2, src, "b.parquet", T0 + 1)
     _run_once(spark, src, out, ckpt)
 
     got = spark.read.parquet(out)
@@ -102,7 +94,7 @@ def test_restart_across_checkpoint_managers_is_exactly_once(spark, sf_dir, tmp_p
     half1, half2, n_total = _event_halves(spark, sf_dir)
 
     # first life under the FileContext manager
-    _add_file(half1, src, "a")
+    stage_stream_file(half1, src, "a.parquet", T0)
     spark.conf.set(CKPT_MANAGER_KEY, FILE_CONTEXT_MANAGER)
     try:
         _run_once(spark, src, out, ckpt)
@@ -112,7 +104,7 @@ def test_restart_across_checkpoint_managers_is_exactly_once(spark, sf_dir, tmp_p
     assert 0 < n_first < n_total
 
     # second life under the engine default
-    _add_file(half2, src, "b")
+    stage_stream_file(half2, src, "b.parquet", T0 + 1)
     q = _start(spark, src, out, ckpt)
     try:
         q.processAllAvailable()

@@ -15,7 +15,15 @@ import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from myasynstreamjoin_spark.config import EngineConfig
+from myasynstreamjoin_spark.operators.cost_model import batch_strategy
 from myasynstreamjoin_spark.operators.skew import salted_agg, split_skew_agg
+from myasynstreamjoin_spark.operators.star_join import (
+    star_cardinality,
+    star_cardinality_hypercube,
+    star_join_hypercube_rows,
+)
+from myasynstreamjoin_spark.operators.stats import batch_stats
 from myasynstreamjoin_spark.sources.fixtures import (
     decode_packed_lines,
     encode_packed_lines,
@@ -72,6 +80,66 @@ def test_split_skew_agg_equals_plain_agg(spark, rows):
     got = {(r["key"], r["cnt"]) for r in split_skew_agg(
         df, ["key"], {"cnt": ("count", "*")}, fanout=8).collect()}
     assert got == plain
+
+
+# Skewed F3 star rows (rel, ts, key, value): one hot key over a light
+# tail, so the heavy-key rule splits the keys into both paths. With
+# n_mappers=2 the rule is freq > 0.1 · total.
+SKEW_CFG = EngineConfig(n_mappers=2)
+STAR_ROW = st.tuples(
+    st.integers(min_value=0, max_value=2),           # rel
+    st.integers(min_value=0, max_value=2**40),       # ts
+    st.sampled_from(["a", "b", "c", "d", "e", "f"]),  # tail key
+    st.integers(min_value=0, max_value=9),           # value
+)
+SKEWED_STAR = st.tuples(
+    st.lists(STAR_ROW, min_size=1, max_size=30),
+    st.lists(st.tuples(st.integers(0, 2), st.integers(0, 9)), max_size=30),
+).map(lambda t: t[0] + [(r, 0, "hot", v) for r, v in t[1]])
+STAR_SCHEMA = "rel int, ts long, key string, value int"
+
+
+@given(rows=SKEWED_STAR, n_cells=st.sampled_from([2, 4, 8]))
+@PROP_SETTINGS
+def test_star_cardinality_hypercube_equals_counts_product(spark, rows, n_cells):
+    """The salted J3 path (split_skew_agg over (key, rel)) counts the
+    same per-key cardinalities as the plain counts-product."""
+    star = spark.createDataFrame(rows, STAR_SCHEMA)
+    want = {tuple(r) for r in star_cardinality(star).collect()}
+    got = {tuple(r) for r in star_cardinality_hypercube(
+        star, cfg=SKEW_CFG, n_cells=n_cells).collect()}
+    assert got == want
+
+
+@given(rows=SKEWED_STAR, cube=st.sampled_from([(1, 1, 1), (2, 2, 2), (3, 1, 2)]))
+@PROP_SETTINGS
+def test_hypercube_rows_static_equals_auto_equals_plain_join(spark, rows, cube):
+    """Every cube plan materializes each joined triple exactly once:
+    a static cube, the adaptive ``"auto"`` plan and the plain per-key
+    3-way join give the same (key, x0, x1, x2) multiset."""
+    star = spark.createDataFrame(rows, STAR_SCHEMA)
+    rels = [
+        star.where(F.col("rel") == r).select("key", F.col("value").alias(f"x{r}"))
+        for r in range(3)
+    ]
+    plain = rels[0].join(rels[1], "key").join(rels[2], "key")
+    want = sorted(tuple(r) for r in plain.select("key", "x0", "x1", "x2").collect())
+    static = sorted(tuple(r) for r in star_join_hypercube_rows(
+        star, cube=cube, cfg=SKEW_CFG).collect())
+    auto = sorted(tuple(r) for r in star_join_hypercube_rows(
+        star, cfg=SKEW_CFG, m=8).collect())
+    assert static == want
+    assert auto == want
+
+
+@given(rows=SKEWED_STAR)
+@PROP_SETTINGS
+def test_batch_strategy_stats_equal_batch_stats(spark, rows):
+    """The cost model reads the same count statistics as batch_stats."""
+    kv = spark.createDataFrame(rows, STAR_SCHEMA).select("ts", "key", "value")
+    cols = ["m_total", "k_keys", "max_cnt", "n_heavy", "n_singletons", "p1"]
+    got = batch_strategy(kv, "key", SKEW_CFG).select(*cols).collect()
+    assert got == batch_stats(kv, "key", SKEW_CFG).collect()
 
 
 def test_reference_config_window_width(spark):

@@ -4,7 +4,6 @@ replayed batch must be idempotent."""
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -15,18 +14,10 @@ from myasynstreamjoin_spark.streaming.cdc import (
     run_cdc_stream,
 )
 from myasynstreamjoin_spark.streaming.commits import latest_version
+from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
 
 CHANGE_SCHEMA = "k long, name string, v double, op string, gen long"
-
-
-def _write_feed_file(spark, path, rows):
-    spark.createDataFrame(rows, CHANGE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(path) + ".tmp")
-    for f in os.listdir(str(path) + ".tmp"):
-        if f.startswith("part-") and f.endswith(".parquet"):
-            shutil.move(os.path.join(str(path) + ".tmp", f), str(path))
-    shutil.rmtree(str(path) + ".tmp")
+T0 = 1_700_000_000  # feed file fN's mtime is T0 + N: the batch order
 
 
 def _run(spark, tmp_path, feed_dir):
@@ -59,8 +50,14 @@ GEN2 = [
 def test_stream_merge_equals_batch_merge(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_feed_file(spark, feed / "f1.parquet", GEN1)
-    _write_feed_file(spark, feed / "f2.parquet", GEN2)
+    stage_stream_file(
+        spark.createDataFrame(GEN1, CHANGE_SCHEMA), feed, "f1.parquet",
+        T0 + 1,
+    )
+    stage_stream_file(
+        spark.createDataFrame(GEN2, CHANGE_SCHEMA), feed, "f2.parquet",
+        T0 + 2,
+    )
     _run(spark, tmp_path, feed)
 
     snap = read_snapshot(spark, str(tmp_path / "snap"))
@@ -84,12 +81,18 @@ def test_stream_merge_equals_batch_merge(spark, tmp_path):
 def test_new_feed_files_continue_from_checkpoint(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_feed_file(spark, feed / "f1.parquet", GEN1)
+    stage_stream_file(
+        spark.createDataFrame(GEN1, CHANGE_SCHEMA), feed, "f1.parquet",
+        T0 + 1,
+    )
     _run(spark, tmp_path, feed)
     assert read_snapshot(spark, str(tmp_path / "snap")).count() == 3
 
     # second life: a new feed file arrives, restart from the checkpoint
-    _write_feed_file(spark, feed / "f2.parquet", GEN2)
+    stage_stream_file(
+        spark.createDataFrame(GEN2, CHANGE_SCHEMA), feed, "f2.parquet",
+        T0 + 2,
+    )
     _run(spark, tmp_path, feed)
     got = {r.k: (r.name, r.v) for r in
            read_snapshot(spark, str(tmp_path / "snap")).collect()}
@@ -99,8 +102,14 @@ def test_new_feed_files_continue_from_checkpoint(spark, tmp_path):
 def test_replayed_batch_is_idempotent(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_feed_file(spark, feed / "f1.parquet", GEN1)
-    _write_feed_file(spark, feed / "f2.parquet", GEN2)
+    stage_stream_file(
+        spark.createDataFrame(GEN1, CHANGE_SCHEMA), feed, "f1.parquet",
+        T0 + 1,
+    )
+    stage_stream_file(
+        spark.createDataFrame(GEN2, CHANGE_SCHEMA), feed, "f2.parquet",
+        T0 + 2,
+    )
     _run(spark, tmp_path, feed)
     before = {tuple(r) for r in
               read_snapshot(spark, str(tmp_path / "snap")).collect()}
@@ -127,9 +136,18 @@ def test_vacuum_keeps_live_versions_and_replay_base(spark, tmp_path):
 
     feed = tmp_path / "feed"
     feed.mkdir()
-    _write_feed_file(spark, feed / "f0.parquet", GEN1[:1])
-    _write_feed_file(spark, feed / "f1.parquet", GEN1[1:])
-    _write_feed_file(spark, feed / "f2.parquet", GEN2)
+    stage_stream_file(
+        spark.createDataFrame(GEN1[:1], CHANGE_SCHEMA), feed, "f0.parquet",
+        T0 + 0,
+    )
+    stage_stream_file(
+        spark.createDataFrame(GEN1[1:], CHANGE_SCHEMA), feed, "f1.parquet",
+        T0 + 1,
+    )
+    stage_stream_file(
+        spark.createDataFrame(GEN2, CHANGE_SCHEMA), feed, "f2.parquet",
+        T0 + 2,
+    )
     _run(spark, tmp_path, feed)
     snap = str(tmp_path / "snap")
     # an uncommitted (crashed) write must be cleaned too

@@ -12,11 +12,14 @@ from pathlib import Path
 import pytest
 
 from myasynstreamjoin_spark.blocks import batch_lock, ckpt_disk, persisted_ids
+from myasynstreamjoin_spark.streaming import commits
 from myasynstreamjoin_spark.streaming.commits import (
+    Commit,
     committed_batch_dirs,
     drain_foreach_batch,
     load_snapshot_below,
     mark_committed,
+    read_latest_version,
     save_snapshot,
 )
 from myasynstreamjoin_spark.streaming.windowed import stage_stream_file
@@ -45,6 +48,36 @@ def test_snapshot_loader_takes_newest_strictly_below(tmp_path):
     assert load_snapshot_below(root, 1) is None
     assert load_snapshot_below(root, 5) == {"n": 3}
     assert load_snapshot_below(root, 6) == {"n": 5}
+
+
+def test_torn_rewrite_of_a_committed_multi_part_version_is_not_read(
+    spark, tmp_path, monkeypatch
+):
+    """A replay that rewrites an already-committed multi-part ``v1``
+    and crashes between its two parts leaves ``v1`` invisible: the live
+    state is ``v0``, not ``v1``'s new first part beside its old
+    second."""
+    root = str(tmp_path / "state")
+
+    def version(n):
+        return {"a": spark.range(n, n + 1), "b": spark.range(n, n + 1)}
+
+    commits._write_commit(0, Commit(state={root: version(0)}))
+    commits._write_commit(1, Commit(state={root: version(1)}))
+    overwrite = commits._overwrite
+
+    def crash_on_part_b(frame, path, partition_by=()):
+        if Path(path).name == "b":
+            raise OSError("crashed between the parts")
+        overwrite(frame, path, partition_by)
+
+    monkeypatch.setattr(commits, "_overwrite", crash_on_part_b)
+    with pytest.raises(OSError, match="between the parts"):
+        commits._write_commit(1, Commit(state={root: version(7)}))
+    live = read_latest_version(spark, root, ("a", "b"))
+    assert {p: [r.id for r in f.collect()] for p, f in live.items()} == {
+        "a": [0], "b": [0],
+    }
 
 
 ENGINE = [
