@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 from myasynstreamjoin_spark.config import DEFAULT_CONFIG, EngineConfig
 
 
-def key_counts(df: DataFrame, key: str = "key") -> DataFrame:
-    """Per-key frequency table ``(key, cnt)`` (A13 reduceByKey analog)."""
-    return df.groupBy(key).agg(F.count("*").alias("cnt"))
-
-
 def _heavy(cnt: str, total: str, cfg: EngineConfig) -> str:
     """The reference's heavy-key rule, freq > hh_threshold · total /
     n_mappers (A11; the 0.2·total/m of
